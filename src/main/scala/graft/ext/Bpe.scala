@@ -123,13 +123,14 @@ object Bpe {
     * stays a flat leaf). RELIABLE mode (`graft.checkpoint.dir` set)
     * writes the full vocab-sized sequence frame through the checkpoint
     * FS on every cut, so it cuts only every `graft.checkpoint.stride`
-    * steps and persists the steps between (tracked — freed by
-    * `Caches.releaseAll`); recovery after an executor loss recomputes
-    * at most `stride` merge steps of window algebra from the last cut. */
+    * steps and runs lazy `Checkpoints.persistRound`s between (tracked —
+    * freed by `Caches.releaseAll`); recovery after an executor loss
+    * recomputes at most `stride` merge steps of window algebra from the
+    * last cut. */
   private def stepCut(seq: DataFrame, step: Int, strideOn: Boolean,
       strideN: Int): DataFrame =
     if (!strideOn || step % strideN == 0) seq.cutLineageLazy()
-    else Caches.track(seq.persist())
+    else Caches.track(Checkpoints.persistRound(seq, eager = false))
 
   def train(docs: DataFrame, nMerges: Int)
       : (Seq[(Int, String, String, Long)], DataFrame) = {

@@ -55,8 +55,8 @@ object Caches {
   }
 
   /** Unpersist a frame through BOTH storage paths: the CacheManager
-    * entry (`cache`/`persist`) AND the `localCheckpoint` RDD that BACKS
-    * it. `Dataset.unpersist` alone is a silent no-op for
+    * entry (`cache`/`persist`) AND the checkpoint or
+    * `Checkpoints.persistRound` RDD that BACKS it. `Dataset.unpersist` alone is a silent no-op for
     * checkpoint-backed frames — their persistence is RDD-level
     * (`LogicalRDD`), not a CacheManager entry; that asymmetry is how
     * the CC sweep loop leaked one checkpoint RDD per iteration.

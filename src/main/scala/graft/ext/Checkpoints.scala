@@ -56,21 +56,41 @@ object Checkpoints {
 
   /** True when `graft.checkpoint.dir` is configured — i.e. [[cut]]
     * would write a RELIABLE checkpoint. Iterative loops use this to
-    * pick their in-loop cadence (r20): in LOCAL mode a per-round
-    * `localCheckpoint` is nearly free AND keeps every round's plan a
-    * flat `LogicalRDD` leaf, while a persist-only round nests the full
-    * round plan inside an `InMemoryRelation` — re-analyzed every
-    * subsequent round and re-rendered by AQE per stage, which at
-    * fixture scale swamped the actual work (measured r20: the
-    * CC-consuming registry family regressed 2-8× per row under
-    * unconditional persist rounds — emb_dbscan_grid 4.1→32.8 s,
-    * ext_entity_components 4.8→16.5 s — while the 5M-node reliable-
-    * mode A/B showed the same persist rounds costing ~nothing next to
-    * the checkpoint I/O they avoid). So: local mode cuts every round;
-    * reliable mode cuts every [[stride]] rounds and persists between,
-    * trading bounded recompute for proportionally fewer write-
-    * throughs. */
+    * pick their in-loop cadence. LOCAL mode cuts every round: a
+    * `localCheckpoint` is nearly free, but its blocks cannot be
+    * recomputed, so the cut IS the round's only copy. RELIABLE mode
+    * cuts every [[stride]] rounds and runs [[persistRound]] between:
+    * each of those rounds is a flat `LogicalRDD` leaf too, so no
+    * round's plan nests an earlier one, but its lost blocks recompute
+    * from lineage back to the last durable cut. That trades at most
+    * `stride` rounds of recovery recompute for proportionally fewer
+    * checkpoint write-throughs (measured r20 on the 5M-node reliable
+    * A/B: per-round cuts were most of CC's +21.6% reliable tax). */
   def reliableModeOn(df: DataFrame): Boolean = configuredDir(df).isDefined
+
+  /** A round of a reliable-mode loop between two [[cut]]s: `df`'s rows
+    * persisted as an RDD (MEMORY_AND_DISK), returned as a DataFrame
+    * whose plan is one flat `LogicalRDD` leaf over that RDD.
+    *
+    * Unlike `Dataset.persist`, the returned plan does not nest `df`'s
+    * plan inside an `InMemoryRelation`, which Catalyst re-analyzes and
+    * AQE re-renders on every later round — driver time that used to
+    * dominate reliable-mode CC. Unlike `localCheckpoint`, lineage is
+    * kept: a lost block recomputes from the previous rounds back to the
+    * last reliable cut.
+    *
+    * `eager = false` leaves the final stage to the first action on the
+    * result (AQE still runs `df`'s shuffle stages here), so a consumer
+    * that scans every partition fills this round's blocks in its own
+    * job; `eager = true` fills them with one count. Callers own the
+    * result's storage: free it with [[Caches.hardUnpersist]] or track
+    * it for [[Caches.releaseAll]]. */
+  def persistRound(df: DataFrame, eager: Boolean): DataFrame = {
+    val rows = df.queryExecution.toRdd.map(_.copy())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    if (eager) rows.count()
+    org.apache.spark.sql.RddFrames.ofInternalRows(df, rows)
+  }
 
   /** Cut `df`'s lineage: reliable `checkpoint` when
     * `graft.checkpoint.dir` is configured, `localCheckpoint` otherwise.

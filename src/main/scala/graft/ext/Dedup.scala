@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.ext.Checkpoints.CutOps
 
 /** End-to-end corpus deduplication (the LLM-pipeline north star): near-dup
@@ -266,13 +267,15 @@ object Dedup {
     * old sweep re-joined the full symmetric edge list against labels
     * every iteration — the shape that holds at 100 TB.
     *
-    * Rounds materialize the new edge set each time; LOCAL mode cuts
-    * lineage every round (localCheckpoint — nearly free, flat plans),
-    * RELIABLE mode cuts every `graft.checkpoint.stride` rounds with
-    * persist-only rounds between (plan depth O(stride); checkpoint
+    * Rounds materialize the new edge set each time, and every round's
+    * frames are flat `LogicalRDD` leaves in both modes. LOCAL mode
+    * cuts lineage every round (localCheckpoint — nearly free, but not
+    * recoverable); RELIABLE mode cuts every `graft.checkpoint.stride`
+    * rounds and runs Checkpoints.persistRound between, whose blocks
+    * recompute from lineage back to the last durable cut (checkpoint
     * bytes paid rounds/stride times, not every round — see
-    * Checkpoints.reliableModeOn for why the cadences differ), freeing
-    * the previous round's frames; convergence is the star-forest test
+    * Checkpoints.reliableModeOn). The previous round's frames are
+    * freed as each round lands; convergence is the star-forest test
     * (one map-side-combinable aggregate), which is exact: E is a fixed
     * point of both operations iff it is a star forest, and edges only
     * ever point to smaller ids, so each star's center IS its
@@ -288,9 +291,15 @@ object Dedup {
     // lazily CACHE (not checkpoint) the input: round 1's first action
     // materializes the (possibly expensive — shingle-join, LSH-verify)
     // upstream as a side effect of its own scan, so the cache costs no
-    // job of its own; the self-loop probe below then reads it for free
-    val e0 = Caches.track(
-      edges.select(col("doc_a"), col("doc_b")).persist())
+    // job of its own; the self-loop probe below then reads it for free.
+    // A projection the CacheManager already resolves to a cache entry
+    // (a caller's cached (doc_a, doc_b) frame) is used as-is: persisting
+    // it would only re-register the CALLER's entry, and releaseAll
+    // would then unpersist the caller's cache
+    val sel = edges.select(col("doc_a"), col("doc_b"))
+    val e0 =
+      if (sel.storageLevel != StorageLevel.NONE) sel
+      else Caches.track(sel.persist())
     // nodes appearing ONLY in self-loops would vanish from the star
     // operations (they emit no src≠dst edge); appended at the end so
     // the "every node that appears in an edge" contract holds
@@ -311,27 +320,22 @@ object Dedup {
     // Cut cadence (r20, VERDICT r19 item 3): in RELIABLE mode every cut
     // writes the full edge + label frames through the checkpoint FS,
     // and CC's per-ROUND cuts were most of its +21.6% reliable tax at
-    // 5M nodes (vs PageRank's +1.7% once strided) — so reliable mode
-    // cuts only every `graft.checkpoint.stride`-th round and PERSISTS
-    // the rounds between (measured +4.6% tax at 5M nodes, fingerprints
-    // identical). Executor-loss recovery then recomputes at most
-    // `stride` rounds of star-contraction from the last reliable cut —
-    // the same k-choice law as the rank loops (Checkpoints.stride).
-    // LOCAL mode keeps the r19 per-round localCheckpoint: it is nearly
-    // free and keeps each round's plan a flat LogicalRDD leaf, where a
-    // persist-only round nests the whole round plan in an
-    // InMemoryRelation that Catalyst re-analyzes (and AQE re-renders)
-    // every subsequent round — measured 2-8× per-row regressions
-    // across the CC-consuming registry family at fixture scale (see
-    // Checkpoints.reliableModeOn). The convergence probe reads a
-    // fully-materialized candidate either way: persist rounds force it
-    // with cand.count() (whose aggregate scans every partition of the
-    // new edge frame, so one job fills BOTH caches) because the
-    // isEmpty probe alone is a take(1) that can leave partitions
-    // uncached and silently turn the next round into a recompute of
-    // this one. Frames are freed only AFTER the new round
-    // materializes — a persist-only round still reads its parent's
-    // blocks while computing.
+    // 5M nodes — so reliable mode cuts only every
+    // `graft.checkpoint.stride`-th round and runs persist rounds
+    // (Checkpoints.persistRound) between. Executor-loss recovery then
+    // recomputes at most `stride` rounds of star-contraction from the
+    // last reliable cut — the same k-choice law as the rank loops
+    // (Checkpoints.stride). LOCAL mode cuts every round: its
+    // localCheckpoint is nearly free. Either way each round's frames
+    // are flat LogicalRDD leaves, so no round re-analyzes an earlier
+    // round's plan. The convergence probe reads a fully-materialized
+    // candidate either way: persist rounds fill it eagerly (its
+    // aggregate scans every partition of the lazy new edge frame, so
+    // the same jobs fill BOTH frames' blocks) because the isEmpty probe
+    // alone is a take(1) that can leave partitions unfilled and
+    // silently turn the next round into a recompute of this one.
+    // Frames are freed only AFTER the new round materializes — a
+    // persist round still reads its parent's blocks while computing.
     val stride = Checkpoints.stride(edges)
     val strideOn = Checkpoints.reliableModeOn(edges)
     while (!converged && rounds < maxIter) {
@@ -343,7 +347,8 @@ object Dedup {
       // measured 3x regressions across the CC consumers (doc_lsh 3.4 →
       // 10.1 s, 1 MB plan strings) for the one job it saves.
       val next0 = smallStar(largeStar(e))
-      val next = if (cutRound) next0.cutLineage() else next0.persist()
+      val next = if (cutRound) next0.cutLineage()
+                 else Checkpoints.persistRound(next0, eager = false)
       e = next
       // ONE aggregation doubles as the convergence test AND the result:
       // emit (child → parent) plus (center → center) rows; a node with
@@ -361,11 +366,10 @@ object Dedup {
         .groupBy("node")
         .agg(min("label").as("label"), countDistinct("label").as("k"))
       cand = if (cutRound) cand0.cutLineage()
-             else { val c = cand0.persist(); c.count(); c }
-      // hardUnpersist frees the RDD blocks BACKING a checkpointed
-      // frame (plain Dataset.unpersist is a silent no-op on
-      // localCheckpoint storage — CacheHygieneSpec lesson); it also
-      // handles the persist-round frames
+             else Checkpoints.persistRound(cand0, eager = true)
+      // hardUnpersist frees the RDD blocks BACKING a LogicalRDD frame
+      // (plain Dataset.unpersist is a silent no-op on checkpoint and
+      // persist-round storage — CacheHygieneSpec lesson)
       prevCk.foreach(Caches.hardUnpersist)
       prevCk = Some(next)
       prevCand.foreach(Caches.hardUnpersist)

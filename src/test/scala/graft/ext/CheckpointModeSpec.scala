@@ -3,7 +3,11 @@ package graft.ext
 import java.nio.file.Files
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 /** The `graft.checkpoint.dir` toggle (VERDICT r16 item 1): with the
   * config set, every iterative lineage cut goes through RELIABLE
@@ -31,6 +35,39 @@ class CheckpointModeSpec extends SparkSpec {
 
   private def sorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
+
+  /** The "CC stride" test's forest: 100 chains of 9 nodes, several
+    * star rounds, no self-loops. */
+  private def chainForest: DataFrame = {
+    import spark.implicits._
+    (0L until 900L).filter(_ % 9 != 8)
+      .map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+  }
+
+  /** Runs `body` and counts the Spark jobs it starts on this thread
+    * (tagged through a job group, so other work on the shared session
+    * is not counted). */
+  private def countingJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"count-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted")
+    try {
+      val out = body
+      ListenerBusDrain(sc)
+      (out, jobs.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("ext_pagerank: local and reliable checkpoint modes agree bit-for-bit") {
     import spark.implicits._
@@ -94,6 +131,55 @@ class CheckpointModeSpec extends SparkSpec {
           "a stride beyond the round count must leave the ckpt dir empty " +
             "(persist-only rounds)")
     }
+  }
+
+  test("CC persist rounds are flat LogicalRDD leaves and keep the job count") {
+    // stride 50 makes every round of the chain forest a persist round.
+    // Persisting the round frames nested each round's whole plan in an
+    // InMemoryRelation that every later round re-analyzed; the rounds
+    // are now LogicalRDD leaves, and the call runs fewer jobs
+    val edges = chainForest
+    spark.conf.set("graft.checkpoint.stride", "50")
+    val ((plan, jobs), _) = try withReliable {
+      val (labels, jobs) = countingJobs(Dedup.connectedComponents(edges))
+      (labels.queryExecution.withCachedData, jobs)
+    } finally spark.conf.unset("graft.checkpoint.stride")
+    Caches.releaseAll(spark)
+    assert(plan.collectFirst { case r: InMemoryRelation => r }.isEmpty,
+      s"persist-round labels must not nest an InMemoryRelation:\n$plan")
+    assert(plan.collectLeaves().forall(_.isInstanceOf[LogicalRDD]),
+      s"persist-round labels must read one flat LogicalRDD leaf:\n$plan")
+    // measured on this forest with the suite's local[4] session and 4
+    // shuffle partitions; the nested-plan persist rounds ran 53
+    assert(jobs == 37, s"connectedComponents ran $jobs jobs, pinned 37")
+  }
+
+  test("CC persist rounds are recoverable and fully released") {
+    // a persist round keeps its lineage back to the last reliable cut:
+    // dropping the blocks behind the returned labels recomputes them
+    // (a localCheckpoint in its place would fail here). RDD-level
+    // persists are not CacheManager entries, so only releaseAll — not
+    // catalog.clearCache — frees them
+    val edges = chainForest
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    spark.conf.set("graft.checkpoint.stride", "50")
+    val ((labels, first), _) = try withReliable {
+      val labels = Dedup.connectedComponents(edges)
+      (labels, sorted(labels))
+    } finally spark.conf.unset("graft.checkpoint.stride")
+    val backing = labels.queryExecution.analyzed
+      .collect { case lr: LogicalRDD => lr.rdd }
+    assert(backing.nonEmpty, "persist-round labels must be LogicalRDD-backed")
+    backing.foreach(_.unpersist(blocking = true))
+    assert(sorted(labels) == first,
+      "labels must recompute through lineage after their blocks drop")
+    Caches.releaseAll(spark)
+    ListenerBusDrain(sc)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "releaseAll must unpersist every RDD the call persisted")
+    assert(sc.getRDDStorageInfo.filterNot(r => before(r.id)).isEmpty,
+      "no RDD blocks of the call may remain after releaseAll")
   }
 
   test("reliable cuts are recoverable: frame survives a blockManager-level unpersist") {

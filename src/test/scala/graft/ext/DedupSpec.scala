@@ -40,6 +40,26 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("connected components: releaseAll must not unpersist the caller's cached edges") {
+    import spark.implicits._
+    import org.apache.spark.storage.StorageLevel
+    // a caller frame cached with exactly (doc_a, doc_b): CC's input
+    // projection resolves to the caller's CacheManager entry, so
+    // persisting and tracking it handed the caller's cache to releaseAll
+    val edges = (1L until 50L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+      .persist()
+    try {
+      edges.count()
+      assert(edges.storageLevel != StorageLevel.NONE)
+      val comps = Dedup.connectedComponents(edges)
+        .select("component").distinct().count()
+      assert(comps == 1L)
+      Caches.releaseAll(spark)
+      assert(edges.storageLevel != StorageLevel.NONE,
+        "releaseAll unpersisted the caller's cached input")
+    } finally edges.unpersist()
+  }
+
   test("connected components: non-convergence at maxIter fails loudly, not partially") {
     import spark.implicits._
     // ADVICE r4 (medium): exceeding maxIter used to return PARTIAL
