@@ -1,13 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line. Materialization is the `noop` sink — it consumes
-  * every row of every projected column without collecting to the driver,
-  * so Catalyst cannot prune the projection the way `.count()` lets it.
-  * A query that throws is recorded in `errors` (and excluded from
-  * `queries`), so a crash is never mistaken for a fast pass.
+/** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR
+  * with [[Session.timed]] (noop sink, caches dropped after each run) and
+  * prints ONE JSON line. A query that throws is recorded in `errors`
+  * (and excluded from `queries`), so a crash is never mistaken for a
+  * fast pass.
   *
   * CONTENTION PROTOCOL (r18-r21, documented here per VERDICT r20 item
   * 2). Each query runs best-of-2 with caches cleared between reps, so
@@ -30,16 +27,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     def jstr(s: String): String =
       "\"" + s.flatMap {
@@ -70,37 +58,21 @@ object Bench {
     val suspects = scala.collection.mutable.ArrayBuffer[String]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.defs.foreach { q =>
-      val reps = scala.collection.mutable.ArrayBuffer[Double]()
-      var failed = false
-      var rep = 0
-      while (rep < 2 && !failed) {
-        val t0 = System.nanoTime()
-        try {
-          q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-          reps += (System.nanoTime() - t0) / 1e9
-        } catch {
-          case e: Throwable =>
-            failed = true
-            errors(q.name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        }
-        // drop caches between reps/queries: several pipelines cache()
-        // their intermediates, and letting 99 queries' caches accumulate
-        // makes later timings hostage to eviction thrash (observed 2x
-        // swings); clearing between reps keeps the two reps identical
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        rep += 1
-      }
-      if (!failed) {
-        val best = reps.min
-        timings(q.name) = best
-        spreads(q.name) = if (best > 0) (reps.max - best) / best else 0.0
-        // contention signature = the SECOND rep is the slow one by more
-        // than the regression bar. Rep 1 slower is the NORMAL shape
-        // (per-query codegen/classload warmup — measured 9-11 rows per
-        // SOLO run when flagged symmetrically); rep 2 slower means
-        // something else took the box mid-row.
-        if (reps.length == 2 && reps(1) > reps(0) * 1.4
-            && reps(1) - reps(0) > 1.0) suspects += q.name
+      def run() = Session.timed(spark)(q.run(spark, sfDir))
+      // a failed rep 1 skips rep 2
+      (for (r1 <- run(); r2 <- run()) yield (r1, r2)) match {
+        case Left(e) =>
+          errors(q.name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+        case Right((r1, r2)) =>
+          val best = math.min(r1, r2)
+          timings(q.name) = best
+          spreads(q.name) = if (best > 0) (math.max(r1, r2) - best) / best else 0.0
+          // contention signature = the SECOND rep is the slow one by more
+          // than the regression bar. Rep 1 slower is the NORMAL shape
+          // (per-query codegen/classload warmup — measured 9-11 rows per
+          // SOLO run when flagged symmetrically); rep 2 slower means
+          // something else took the box mid-row.
+          if (r2 > r1 * 1.4 && r2 - r1 > 1.0) suspects += q.name
       }
     }
     // Auto-rerun of contention suspects (r19, VERDICT r18 item 7): the
@@ -115,14 +87,10 @@ object Bench {
     val retries = scala.collection.mutable.LinkedHashMap[String, Double]()
     suspects.foreach { name =>
       SparkEntry.defs.find(_.name == name).foreach { q =>
-        try {
-          val t0 = System.nanoTime()
-          q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val t = (System.nanoTime() - t0) / 1e9
+        Session.timed(spark)(q.run(spark, sfDir)).foreach { t =>
           retries(name) = t
           timings(name) = math.min(timings(name), t)
-        } catch { case _: Throwable => () }
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
+        }
       }
     }
 

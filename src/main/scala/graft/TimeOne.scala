@@ -1,50 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Times a single registered query (same session config + noop sink as
-  * Bench) — the per-query iteration loop for performance work.
-  * Usage: runMain graft.TimeOne <queryName> [sfDir] [reps]
+/** Times registered queries through Bench's timed run
+  * ([[Session.timed]]: same session settings, noop sink, caches cleared
+  * after every rep) — the per-query iteration loop for performance work.
+  * Usage: runMain graft.TimeOne <queryName[,queryName...]> [sfDir] [reps]
   */
 object TimeOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // factor>=100 fixtures need partitions ∝ data while thread count
-    // stays at the core count (the box-lessons knob law)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // comma-separated names share one JVM (a fork costs ~30 s; a batch
     // of rows in one session is the practical iteration loop)
     name.split(",").map(_.trim).filter(_.nonEmpty).foreach { n =>
       val q = SparkEntry.defs.find(_.name == n)
         .getOrElse(sys.error(s"no such query: $n"))
-      var best = Double.MaxValue
-      (1 to reps).foreach { i =>
-        val t0 = System.nanoTime()
-        q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val s = (System.nanoTime() - t0) / 1e9
-        best = math.min(best, s)
-        // SPARK_GRAFT_KEEP_CACHE=1 keeps caches across reps — for
-        // separating plan cost from IO/cache-population cost when a
-        // regression hunt needs a warm-vs-cold split (r14). Default
-        // (clear) measures the honest cold-path number.
-        if (!sys.env.get("SPARK_GRAFT_KEEP_CACHE").contains("1")) {
-          spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        }
+      val times = (1 to reps).map { i =>
+        val s = Session.timed(spark)(q.run(spark, sfDir)).fold(e => throw e, identity)
         println(f"[timeone] $n rep $i: $s%.2f s")
+        s
       }
-      println(f"[timeone] $n BEST: $best%.2f s")
+      println(f"[timeone] $n BEST: ${times.min}%.2f s")
     }
     spark.stop()
   }

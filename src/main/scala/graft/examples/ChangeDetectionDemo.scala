@@ -2,7 +2,6 @@ package graft.examples
 
 import graft.api.{SamsaStream, StoreType}
 import graft.io.ChangelogSink
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -17,14 +16,7 @@ import java.nio.file.Files
 object ChangeDetectionDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local("ERROR")
 
     val stream = SamsaStream(
       topics = Seq("nodes.status"), groupId = "demo", tableName = "nodes",

@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Executor-loss recovery drill (r19, VERDICT r18 item 1): actually
@@ -82,13 +82,9 @@ object KillRecovery {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val factor = if (args.nonEmpty) args(0).toInt else 100
-    // 2 workers x 8 cores x 12g: two real executor JVMs on this box,
-    // each survivable alone. Executors inherit the forked driver's
-    // java.class.path via the in-process Worker; the JDK17 add-opens
-    // must be passed explicitly (spark-submit would inject them).
-    val addOpens = Seq(
+  /** The JDK 17 module opens for executor JVMs (spark-submit would
+    * inject them; build.sbt passes the same list to the driver). */
+  private[examples] val addOpens: String = Seq(
       "java.base/java.lang", "java.base/java.lang.invoke",
       "java.base/java.lang.reflect", "java.base/java.io",
       "java.base/java.net", "java.base/java.nio",
@@ -96,14 +92,17 @@ object KillRecovery {
       "java.base/java.util.concurrent.atomic",
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
+    .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
+
+  def main(args: Array[String]): Unit = {
+    val factor = if (args.nonEmpty) args(0).toInt else 100
+    // 2 workers x 8 cores x 12g: two real executor JVMs on this box,
+    // each survivable alone. Executors inherit the forked driver's
+    // java.class.path via the in-process Worker; the add-opens go in
+    // explicitly.
     val ckptDir = s"/root/repo/target/killrecovery-ckpt-$factor"
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,8,12288]")
+    val spark = graft.Session.builder("local-cluster[2,8,12288]")
       .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       // NOTE: spark.* flags are forbidden inside extraJavaOptions
       // (SparkConf.validateSettings) — only the module opens go here
       .config("spark.executor.extraJavaOptions", addOpens)

@@ -432,19 +432,10 @@ object ScaleStress {
     val src = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     // optional 4th arg: comma-separated subset of `heavy` (chunked runs)
     val names = if (args.length > 3) args(3).split(',').toSeq else heavy
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // factor>=100 needs partitions ∝ data at the fixed core count (the
-    // box-lessons knob law; AQE coalesces the small stages back down)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // factor>=100 needs partitions ∝ data at the fixed core count
+    // (SPARK_GRAFT_SHUFFLE_PARTITIONS; AQE coalesces the small stages
+    // back down)
+    val spark = graft.Session.local()
 
     // r19: the documents/embeddings/events replicas are the expensive
     // builds at factor 1000; skip them when every requested row is

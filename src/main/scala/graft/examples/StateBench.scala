@@ -2,7 +2,6 @@ package graft.examples
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -30,14 +29,9 @@ import graft.streaming.{KeyedRecord, StatefulStore}
 object StateBench {
   def main(args: Array[String]): Unit = {
     val nKeys = if (args.nonEmpty) args(0).toInt else 1000000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.Session.builder()
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

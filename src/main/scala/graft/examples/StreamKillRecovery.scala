@@ -2,7 +2,7 @@ package graft.examples
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -85,15 +85,6 @@ object StreamKillRecovery {
   def main(args: Array[String]): Unit = {
     val factor = if (args.nonEmpty) args(0).toInt else 100
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
     // Unlike KillRecovery's pure-DataFrame PageRank, this pipeline
     // ships a REAL Scala closure to executors (groupByKey(_.key) under
     // transformWithState). Across local-cluster's separate executor
@@ -107,14 +98,10 @@ object StreamKillRecovery {
       "/root/repo/target/scala-2.13/samsaspark_2.13-0.1.0.jar")
     require(new java.io.File(appJar).exists(),
       s"app jar not found at $appJar — run `sbt package` (or set SPARK_GRAFT_JAR)")
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,8,12288]")
+    val spark = graft.Session.builder("local-cluster[2,8,12288]")
       .config("spark.jars", appJar)
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.extraJavaOptions", addOpens)
+      .config("spark.executor.extraJavaOptions", KillRecovery.addOpens)
       // the configuration under test: RocksDB stores with per-batch
       // changelog files on the checkpoint FS (SamsaStream's default)
       .config("spark.sql.streaming.stateStore.providerClass",

@@ -65,7 +65,16 @@ object Checkpoints {
     * from lineage back to the last durable cut. That trades at most
     * `stride` rounds of recovery recompute for proportionally fewer
     * checkpoint write-throughs (measured r20 on the 5M-node reliable
-    * A/B: per-round cuts were most of CC's +21.6% reliable tax). */
+    * A/B: per-round cuts were most of CC's +21.6% reliable tax).
+    *
+    * The fork stays although persist rounds are flat. A one-cadence
+    * prototype (local mode also persisting between stride cuts) was
+    * measured on perfbench `cc_local`: op_ms_p50 went 5 106 → 4 385,
+    * 3 821 → 4 337, 4 146 → 4 859 and 4 431 → 4 738 ms on seeds 1-4
+    * (slower on 3 of 4), and traced seeds 1-3 saved 3 of 48 jobs but
+    * raised job-busy time on all three (1 323 → 2 301, 2 059 → 2 255,
+    * 1 840 → 2 345 ms). Persisting and reading back a round costs more
+    * than a local cut. */
   def reliableModeOn(df: DataFrame): Boolean = configuredDir(df).isDefined
 
   /** A round of a reliable-mode loop between two [[cut]]s: `df`'s rows
@@ -124,6 +133,18 @@ object Checkpoints {
         df.checkpoint(eager)
       case None => df.localCheckpoint(eager)
     }
+
+  /** [[cut]] (eager) whose result forgets `df`'s statistics. A
+    * checkpoint's `LogicalRDD` carries its origin's size estimate, so
+    * a loop that self-joins its own cut frames (Borůvka's pick and
+    * parent joins, the kNN fixture consumers) multiplies estimates
+    * round over round until `sizeInBytes` overflows what stats
+    * estimation supports and planning throws (MstSpec). Dropping the
+    * origin stats resets the estimate to `spark.sql.defaultSizeInBytes`.
+    * The result's plan root is still the checkpoint's own RDD, so
+    * [[Caches.hardUnpersist]] on it frees the cut's blocks. */
+  def cutWithoutStats(df: DataFrame): DataFrame =
+    org.apache.spark.sql.RddFrames.withoutOriginStats(cut(df))
 
   /** Materialize a LOOP-INVARIANT frame once, WITHOUT cutting lineage
     * (r19, VERDICT r18 item 2): eager MEMORY_AND_DISK persist. The

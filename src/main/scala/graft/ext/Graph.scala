@@ -544,18 +544,10 @@ object Graph {
   def maxSpanningBackbone(undw: DataFrame, rounds: Int, jumps: Int)
       : DataFrame = {
     require(rounds >= 1 && jumps >= 1)
-    // localCheckpoint + DROP origin statistics. Spark 4's LogicalRDD
-    // carries originStats THROUGH localCheckpoint, so the multiplicative
-    // join-size estimates of this loop (per-round pick joins + `jumps`
-    // parent self-joins) snowball across rounds — by round ~5 the BigInt
-    // sizeInBytes exceeds BigInteger's supported range and stats
-    // estimation itself throws. Rebuilding from the checkpointed RDD
-    // resets the estimate to the default; the tables this guards are
-    // component-sized, so the extra row-codec hop is noise.
-    def cut(df: DataFrame): DataFrame = {
-      val cp = df.cutLineage()
-      cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
-    }
+    // the per-round pick joins and `jumps` parent self-joins would
+    // otherwise snowball the cut frames' size estimates until stats
+    // estimation throws (by round ~5)
+    def cut(df: DataFrame): DataFrame = Checkpoints.cutWithoutStats(df)
     var comp = cut(undw.select(col("a").as("node"))
       .unionAll(undw.select(col("b").as("node")))
       .distinct().withColumn("comp", col("node")))

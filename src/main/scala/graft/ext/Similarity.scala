@@ -375,7 +375,8 @@ object Similarity {
 
   /** Corpus-size boundary for [[annTopKRouted]]: at or above this many
     * vectors the router picks IVF; below it BRP-LSH. Set from the r18
-    * two-sided crossover measurement (AnnRouteProbe, SCALE.md): at 2k
+    * two-sided crossover measurement (SCALE.md "r18: BRP→IVF routing
+    * boundary"): at 2k
     * vectors IVF RECALL collapses (0.656 — the √n-cell law leaves 16
     * cells / 4 probes) while BRP holds 0.978; from 20k up IVF wins
     * both axes (20k: 0.66 s/0.990 vs BRP 1.72 s/0.936; 2M: 6.4 s/1.000

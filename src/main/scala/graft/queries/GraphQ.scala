@@ -154,9 +154,16 @@ object GraphQ {
     * a single `setCheckpointDir` target so checkpoint files collect
     * under one UUID child (KB-scale per rep at fixture size; reliable
     * checkpoints are not auto-deleted without
-    * `spark.cleaner.referenceTracking.cleanCheckpoints`). */
-  private lazy val reliableProbeDir: String =
-    java.nio.file.Files.createTempDirectory("graft-ckpt-probe").toString
+    * `spark.cleaner.referenceTracking.cleanCheckpoints`), deleted with
+    * everything under it when the JVM exits. */
+  private lazy val reliableProbeDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-probe").toFile
+    sys.addShutdownHook {
+      try org.apache.spark.network.util.JavaUtils.deleteRecursively(dir)
+      catch { case _: java.io.IOException => () }
+    }
+    dir.toString
+  }
 
   /** Shared oracle SQL + Spark body of ext_entity_components and its
     * reliable-mode probe twin (r21) — ONE definition so the two rows
@@ -869,10 +876,10 @@ object GraphQ {
     * Frames are kNN-sized (<= 3 edges/node), a few MB even at 1000x. */
   /** Session-scoped memo of checkpoint-backed fixture frames, keyed by
     * (session, sfDir) — the sharing mechanism for [[KnnFixture]] and
-    * [[ErFixture]]. Each entry's frames are localCheckpoint'd with a
-    * stats cut (LogicalRDD preserves originStats, which snowball across
-    * iterative self-joins — MstSpec r14; rebuilding from the RDD
-    * resets them). Bounded LRU: eviction unpersists the backing
+    * [[ErFixture]]. Each entry's frames are cut with
+    * [[graft.ext.Checkpoints.cutWithoutStats]] (a checkpoint keeps its
+    * origin's statistics, which snowball across iterative self-joins —
+    * MstSpec). Bounded LRU: eviction unpersists the backing
     * checkpoint RDDs through both storage paths. Survives the
     * per-query `clearCache()`/`Caches.releaseAll` hygiene in
     * Verify/Bench by design — localCheckpoint persistence is RDD-level,
@@ -884,16 +891,8 @@ object GraphQ {
         => Seq[org.apache.spark.sql.DataFrame]) {
     import org.apache.spark.sql.{DataFrame, SparkSession}
 
-    private final class Entry(val cutFrames: Seq[DataFrame],
-        val backing: Seq[DataFrame])
-
     private val memo =
-      scala.collection.mutable.LinkedHashMap.empty[(SparkSession, String), Entry]
-
-    private def cut(df: DataFrame): (DataFrame, DataFrame) = {
-      val cp = df.cutLineage()
-      (cp.sparkSession.createDataFrame(cp.rdd, cp.schema), cp)
-    }
+      scala.collection.mutable.LinkedHashMap.empty[(SparkSession, String), Seq[DataFrame]]
 
     def get(s: SparkSession, d: String): Seq[DataFrame] = synchronized {
       // purge entries whose owning session has stopped (common in test
@@ -910,10 +909,9 @@ object GraphQ {
         .foreach(memo.remove)
       val k = (s, d)
       memo.remove(k) match {
-        case Some(e) => memo.put(k, e); e.cutFrames   // refresh LRU position
+        case Some(e) => memo.put(k, e); e   // refresh LRU position
         case None =>
-          val pairs = build(s, d).map(cut)
-          val e = new Entry(pairs.map(_._1), pairs.map(_._2))
+          val e = build(s, d).map(graft.ext.Checkpoints.cutWithoutStats)
           memo.put(k, e)
           if (memo.size > maxEntries) {
             val (oldK, oldE) = memo.head
@@ -923,10 +921,10 @@ object GraphQ {
             // hardUnpersist, so best-effort it
             try {
               if (!oldK._1.sparkContext.isStopped)
-                oldE.backing.foreach(graft.ext.Caches.hardUnpersist)
+                oldE.foreach(graft.ext.Caches.hardUnpersist)
             } catch { case _: Exception => () }
           }
-          e.cutFrames
+          e
       }
     }
   }

@@ -66,42 +66,62 @@ class ChangeDetectorBootstrapProcessor(
 
 object ChangeDetector {
 
-  /** Shared per-batch transition logic for the plain and bootstrap
-    * processors. Rows of one micro-batch arrive unordered; process in
-    * event-time order (null-safe tiebreak for determinism — see
-    * KeyedRecord.orderKey) so "latest wins" matches batch lag().
-    * Emitting a transition per row requires seeing the rows in order,
-    * so one key's share of ONE micro-batch is buffered — bounded by an
-    * explicit, asserted cap (checked WHILE buffering, so a pathological
-    * key fails loudly with a remedy instead of OOMing the executor).
+  /** The change-detection transition, shared by every state path: one
+    * key's rows of ONE micro-batch, folded in event-time order from the
+    * stored `prior` value. Returns the events and the value to store
+    * after the batch (`None` = clear the key).
+    *
+    *   - first sighting (no value stored): "initial";
+    *   - a value differing from the previous one: "changed", else
+    *     "unchanged";
+    *   - a null value is a tombstone (the UpsertStore delete
+    *     convention): "deleted", and the key's next sighting is a fresh
+    *     "initial".
+    *
+    * Rows arrive unordered; they are sorted by event time (null-safe
+    * tiebreak for determinism, see KeyedRecord.orderKey) so "latest
+    * wins" matches batch lag(). Emitting a transition per row needs the
+    * rows in order, so one key's share of one micro-batch is buffered,
+    * bounded by an explicit cap checked WHILE buffering: a pathological
+    * key fails loudly with a remedy instead of OOMing the executor.
     * Heap behavior under a deliberately hot key (1e5 rows) is asserted
     * in StreamingParitySpec. */
-  private[streaming] def processBatch(
+  private[streaming] def transitions(
       key: String,
       rows: Iterator[KeyedRecord],
-      lastValue: org.apache.spark.sql.streaming.ValueState[String],
-      maxBatchRowsPerKey: Int): Iterator[ChangeEvent] = {
+      prior: Option[String],
+      maxBatchRowsPerKey: Int): (Seq[ChangeEvent], Option[String]) = {
     val ordered = boundedBuffer(key, rows, maxBatchRowsPerKey)
       .sortBy(KeyedRecord.orderKey)
-    ordered.iterator.map { r =>
-      val prev = if (lastValue.exists()) Option(lastValue.get()) else None
-      if (r.value == null) {
-        // Tombstone (null value = delete, the UpsertStore convention):
-        // clear state and emit "deleted"; the key's next sighting is a
-        // fresh "initial". Implicitly passing null to update() would
-        // clear state anyway but mislabel the event.
-        lastValue.clear()
-        ChangeEvent(key, prev, null, "deleted")
-      } else {
+    ordered.foldLeft((Vector.empty[ChangeEvent], prior)) {
+      case ((out, prev), r) if r.value == null =>
+        (out :+ ChangeEvent(key, prev, null, "deleted"), None)
+      case ((out, prev), r) =>
         val change = prev match {
           case None => "initial"
           case Some(p) if p != r.value => "changed"
           case _ => "unchanged"
         }
-        lastValue.update(r.value)
-        ChangeEvent(key, prev, r.value, change)
-      }
+        (out :+ ChangeEvent(key, prev, r.value, change), Some(r.value))
     }
+  }
+
+  /** [[transitions]] on the transformWithState path: `lastValue` is
+    * read once and written (update or clear) once per key per batch. */
+  private[streaming] def processBatch(
+      key: String,
+      rows: Iterator[KeyedRecord],
+      lastValue: org.apache.spark.sql.streaming.ValueState[String],
+      maxBatchRowsPerKey: Int): Iterator[ChangeEvent] = {
+    // get() is null when the key has no value: one store read, not an
+    // exists() probe plus a get()
+    val prior = Option(lastValue.get())
+    val (events, last) = transitions(key, rows, prior, maxBatchRowsPerKey)
+    last match {
+      case Some(v) => lastValue.update(v)
+      case None => lastValue.clear()
+    }
+    events.iterator
   }
 
   /** Per-key-per-micro-batch row cap for the ordering buffer. 2^20 rows
@@ -175,30 +195,12 @@ object ChangeDetector {
       .flatMapGroupsWithState[String, ChangeEvent](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, rows: Iterator[KeyedRecord], state: GroupState[String]) =>
-          val ordered = boundedBuffer(key, rows, maxBatchRowsPerKey)
-            .sortBy(KeyedRecord.orderKey)
-          val out = Seq.newBuilder[ChangeEvent]
-          var prev = state.getOption
-          ordered.foreach { r =>
-            if (r.value == null) {
-              // tombstone: same delete semantics as the TWS path above
-              out += ChangeEvent(key, prev, null, "deleted")
-              prev = None
-            } else {
-              val change = prev match {
-                case None => "initial"
-                case Some(p) if p != r.value => "changed"
-                case _ => "unchanged"
-              }
-              out += ChangeEvent(key, prev, r.value, change)
-              prev = Some(r.value)
-            }
-          }
-          prev match {
+          val (events, last) = transitions(key, rows, state.getOption, maxBatchRowsPerKey)
+          last match {
             case Some(v) => state.update(v)
             case None => state.remove()
           }
-          out.result().iterator
+          events.iterator
       }
   }
 }

@@ -19,4 +19,13 @@ object RddFrames {
     classic.Dataset.ofRows(ds.sparkSession,
       LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
   }
+
+  /** `df`, whose plan must be one `LogicalRDD` leaf (a checkpoint), over
+    * the same RDD and attributes with the origin statistics dropped:
+    * its size estimate is `spark.sql.defaultSizeInBytes` again. */
+  def withoutOriginStats(df: DataFrame): DataFrame = {
+    val s = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val lr = df.queryExecution.logical.asInstanceOf[LogicalRDD]
+    classic.Dataset.ofRows(s, lr.copy()(s, None, None))
+  }
 }

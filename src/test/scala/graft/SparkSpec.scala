@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites: local[4], UTC, AQE, RocksDB state store
-  * (required by transformWithState; also the samsa-parity engine choice).
+/** Shared session for all suites: [[graft.Session]]'s settings (the
+  * configuration Bench times and ExplainOne prints), plus a private
+  * warehouse dir and the RocksDB state store (required by
+  * transformWithState; also the samsa-parity engine choice).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -18,16 +20,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
+    val s = Session.builder()
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")

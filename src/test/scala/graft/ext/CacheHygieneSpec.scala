@@ -47,4 +47,43 @@ class CacheHygieneSpec extends SparkSpec {
         spark.sparkContext.getPersistentRDDs.values.map(_.toString).mkString("; "))
     assert(Caches.liveCount(spark) == 0)
   }
+
+  test("tracking more than 64 frames warns once per session; releaseAll re-arms") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    // a session of its own: the registry is per session, so the shared
+    // test session's tracked frames neither count nor get released.
+    // Built first: starting Spark may reconfigure log4j, which would
+    // drop an appender attached before it
+    val s = spark.newSession()
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("caches-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger("graft.ext.Caches").asInstanceOf[Logger]
+    logger.addAppender(appender)
+    def trackN(n: Int): Unit = (1 to n).foreach(_ => Caches.track(s.range(1).toDF()))
+    try {
+      trackN(64)
+      assert(warnings.isEmpty, "64 tracked frames are within the threshold")
+      trackN(1)
+      assert(warnings.size == 1)
+      assert(warnings.peek().contains("call Caches.releaseAll(spark)"))
+      trackN(100)
+      assert(warnings.size == 1, "the warning fires once per session")
+      Caches.releaseAll(s)
+      assert(Caches.liveCount(s) == 0)
+      trackN(65)
+      assert(warnings.size == 2, "releaseAll re-arms the warning")
+    } finally {
+      Caches.releaseAll(s)
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+  }
 }

@@ -182,6 +182,28 @@ class CheckpointModeSpec extends SparkSpec {
       "no RDD blocks of the call may remain after releaseAll")
   }
 
+  test("cutWithoutStats: default size estimate, and hardUnpersist frees the cut") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val cut = Checkpoints.cutWithoutStats(
+      Seq.tabulate(100)(i => (i.toLong, i * 2L)).toDF("a", "b"))
+    // the snowball guard: no origin statistics survive the cut
+    assert(cut.queryExecution.optimizedPlan.stats.sizeInBytes ==
+      BigInt(spark.sessionState.conf.defaultSizeInBytes))
+    val cutRdds = sc.getPersistentRDDs.keySet -- before
+    assert(cutRdds.nonEmpty, "the eager cut must persist its blocks")
+    assert(sc.getRDDStorageInfo.exists(r => cutRdds(r.id)))
+    // the returned frame's root is the cut's own RDD, so freeing the
+    // frame frees the cut: no second handle to keep around
+    Caches.hardUnpersist(cut)
+    ListenerBusDrain(sc)
+    assert((sc.getPersistentRDDs.keySet & cutRdds).isEmpty,
+      "hardUnpersist on the returned frame must unpersist the cut's RDD")
+    assert(!sc.getRDDStorageInfo.exists(r => cutRdds(r.id)),
+      "no block of the cut may remain")
+  }
+
   test("reliable cuts are recoverable: frame survives a blockManager-level unpersist") {
     import spark.implicits._
     val (cut, _) = withReliable {

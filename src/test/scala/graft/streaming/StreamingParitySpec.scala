@@ -215,18 +215,54 @@ class StreamingParitySpec extends SparkSpec {
   test("flatMapGroupsWithState fallback matches transformWithState semantics") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[KeyedRecord]
-    val ckpt = tmp("ckpt-fmg")
-    val out = ChangeDetector.viaFlatMapGroups(input.toDS())
-      .writeStream.format("memory").queryName("fmg_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
     val recs = eventRecords().collect().sortBy(r => (r.ts.getTime, r.value)).take(300)
-    recs.grouped(150).foreach { g => input.addData(g.toSeq); out.processAllAvailable() }
-    out.stop()
-    val got = spark.table("fmg_out").as[ChangeEvent].collect()
-    assert(got.length == 300)
-    assert(got.count(_.change == "initial") == recs.map(_.key).distinct.length)
+    // hand batches on keys disjoint from the fixture's user ids:
+    // repeated keys within one batch, tombstones (one for a key never
+    // seen), re-initialization after a delete, and a tombstone tied on
+    // timestamp with a value row
+    def rec(k: String, v: String, t: Long) = KeyedRecord(k, v, "t", 0, new Timestamp(t))
+    val hand = Seq(
+      Seq(rec("a", "x", 1), rec("a", "x", 2), rec("a", "y", 3),
+        rec("b", "p", 1), rec("b", null, 2), rec("b", "p", 3), rec("c", null, 1)),
+      Seq(rec("a", null, 4), rec("a", "y", 5), rec("b", "p", 4),
+        rec("b", "q", 5), rec("b", "q", 6), rec("c", "z", 2)),
+      Seq(rec("a", "y", 6), rec("a", null, 6), rec("b", null, 7),
+        rec("c", "z", 3), rec("c", null, 4)))
+    val batches = recs.toSeq.grouped(150).toSeq ++ hand
+    def run(name: String,
+        detect: org.apache.spark.sql.Dataset[KeyedRecord] =>
+          org.apache.spark.sql.Dataset[ChangeEvent]): Seq[ChangeEvent] = {
+      val input = MemoryStream[KeyedRecord]
+      val out = detect(input.toDS())
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", tmp(s"ckpt-$name"))
+        .outputMode("append").start()
+      batches.foreach { g => input.addData(g); out.processAllAvailable() }
+      out.stop()
+      spark.table(name).as[ChangeEvent].collect().toSeq
+    }
+    def multiset(es: Seq[ChangeEvent]): Map[ChangeEvent, Int] =
+      es.groupBy(identity).map { case (e, g) => e -> g.size }
+    val got = run("fmg_out", ChangeDetector.viaFlatMapGroups(_))
+    val tws = run("fmg_tws_out", ChangeDetector(_))
+    assert(got.length == 300 + hand.map(_.size).sum)
+    val fixtureKeys = recs.map(_.key).toSet
+    assert(got.count(e => fixtureKeys(e.key) && e.change == "initial") == fixtureKeys.size)
+    assert(multiset(got) == multiset(tws))
+    def ev(k: String, prev: String, cur: String, change: String) =
+      ChangeEvent(k, Option(prev), cur, change)
+    val expectedHand = Seq(
+      ev("a", null, "x", "initial"), ev("a", "x", "x", "unchanged"),
+      ev("a", "x", "y", "changed"), ev("a", "y", null, "deleted"),
+      ev("a", null, "y", "initial"), ev("a", "y", "y", "unchanged"),
+      ev("a", "y", null, "deleted"),
+      ev("b", null, "p", "initial"), ev("b", "p", null, "deleted"),
+      ev("b", null, "p", "initial"), ev("b", "p", "p", "unchanged"),
+      ev("b", "p", "q", "changed"), ev("b", "q", "q", "unchanged"),
+      ev("b", "q", null, "deleted"),
+      ev("c", null, null, "deleted"), ev("c", null, "z", "initial"),
+      ev("c", "z", "z", "unchanged"), ev("c", "z", null, "deleted"))
+    assert(multiset(got.filter(e => Set("a", "b", "c")(e.key))) == multiset(expectedHand))
   }
 
   test("hot key: 1e5 rows in ONE micro-batch, null-value timestamp ties") {
