@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     thread count stays at the core count);
   *   - UTC session time zone; `nanosAsLong` for the nanosecond
   *     timestamps in `events.parquet` (`Tables.events` truncates them);
-  *     AQE on; UI off.
+  *     AQE on; UI off; the [[GraftExtensions]] functions registered.
   *
   * Mains that need more (a `local-cluster` master, a state-store
   * provider, checkpoint settings) add it on top of [[builder]]. */
@@ -32,6 +32,7 @@ object Session {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.extensions" -> "graft.GraftExtensions",
     "spark.ui.enabled" -> "false")
 
   def builder(master: String = s"local[$cpus]"): SparkSession.Builder =

@@ -1,8 +1,8 @@
 package graft.api
 
 import graft.io.{ChangelogSink, Sources}
-import graft.streaming.{ChangeDetector, ChangeEvent, KeyedRecord, StatefulStore, StateEntry}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.streaming.{ChangeDetector, ChangeEvent, KeyedFold, KeyedRecord, StatefulStore, StateEntry}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, TTLConfig, Trigger}
 
@@ -90,15 +90,28 @@ final case class SamsaStream(
 
   /** The README query (README.md:27-52): emit initial/changed/unchanged per
     * record vs stored state. */
-  def detectChanges(ds: Dataset[KeyedRecord]): Dataset[ChangeEvent] =
-    store match {
-      case StoreType.RocksDB => ChangeDetector(ds, ttl)
-      case StoreType.Default => ChangeDetector.viaFlatMapGroups(ds)
-    }
+  def detectChanges(ds: Dataset[KeyedRecord]): Dataset[ChangeEvent] = {
+    import ds.sparkSession.implicits._
+    onStore(ChangeDetector.fold(ttl, KeyedFold.DefaultMaxBatchRowsPerKey), ds.groupByKey(_.key))
+  }
 
   /** Durable latest-wins table of the stream (save/query parity, R4/R5). */
-  def materialize(ds: Dataset[KeyedRecord]): Dataset[StateEntry] =
-    StatefulStore.upsert(ds, ttl)
+  def materialize(ds: Dataset[KeyedRecord]): Dataset[StateEntry] = {
+    import ds.sparkSession.implicits._
+    onStore(StatefulStore.fold(ttl), ds.groupByKey(_.key))
+  }
+
+  /** RocksDB runs `fold` on transformWithState; Default on
+    * flatMapGroupsWithState, which has no state TTL, so a set `ttl` is
+    * rejected here rather than dropped. */
+  private def onStore[Out](
+      fold: KeyedFold[KeyedRecord, String, Out],
+      grouped: KeyValueGroupedDataset[String, KeyedRecord])(
+      implicit out: Encoder[Out]): Dataset[Out] =
+    store match {
+      case StoreType.RocksDB => fold.run(grouped)
+      case StoreType.Default => fold.viaFlatMapGroups(grouped)
+    }
 
   /** Materialize AND replicate each batch's surviving writes to
     * `{table}-{partition}-changelog` Kafka topics (R6/R8). */
@@ -117,10 +130,18 @@ final case class SamsaStream(
       .start()
 
   /** Point lookup against the checkpointed store — R5's `query(key)`
-    * (storage.py:208-219) from outside the stream. */
+    * (storage.py:208-219) from outside the stream. A transformWithState
+    * store names its state variable; a flatMapGroupsWithState store has
+    * one unnamed state, holding the value under `groupState`. */
   def query(spark: SparkSession, checkpoint: String, key: String): Option[String] = {
-    val rows = StatefulStore.readState(spark, checkpoint)
-      .select(col("key.value").as("k"), col("value.value").as("v"))
+    val (state, value) = store match {
+      case StoreType.RocksDB => (StatefulStore.readState(spark, checkpoint), "value.value")
+      case StoreType.Default =>
+        (spark.read.format("statestore").option("path", checkpoint).load(),
+          "value.groupState.value")
+    }
+    val rows = state
+      .select(col("key.value").as("k"), col(value).as("v"))
       .filter(col("k") === key)
       .collect()
     rows.headOption.map(_.getString(1))

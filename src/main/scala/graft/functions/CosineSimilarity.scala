@@ -131,14 +131,17 @@ object GraftFunctions {
       "theta_sketch expects (key[, <int literal lgK>])")
   }
 
+  /** Registers whichever of the four functions `spark` lacks: a session
+    * built with `spark.sql.extensions=graft.GraftExtensions` (every
+    * [[graft.Session]]) already has them all, and re-registering one logs
+    * a registry WARN per call. */
   def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", cosineSimBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_by_score", topKBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_sketch", thetaBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "squared_l2", squaredL2Builder, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    Seq("cosine_sim" -> cosineSimBuilder, "topk_by_score" -> topKBuilder,
+      "theta_sketch" -> thetaBuilder, "squared_l2" -> squaredL2Builder).foreach {
+      case (name, builder) =>
+        if (!registry.functionExists(FunctionIdentifier(name)))
+          registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }

@@ -3,6 +3,12 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
+/** One doc's span-cut result. Public and top-level: as a private case
+  * class nested in [[TextSpans]], the whole-stage codegen that encodes
+  * it fails to compile ("No applicable constructor/method found for zero
+  * actual parameters") and Spark falls back to interpreted evaluation. */
+final case class SpanCut(clean_text: String, n_tokens_kept: Long)
+
 /** Span-cut as a compiled per-row UDF — the map-only form of the
   * doc_span_cut token reconstruction (r21, guide §2.4).
   *
@@ -24,13 +30,11 @@ import org.apache.spark.sql.functions.udf
   * need the O(n·s) membership test instead). */
 object TextSpans {
 
-  private case class Cut(clean_text: String, n_tokens_kept: Long)
-
   private val cutUdf = udf { (toks0: Seq[String],
       spans: Seq[org.apache.spark.sql.Row]) =>
     val toks = if (toks0 == null) Array.empty[String] else toks0.toArray
     if (spans == null || spans.isEmpty)
-      Cut(toks.mkString(" "), toks.length.toLong)
+      SpanCut(toks.mkString(" "), toks.length.toLong)
     else {
       val iv = spans.map(r => (r.getLong(0), r.getLong(1)))
         .sortBy(_._1).toArray
@@ -48,7 +52,7 @@ object TextSpans {
         }
         i += 1
       }
-      Cut(sb.toString, kept)
+      SpanCut(sb.toString, kept)
     }
   }
 

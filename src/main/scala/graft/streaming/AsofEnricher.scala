@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.streaming.KeyedFold.{Keep, Put}
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues}
 
 /** Per-key dimension timeline, sorted ascending by timestamp: version
   * i is valid from tsMillis(i) (inclusive) until tsMillis(i+1). The
@@ -23,7 +23,7 @@ final case class AsofEnriched(
   *
   * The dimension's per-key interval index rides keyed state
   * ([[DimTimeline]] in a ValueState), loaded up front through the
-  * initial-state bootstrap (the ChangeDetector.bootstrapped shape) and
+  * initial-state bootstrap ([[KeyedFold.bootstrapped]]) and
   * updatable MID-STREAM: records whose `topic` equals `dimTopic` are
   * dimension-version upserts (inserted into the timeline at their
   * event time — same-ts upsert replaces, the latest-wins store
@@ -48,54 +48,29 @@ final case class AsofEnriched(
   * O(log versions) per fact. This is the shape that replaces a
   * broadcast temporal join when the dimension exceeds broadcast size:
   * both sides shuffle once on the key, the index lives in RocksDB. */
-class AsofEnricherProcessor(
-    dimTopic: String,
-    maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
-    extends StatefulProcessorWithInitialState[
-      String, KeyedRecord, AsofEnriched, DimTimeline] {
+object AsofEnricher {
 
-  @transient private var timeline
-      : org.apache.spark.sql.streaming.ValueState[DimTimeline] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    timeline = getHandle.getValueState[DimTimeline](
-      "timeline", Encoders.product[DimTimeline], TTLConfig.NONE)
-
-  override def handleInitialState(
-      key: String, initial: DimTimeline, timerValues: TimerValues): Unit =
-    if (initial != null && initial.tsMillis.nonEmpty) timeline.update(initial)
-
-  override def handleInputRows(
-      key: String,
-      rows: Iterator[KeyedRecord],
-      timerValues: TimerValues): Iterator[AsofEnriched] = {
-    val ordered = ChangeDetector
-      .boundedBuffer(key, rows, maxBatchRowsPerKey)
-      .sortBy(KeyedRecord.orderKey)
-    var tl =
-      if (timeline.exists()) timeline.get()
-      else DimTimeline(Array.emptyLongArray, Array.empty[String])
-    var dirty = false
-    val out = scala.collection.mutable.ArrayBuffer[AsofEnriched]()
-    ordered.foreach { r =>
-      if (r.ts != null && r.value != null) {
-        val ts = r.ts.getTime
-        if (r.topic == dimTopic) {
-          tl = AsofEnricher.upsert(key, tl, ts, r.value)
-          dirty = true
-        } else {
-          val i = AsofEnricher.floorIndex(tl.tsMillis, ts)
-          out += AsofEnriched(key, r.value, ts,
-            if (i >= 0) Some(tl.version(i)) else None)
+  private def fold(dimTopic: String, maxBatchRowsPerKey: Int) =
+    new KeyedFold[KeyedRecord, DimTimeline, AsofEnriched](
+      "timeline", Encoders.product[DimTimeline])((key, rows, prior) => {
+      var tl = prior().getOrElse(DimTimeline(Array.emptyLongArray, Array.empty[String]))
+      var dirty = false
+      val out = scala.collection.mutable.ArrayBuffer[AsofEnriched]()
+      KeyedFold.ordered(key, rows, maxBatchRowsPerKey).foreach { r =>
+        if (r.ts != null && r.value != null) {
+          val ts = r.ts.getTime
+          if (r.topic == dimTopic) {
+            tl = upsert(key, tl, ts, r.value)
+            dirty = true
+          } else {
+            val i = floorIndex(tl.tsMillis, ts)
+            out += AsofEnriched(key, r.value, ts,
+              if (i >= 0) Some(tl.version(i)) else None)
+          }
         }
       }
-    }
-    if (dirty) timeline.update(tl)
-    out.iterator
-  }
-}
-
-object AsofEnricher {
+      (out.iterator, if (dirty) Put(tl) else Keep)
+    })
 
   /** Loud ceiling on one key's version history (a dimension key with
     * more versions than this needs compaction upstream, not silent
@@ -138,14 +113,10 @@ object AsofEnricher {
   /** Pure-stream form: the dimension arrives only via `dimTopic`
     * records. */
   def apply(ds: Dataset[KeyedRecord], dimTopic: String = "dim",
-      maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
+      maxBatchRowsPerKey: Int = KeyedFold.DefaultMaxBatchRowsPerKey)
       : Dataset[AsofEnriched] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new AsofEnricherProcessor(dimTopic, maxBatchRowsPerKey),
-        TimeMode.None(),
-        OutputMode.Append())
+    fold(dimTopic, maxBatchRowsPerKey).run(ds.groupByKey(_.key))
   }
 
   /** Bootstrapped form: `dim` (a bounded snapshot of the static side —
@@ -155,7 +126,7 @@ object AsofEnricher {
     * MAX(event_id) tie rule pre-dedup exactly as the batch query does). */
   def bootstrapped(ds: Dataset[KeyedRecord], dim: Dataset[KeyedRecord],
       dimTopic: String = "dim",
-      maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
+      maxBatchRowsPerKey: Int = KeyedFold.DefaultMaxBatchRowsPerKey)
       : Dataset[AsofEnriched] = {
     import ds.sparkSession.implicits._
     val timelines = dim
@@ -174,11 +145,7 @@ object AsofEnricher {
           s"key=$k exceeds $MaxVersionsPerKey dimension versions")
         (k, DimTimeline(dedup.map(_._1).toArray, dedup.map(_._2).toArray))
       }
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new AsofEnricherProcessor(dimTopic, maxBatchRowsPerKey),
-        TimeMode.None(),
-        OutputMode.Append(),
-        timelines.groupByKey(_._1).mapValues(_._2))
+    fold(dimTopic, maxBatchRowsPerKey)
+      .bootstrapped(ds.groupByKey(_.key), timelines.groupByKey(_._1).mapValues(_._2))
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.streaming.KeyedFold.Put
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** A shard's current distinct-count snapshot: emitted once per shard
   * per micro-batch the shard received input in. `nSeen` is the shard's
@@ -29,7 +29,7 @@ final case class DistinctState(
   * capacity, the standard "how many distinct users/URLs so far"
   * dashboard primitive.
   *
-  * Sharding contract (same as [[TopKProcessor]]): the grouping key is
+  * Sharding contract (same as [[TopKTracker]]): the grouping key is
   * a shard id assigned by hashing the ITEM, so each distinct item
   * lives in exactly one shard and shard estimates sum. State per
   * shard is O(exactCap) strings before the switch and exactly 2^p
@@ -48,24 +48,10 @@ final case class DistinctState(
   * estimate is deterministic for a given item multiset.
   *
   * Policies shared with the other seven pairs: null values skipped,
-  * order-insensitive (set/register updates commute), boundedBuffer
-  * cap fails loud, counters addExact.
+  * order-insensitive (set/register updates commute), the
+  * KeyedFold.buffered cap fails loud, counters addExact.
   */
-class DistinctProcessor(
-    exactCap: Int,
-    p: Int,
-    maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
-    extends StatefulProcessor[String, KeyedRecord, DistinctSnapshot] {
-
-  require(exactCap >= 1 && p >= 4 && p <= 16)
-
-  private val m = 1 << p
-
-  @transient private var state: ValueState[DistinctState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    state = getHandle.getValueState[DistinctState](
-      "distinct", Encoders.product[DistinctState], TTLConfig.NONE)
+object DistinctTracker {
 
   /** Fixed-seed 64-bit item hash (two murmur3-32 lanes). */
   private def hash64(s: String): Long = {
@@ -74,7 +60,8 @@ class DistinctProcessor(
     (h1.toLong << 32) | (h2.toLong & 0xffffffffL)
   }
 
-  private def addToRegisters(reg: Array[Byte], item: String): Unit = {
+  /** Fold `item` into the 2^p registers `reg`. */
+  private def addToRegisters(reg: Array[Byte], p: Int, item: String): Unit = {
     val h = hash64(item)
     val idx = (h >>> (64 - p)).toInt
     // rank = leading zeros of the remaining 64-p bits + 1; all-zero
@@ -87,6 +74,7 @@ class DistinctProcessor(
   /** Standard HLL estimator with the linear-counting small-range
     * correction (Flajolet et al. 2007, Fig. 3). */
   private def estimate(reg: Array[Byte]): Long = {
+    val m = reg.length
     var sum = 0.0
     var zeros = 0
     var i = 0
@@ -111,54 +99,46 @@ class DistinctProcessor(
     math.rint(corrected).toLong
   }
 
-  override def handleInputRows(
-      key: String,
-      rows: Iterator[KeyedRecord],
-      timerValues: TimerValues): Iterator[DistinctSnapshot] = {
-    val buf = ChangeDetector.boundedBuffer(key, rows, maxBatchRowsPerKey)
-    val st = if (state.exists()) state.get()
-      else DistinctState(Array.empty[String], Array.empty[Byte], 0L)
-    var n = st.nSeen
-    var sketch = st.registers
-    val set = scala.collection.mutable.TreeSet.empty[String]
-    set ++= st.items
-    buf.foreach { r =>
-      if (r.value != null) {
-        n = Math.addExact(n, 1L)
-        if (sketch.isEmpty) {
-          set += r.value
-          if (set.size > exactCap) {
-            // one-time conversion: every held item crosses the seam
-            sketch = new Array[Byte](m)
-            set.foreach(addToRegisters(sketch, _))
-            set.clear()
-          }
-        } else addToRegisters(sketch, r.value)
+  private def fold(exactCap: Int, p: Int, maxBatchRowsPerKey: Int) =
+    new KeyedFold[KeyedRecord, DistinctState, DistinctSnapshot](
+      "distinct", Encoders.product[DistinctState])((key, rows, prior) => {
+      val buf = KeyedFold.buffered(key, rows, maxBatchRowsPerKey)
+      val st = prior().getOrElse(DistinctState(Array.empty[String], Array.empty[Byte], 0L))
+      var n = st.nSeen
+      var sketch = st.registers
+      val set = scala.collection.mutable.TreeSet.empty[String]
+      set ++= st.items
+      buf.foreach { r =>
+        if (r.value != null) {
+          n = Math.addExact(n, 1L)
+          if (sketch.isEmpty) {
+            set += r.value
+            if (set.size > exactCap) {
+              // one-time conversion: every held item crosses the seam
+              sketch = new Array[Byte](1 << p)
+              set.foreach(addToRegisters(sketch, p, _))
+              set.clear()
+            }
+          } else addToRegisters(sketch, p, r.value)
+        }
       }
-    }
-    val exact = sketch.isEmpty
-    state.update(DistinctState(set.toArray, sketch, n))
-    Iterator.single(DistinctSnapshot(key, n,
-      if (exact) set.size.toLong else estimate(sketch), exact))
-  }
-}
-
-object DistinctTracker {
+      val exact = sketch.isEmpty
+      (Iterator.single(DistinctSnapshot(key, n,
+        if (exact) set.size.toLong else estimate(sketch), exact)),
+        Put(DistinctState(set.toArray, sketch, n)))
+    })
 
   /** Track distinct `ds.value` items; `ds.key` must be the item-hash
-    * shard id (see processor scaladoc). `exactCap` bounds the exact
+    * shard id (see the object scaladoc). `exactCap` bounds the exact
     * set per shard; `p` sizes the HLL register file (2^p bytes). */
   def apply(
       ds: Dataset[KeyedRecord],
       exactCap: Int = 4096,
       p: Int = 12,
-      maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
+      maxBatchRowsPerKey: Int = KeyedFold.DefaultMaxBatchRowsPerKey)
       : Dataset[DistinctSnapshot] = {
+    require(exactCap >= 1 && p >= 4 && p <= 16)
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new DistinctProcessor(exactCap, p, maxBatchRowsPerKey),
-        TimeMode.None(),
-        OutputMode.Append())
+    fold(exactCap, p, maxBatchRowsPerKey).run(ds.groupByKey(_.key))
   }
 }

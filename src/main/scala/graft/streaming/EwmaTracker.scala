@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.streaming.KeyedFold.{Keep, Put}
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
 
 /** A numeric keyed event: the input shape for trackers whose state is
   * arithmetic over a value series rather than samsa's string payloads
@@ -35,67 +35,39 @@ final case class EwmaState(acc: Double, n: Long)
   * (the batch query filters null values; a stream twin has no real
   * event time to order null-ts rows by) — the FunnelTracker contract.
   * State is one (double, long) per key at any stream length; the
-  * micro-batch buffer restores event-time order with the same bounded
-  * fail-loud discipline as ChangeDetector.boundedBuffer.
+  * micro-batch buffer ([[KeyedFold.buffered]]) restores (ts, eventId)
+  * order under the shared fail-loud cap.
   */
-class EwmaTrackerProcessor(
-    alpha: Double,
-    beta: Double,
-    maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
-    extends StatefulProcessor[String, NumericRecord, EwmaPoint] {
-
-  @transient private var st: org.apache.spark.sql.streaming.ValueState[EwmaState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[EwmaState](
-      "ewma", Encoders.product[EwmaState], TTLConfig.NONE)
-
-  override def handleInputRows(
-      key: String,
-      rows: Iterator[NumericRecord],
-      timerValues: TimerValues): Iterator[EwmaPoint] = {
-    val buf = new scala.collection.mutable.ArrayBuffer[NumericRecord]()
-    while (rows.hasNext) {
-      buf += rows.next()
-      if (buf.length > maxBatchRowsPerKey)
-        throw new IllegalStateException(
-          s"EwmaTracker: key '$key' has more than $maxBatchRowsPerKey rows " +
-            "in one micro-batch; shrink micro-batches " +
-            "(maxFilesPerTrigger/maxOffsetsPerTrigger), split or rate-limit " +
-            "the hot key upstream, or raise maxBatchRowsPerKey")
-    }
-    val ordered = buf.filter(r => r.ts != null && r.value != null)
-      .sortBy(r => (r.ts.getTime, r.eventId))
-    var cur = if (st.exists()) st.get() else null
-    val out = new scala.collection.mutable.ArrayBuffer[EwmaPoint](ordered.length)
-    ordered.foreach { r =>
-      val x = r.value.doubleValue()
-      cur =
-        if (cur == null) EwmaState(x, 1L)
-        else EwmaState(alpha * x + beta * cur.acc, cur.n + 1L)
-      out += EwmaPoint(key, r.eventId, r.ts.getTime, cur.acc)
-    }
-    if (cur != null) st.update(cur)
-    out.iterator
-  }
-}
-
 object EwmaTracker {
   /** The batch win_ewma literals — shared so the pair cannot drift. */
   val Alpha = 0.3
   val Beta = 0.7
 
+  private def fold(alpha: Double, beta: Double, maxBatchRowsPerKey: Int) =
+    new KeyedFold[NumericRecord, EwmaState, EwmaPoint](
+      "ewma", Encoders.product[EwmaState])((key, rows, prior) => {
+      val ordered = KeyedFold.buffered(key, rows, maxBatchRowsPerKey)
+        .filter(r => r.ts != null && r.value != null)
+        .sortBy(r => (r.ts.getTime, r.eventId))
+      var cur = prior().orNull
+      val out = new scala.collection.mutable.ArrayBuffer[EwmaPoint](ordered.length)
+      ordered.foreach { r =>
+        val x = r.value.doubleValue()
+        cur =
+          if (cur == null) EwmaState(x, 1L)
+          else EwmaState(alpha * x + beta * cur.acc, cur.n + 1L)
+        out += EwmaPoint(key, r.eventId, r.ts.getTime, cur.acc)
+      }
+      (out.iterator, if (cur != null) Put(cur) else Keep)
+    })
+
   def apply(
       ds: Dataset[NumericRecord],
       alpha: Double = Alpha,
       beta: Double = Beta,
-      maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
+      maxBatchRowsPerKey: Int = KeyedFold.DefaultMaxBatchRowsPerKey)
       : Dataset[EwmaPoint] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new EwmaTrackerProcessor(alpha, beta, maxBatchRowsPerKey),
-        TimeMode.None(),
-        OutputMode.Append())
+    fold(alpha, beta, maxBatchRowsPerKey).run(ds.groupByKey(_.key))
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.streaming.KeyedFold.{Keep, Put}
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
 
 /** A key's first appearance: emitted exactly once, with its event time
   * (epoch millis). Grouping by day downstream reproduces the batch
@@ -16,8 +16,8 @@ final case class FirstSeen(key: String, tsMillis: Long)
   * O(1) state per key instead of a corpus-wide aggregation.
   *
   * Replay parity (StreamingFirstSeenSpec): when micro-batches arrive in
-  * event-time order (the tracker sorts WITHIN a batch via the shared
-  * boundedBuffer discipline), the emitted tsMillis equals the batch
+  * event-time order (the tracker sorts WITHIN a batch with
+  * [[KeyedFold.ordered]]), the emitted tsMillis equals the batch
   * MIN(ts) per key, so day-grouped counts equal `evt_cumulative_users`
   * exactly. Policy under cross-batch late data: the first OBSERVED
   * record wins (state never rewrites) — the deliberate streaming
@@ -29,46 +29,24 @@ final case class FirstSeen(key: String, tsMillis: Long)
   * first-seen) — the samsa keyed-state shape with a set-membership
   * transition function.
   */
-class FirstSeenProcessor(
-    maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
-    extends StatefulProcessor[String, KeyedRecord, FirstSeen] {
+object FirstSeenTracker {
 
-  @transient private var seen: org.apache.spark.sql.streaming.ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    seen = getHandle.getValueState[Long](
-      "firstSeenTs", Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(
-      key: String,
-      rows: Iterator[KeyedRecord],
-      timerValues: TimerValues): Iterator[FirstSeen] = {
-    if (seen.exists()) { rows.foreach(_ => ()); Iterator.empty }
-    else {
-      val ordered = ChangeDetector
-        .boundedBuffer(key, rows, maxBatchRowsPerKey)
-        .sortBy(KeyedRecord.orderKey)
-      ordered.find(_.ts != null) match {
+  private def fold(maxBatchRowsPerKey: Int) =
+    new KeyedFold[KeyedRecord, Long, FirstSeen](
+      "firstSeenTs", Encoders.scalaLong)((key, rows, prior) =>
+      if (prior().isDefined) (Iterator.empty, Keep)
+      else KeyedFold.ordered(key, rows, maxBatchRowsPerKey).find(_.ts != null) match {
         case Some(first) =>
           val ts = first.ts.getTime
-          seen.update(ts)
-          Iterator.single(FirstSeen(key, ts))
-        case None => Iterator.empty
-      }
-    }
-  }
-}
+          (Iterator.single(FirstSeen(key, ts)), Put(ts))
+        case None => (Iterator.empty, Keep)
+      })
 
-object FirstSeenTracker {
   def apply(
       ds: Dataset[KeyedRecord],
-      maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
+      maxBatchRowsPerKey: Int = KeyedFold.DefaultMaxBatchRowsPerKey)
       : Dataset[FirstSeen] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new FirstSeenProcessor(maxBatchRowsPerKey),
-        TimeMode.None(),
-        OutputMode.Append())
+    fold(maxBatchRowsPerKey).run(ds.groupByKey(_.key))
   }
 }

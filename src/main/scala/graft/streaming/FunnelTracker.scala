@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.streaming.KeyedFold.{Keep, Put}
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
 
 /** Per-key funnel progress: how many ordered steps are complete and the
   * event time of the latest completed step (epoch millis). */
@@ -23,81 +23,58 @@ final case class FunnelAdvance(
   * counts (StreamingFunnelSpec asserts it). Sole divergence, by
   * policy: a user whose step-1 events are ALL null-ts is counted at
   * step 1 by the batch query (the MIN group row exists with a NULL
-  * time) but never enters the stream funnel — see handleInputRows.
+  * time) but never enters the stream funnel — see the fold.
   *
   * Reference precedent: the samsa README pitches per-user stateful
   * consumption over an event stream (/root/reference/README.md:27-52);
   * this is the same keyed-state shape with a funnel transition function
   * instead of change detection. State is one (int, long) per user in
   * the RocksDB store; rows of one micro-batch are buffered per key only
-  * to restore event-time order (same bounded-buffer discipline and cap
-  * as ChangeDetector.processBatch).
+  * to restore event-time order ([[KeyedFold.ordered]]).
   */
-class FunnelTrackerProcessor(
-    steps: Seq[String],
-    maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
-    extends StatefulProcessor[String, KeyedRecord, FunnelAdvance] {
-
-  @transient private var progress: org.apache.spark.sql.streaming.ValueState[FunnelProgress] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    progress = getHandle.getValueState[FunnelProgress](
-      "progress", Encoders.product[FunnelProgress], TTLConfig.NONE)
-
-  override def handleInputRows(
-      key: String,
-      rows: Iterator[KeyedRecord],
-      timerValues: TimerValues): Iterator[FunnelAdvance] = {
-    val ordered = ChangeDetector
-      .boundedBuffer(key, rows, maxBatchRowsPerKey)
-      .sortBy(KeyedRecord.orderKey)
-    val st =
-      if (progress.exists()) progress.get() else FunnelProgress(0, Long.MinValue)
-    var stage = st.stage
-    var lastTs = st.lastTsMillis
-    val out = scala.collection.mutable.ArrayBuffer[FunnelAdvance]()
-    ordered.foreach { r =>
-      // Null-ts records are SKIPPED: a funnel advancement needs a real
-      // event time. Known divergence from the batch twin, by policy:
-      // batch evt_funnel counts a user whose step-1 events are ALL
-      // null-ts (MIN over an all-NULL group is NULL, the group row
-      // still exists) but can never advance them past step 1 (ts >
-      // NULL is never true); the stream twin never admits them at all.
-      // On null-free streams — the fixture, and any event source with
-      // a required event-time column — replay parity is exact
-      // (StreamingFunnelSpec asserts both properties).
-      if (stage < steps.length && r.value == steps(stage) && r.ts != null) {
-        val ts = r.ts.getTime
-        // strict > : an event sharing the previous completion's
-        // timestamp cannot advance (the batch cascade's e.ts > prev.t)
-        if (ts > lastTs) {
-          stage += 1
-          lastTs = ts
-          out += FunnelAdvance(key, stage, steps(stage - 1), ts)
-        }
-      }
-    }
-    if (stage != st.stage) progress.update(FunnelProgress(stage, lastTs))
-    out.iterator
-  }
-}
-
 object FunnelTracker {
 
   /** The batch `evt_funnel` step sequence. */
   val DefaultSteps: Seq[String] = Seq("view", "click", "purchase")
 
+  private def fold(steps: Seq[String], maxBatchRowsPerKey: Int) =
+    new KeyedFold[KeyedRecord, FunnelProgress, FunnelAdvance](
+      "progress", Encoders.product[FunnelProgress])((key, rows, prior) => {
+      val st = prior().getOrElse(FunnelProgress(0, Long.MinValue))
+      var stage = st.stage
+      var lastTs = st.lastTsMillis
+      val out = scala.collection.mutable.ArrayBuffer[FunnelAdvance]()
+      KeyedFold.ordered(key, rows, maxBatchRowsPerKey).foreach { r =>
+        // Null-ts records are SKIPPED: a funnel advancement needs a real
+        // event time. Known divergence from the batch twin, by policy:
+        // batch evt_funnel counts a user whose step-1 events are ALL
+        // null-ts (MIN over an all-NULL group is NULL, the group row
+        // still exists) but can never advance them past step 1 (ts >
+        // NULL is never true); the stream twin never admits them at all.
+        // On null-free streams — the fixture, and any event source with
+        // a required event-time column — replay parity is exact
+        // (StreamingFunnelSpec asserts both properties).
+        if (stage < steps.length && r.value == steps(stage) && r.ts != null) {
+          val ts = r.ts.getTime
+          // strict > : an event sharing the previous completion's
+          // timestamp cannot advance (the batch cascade's e.ts > prev.t)
+          if (ts > lastTs) {
+            stage += 1
+            lastTs = ts
+            out += FunnelAdvance(key, stage, steps(stage - 1), ts)
+          }
+        }
+      }
+      (out.iterator, if (stage != st.stage) Put(FunnelProgress(stage, lastTs)) else Keep)
+    })
+
   def apply(
       ds: Dataset[KeyedRecord],
       steps: Seq[String] = DefaultSteps,
-      maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
+      maxBatchRowsPerKey: Int = KeyedFold.DefaultMaxBatchRowsPerKey)
       : Dataset[FunnelAdvance] = {
     require(steps.nonEmpty, "funnel needs at least one step")
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new FunnelTrackerProcessor(steps, maxBatchRowsPerKey),
-        TimeMode.None(),
-        OutputMode.Append())
+    fold(steps, maxBatchRowsPerKey).run(ds.groupByKey(_.key))
   }
 }

@@ -1,7 +1,14 @@
 package graft.streaming
 
+import graft.streaming.KeyedFold.{Keep, Put}
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+
+/** A string-valued keyed event carrying the batch (ts, event_id) tiebreak. */
+final case class OrderedRecord(
+    key: String,
+    eventId: Long,
+    value: String,
+    ts: java.sql.Timestamp)
 
 /** A user journey prefix: the first `n` event types of `key` joined
   * with '>' — the growing path emitted after each consumed event. */
@@ -15,7 +22,7 @@ final case class PathPoint(key: String, n: Int, path: String)
   * keyed state — the TENTH batch/stream pair sharing one semantics
   * definition. The batch row ranks each user's events by
   * (ts, event_id), keeps rn <= 5, and joins the types with '>'; this
-  * processor consumes records in the same order (micro-batch buffer
+  * tracker consumes records in the same order (micro-batch buffer
   * sorted by (ts, eventId) — the eventId carries the batch tiebreak),
   * appends to a bounded (path, n) state, STOPS at n = 5, and emits the
   * prefix after every append. Grouping each key's FINAL emission
@@ -26,64 +33,33 @@ final case class PathPoint(key: String, n: Int, path: String)
   * FunnelTracker contract). State is one bounded string + int per key
   * at any stream length (paths cap at 5 segments).
   */
-class PathTrackerProcessor(
-    maxSteps: Int = 5,
-    maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
-    extends StatefulProcessor[String, OrderedRecord, PathPoint] {
-
-  @transient private var st: org.apache.spark.sql.streaming.ValueState[PathState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[PathState](
-      "path", Encoders.product[PathState], TTLConfig.NONE)
-
-  override def handleInputRows(
-      key: String,
-      rows: Iterator[OrderedRecord],
-      timerValues: TimerValues): Iterator[PathPoint] = {
-    val buf = new scala.collection.mutable.ArrayBuffer[OrderedRecord]()
-    while (rows.hasNext) {
-      buf += rows.next()
-      if (buf.length > maxBatchRowsPerKey)
-        throw new IllegalStateException(
-          s"PathTracker: key '$key' has more than $maxBatchRowsPerKey rows " +
-            "in one micro-batch; shrink micro-batches or raise the cap")
-    }
-    val ordered = buf.filter(r => r.ts != null && r.value != null)
-      .sortBy(r => (r.ts.getTime, r.eventId))
-    var cur = if (st.exists()) st.get() else PathState("", 0)
-    val out = new scala.collection.mutable.ArrayBuffer[PathPoint]()
-    ordered.foreach { r =>
-      if (cur.n < maxSteps) {
-        cur = PathState(
-          if (cur.n == 0) r.value else cur.path + ">" + r.value,
-          cur.n + 1)
-        out += PathPoint(key, cur.n, cur.path)
-      }
-    }
-    if (cur.n > 0) st.update(cur)
-    out.iterator
-  }
-}
-
-/** A string-valued keyed event carrying the batch (ts, event_id) tiebreak. */
-final case class OrderedRecord(
-    key: String,
-    eventId: Long,
-    value: String,
-    ts: java.sql.Timestamp)
-
 object PathTracker {
+
+  private def fold(maxSteps: Int, maxBatchRowsPerKey: Int) =
+    new KeyedFold[OrderedRecord, PathState, PathPoint](
+      "path", Encoders.product[PathState])((key, rows, prior) => {
+      val ordered = KeyedFold.buffered(key, rows, maxBatchRowsPerKey)
+        .filter(r => r.ts != null && r.value != null)
+        .sortBy(r => (r.ts.getTime, r.eventId))
+      var cur = prior().getOrElse(PathState("", 0))
+      val out = new scala.collection.mutable.ArrayBuffer[PathPoint]()
+      ordered.foreach { r =>
+        if (cur.n < maxSteps) {
+          cur = PathState(
+            if (cur.n == 0) r.value else cur.path + ">" + r.value,
+            cur.n + 1)
+          out += PathPoint(key, cur.n, cur.path)
+        }
+      }
+      (out.iterator, if (cur.n > 0) Put(cur) else Keep)
+    })
+
   def apply(
       ds: Dataset[OrderedRecord],
       maxSteps: Int = 5,
-      maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
+      maxBatchRowsPerKey: Int = KeyedFold.DefaultMaxBatchRowsPerKey)
       : Dataset[PathPoint] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new PathTrackerProcessor(maxSteps, maxBatchRowsPerKey),
-        TimeMode.None(),
-        OutputMode.Append())
+    fold(maxSteps, maxBatchRowsPerKey).run(ds.groupByKey(_.key))
   }
 }

@@ -1,17 +1,20 @@
 package graft.streaming
 
+import graft.streaming.KeyedFold.Put
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Inactivity-closed session summary: emitted ONCE per session, when the
   * key has seen no events for the configured gap (as judged by the event
   * -time watermark). */
 final case class SessionSummary(key: String, nEvents: Long, closedAtMs: Long)
 
+/** An open session: events so far and the latest event time (epoch ms). */
+final case class SessionCount(nEvents: Long, lastTs: Long)
+
 /** PROCESSOR TIMERS — the transformWithState capability the rest of the
   * streaming surface doesn't exercise (ValueState/ListState/MapState/TTL
   * are covered by ChangeDetector/KeyedStats/StateTtl): a per-key
-  * event-time timer re-armed on every input, firing `handleExpiredTimer`
+  * event-time timer re-armed on every input ([[KeyedFold.Timer]]), firing
   * when the watermark passes last-event + gap. This is the
   * session-window-with-callback shape (emit exactly one summary per
   * closed session, then clear state) that `window(session_window)`
@@ -23,55 +26,29 @@ final case class SessionSummary(key: String, nEvents: Long, closedAtMs: Long)
   * expiry scans are range reads over the armed-timer prefix below the
   * watermark, never a full-state sweep. One timer per key at all times
   * (re-arm deletes the previous), so timer volume = live-key count. */
-class SessionCloserProcessor(gapMs: Long)
-    extends StatefulProcessor[String, KeyedRecord, SessionSummary] {
-
-  @transient private var count: ValueState[Long] = _
-  @transient private var lastTs: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    count = getHandle.getValueState[Long]("count", Encoders.scalaLong, TTLConfig.NONE)
-    lastTs = getHandle.getValueState[Long]("lastTs", Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(
-      key: String,
-      rows: Iterator[KeyedRecord],
-      timerValues: TimerValues): Iterator[SessionSummary] = {
-    var n = if (count.exists()) count.get() else 0L
-    var last = if (lastTs.exists()) lastTs.get() else Long.MinValue
-    rows.foreach { r =>
-      n += 1
-      if (r.ts != null) last = math.max(last, r.ts.getTime)
-    }
-    count.update(n)
-    lastTs.update(last)
-    // exactly one armed timer per key: re-arm at latest-event + gap
-    getHandle.listTimers().foreach(getHandle.deleteTimer)
-    getHandle.registerTimer(last + gapMs)
-    Iterator.empty
-  }
-
-  override def handleExpiredTimer(
-      key: String,
-      timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[SessionSummary] = {
-    val n = if (count.exists()) count.get() else 0L
-    count.clear()
-    lastTs.clear()
-    if (n == 0) Iterator.empty
-    else Iterator.single(SessionSummary(key, n, expiredTimerInfo.getExpiryTimeInMs()))
-  }
-}
-
 object SessionCloser {
+
+  private def fold(gapMs: Long) =
+    new KeyedFold[KeyedRecord, SessionCount, SessionSummary](
+      "session", Encoders.product[SessionCount],
+      timer = Some(KeyedFold.Timer[SessionCount, SessionSummary](
+        _.lastTs + gapMs,
+        (key, s, expiryMs) => Iterator.single(SessionSummary(key, s.nEvents, expiryMs)))))(
+      (_, rows, prior) => {
+        val s = prior().getOrElse(SessionCount(0L, Long.MinValue))
+        var n = s.nEvents
+        var last = s.lastTs
+        rows.foreach { r =>
+          n += 1
+          if (r.ts != null) last = math.max(last, r.ts.getTime)
+        }
+        (Iterator.empty, Put(SessionCount(n, last)))
+      })
 
   /** `ds` must carry an event-time watermark on `ts` (event-time timers
     * fire against the watermark): `.withWatermark("ts", ...)` upstream. */
   def apply(ds: Dataset[KeyedRecord], gapMs: Long): Dataset[SessionSummary] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new SessionCloserProcessor(gapMs), TimeMode.EventTime(), OutputMode.Append())
+    fold(gapMs).run(ds.groupByKey(_.key))
   }
 }

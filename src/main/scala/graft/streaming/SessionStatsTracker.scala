@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.streaming.KeyedFold.{Keep, Put}
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** An open session's running state: first/last event time (epoch ms)
   * and the event count. */
@@ -20,7 +20,7 @@ final case class ClosedSession(
   * state + one event-time timer — the SIXTH batch/stream pair sharing
   * one semantics definition. The batch row assigns events to sessions
   * with `session_window(ts, gap)` (new session when the time since the
-  * previous event is >= gap); this processor holds the open session as
+  * previous event is >= gap); this tracker holds the open session as
   * (start, last, n), splits mid-batch on the same >= gap rule over the
   * event-time-sorted buffer, and closes the final session of a key via
   * the watermark timer (re-armed at last + gap on every input).
@@ -37,77 +37,42 @@ final case class ClosedSession(
   * Scale posture: state is 3 longs + one armed timer per key; timer
   * expiry is a range scan below the watermark, never a full-state
   * sweep; output volume is the closed-session count. */
-class SessionStatsProcessor(
-    gapMs: Long,
-    maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
-    extends StatefulProcessor[String, KeyedRecord, ClosedSession] {
-
-  @transient private var acc: ValueState[SessionAcc] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    acc = getHandle.getValueState[SessionAcc](
-      "acc", Encoders.product[SessionAcc], TTLConfig.NONE)
+object SessionStatsTracker {
 
   private def close(a: SessionAcc, key: String): ClosedSession =
     ClosedSession(key, a.startMs, a.lastMs, a.nEvents,
       Math.floorDiv(a.lastMs, 1000L) - Math.floorDiv(a.startMs, 1000L))
 
-  override def handleInputRows(
-      key: String,
-      rows: Iterator[KeyedRecord],
-      timerValues: TimerValues): Iterator[ClosedSession] = {
-    val ordered = ChangeDetector
-      .boundedBuffer(key, rows, maxBatchRowsPerKey)
-      .sortBy(KeyedRecord.orderKey)
-    var open: SessionAcc = if (acc.exists()) acc.get() else null
-    val out = scala.collection.mutable.ArrayBuffer[ClosedSession]()
-    ordered.foreach { r =>
-      if (r.ts != null) {
-        val ts = r.ts.getTime
-        if (open == null) open = SessionAcc(ts, ts, 1L)
-        else if (ts - open.lastMs >= gapMs) {
-          out += close(open, key)
-          open = SessionAcc(ts, ts, 1L)
-        } else open = SessionAcc(open.startMs, math.max(open.lastMs, ts),
-          open.nEvents + 1L)
-      }
-    }
-    if (open != null) {
-      acc.update(open)
-      // exactly one armed timer per key: re-arm at last + gap
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(open.lastMs + gapMs)
-    }
-    out.iterator
-  }
-
-  override def handleExpiredTimer(
-      key: String,
-      timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[ClosedSession] = {
-    if (!acc.exists()) Iterator.empty
-    else {
-      val a = acc.get()
-      acc.clear()
-      Iterator.single(close(a, key))
-    }
-  }
-}
-
-object SessionStatsTracker {
+  private def fold(gapMs: Long, maxBatchRowsPerKey: Int) =
+    new KeyedFold[KeyedRecord, SessionAcc, ClosedSession](
+      "acc", Encoders.product[SessionAcc],
+      timer = Some(KeyedFold.Timer[SessionAcc, ClosedSession](
+        _.lastMs + gapMs, (key, a, _) => Iterator.single(close(a, key)))))(
+      (key, rows, prior) => {
+        var open: SessionAcc = prior().orNull
+        val out = scala.collection.mutable.ArrayBuffer[ClosedSession]()
+        KeyedFold.ordered(key, rows, maxBatchRowsPerKey).foreach { r =>
+          if (r.ts != null) {
+            val ts = r.ts.getTime
+            if (open == null) open = SessionAcc(ts, ts, 1L)
+            else if (ts - open.lastMs >= gapMs) {
+              out += close(open, key)
+              open = SessionAcc(ts, ts, 1L)
+            } else open = SessionAcc(open.startMs, math.max(open.lastMs, ts),
+              open.nEvents + 1L)
+          }
+        }
+        (out.iterator, if (open != null) Put(open) else Keep)
+      })
 
   /** `ds` must carry an event-time watermark on `ts` (the close timer
     * fires against the watermark): `.withWatermark("ts", ...)` upstream. */
   def apply(
       ds: Dataset[KeyedRecord],
       gapMs: Long,
-      maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
+      maxBatchRowsPerKey: Int = KeyedFold.DefaultMaxBatchRowsPerKey)
       : Dataset[ClosedSession] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new SessionStatsProcessor(gapMs, maxBatchRowsPerKey),
-        TimeMode.EventTime(),
-        OutputMode.Append())
+    fold(gapMs, maxBatchRowsPerKey).run(ds.groupByKey(_.key))
   }
 }

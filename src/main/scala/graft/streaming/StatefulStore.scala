@@ -1,7 +1,8 @@
 package graft.streaming
 
+import graft.streaming.KeyedFold.{Clear, Put}
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Latest-wins keyed store: the engine's replacement for samsa's
   * `StatefulConsumer.save`/`query` (/root/reference/samsa/kafka/
@@ -20,45 +21,34 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   * transactional with the micro-batch checkpoint, closing samsa's
   * crash-between-put-and-produce staleness window (storage.py:201-206).
   */
-class UpsertStoreProcessor(ttl: TTLConfig = TTLConfig.NONE)
-    extends StatefulProcessor[String, KeyedRecord, StateEntry] {
-
-  @transient private var store: org.apache.spark.sql.streaming.ValueState[String] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    store = getHandle.getValueState[String]("value", Encoders.STRING, ttl)
-
-  override def handleInputRows(
-      key: String,
-      rows: Iterator[KeyedRecord],
-      timerValues: TimerValues): Iterator[StateEntry] = {
-    // Latest-wins means only the maximal row under the deterministic,
-    // null-safe order (KeyedRecord.orderKey) survives the batch — track
-    // it in O(1) memory over the iterator instead of buffering and
-    // sorting every per-key row (a hot key with millions of rows in one
-    // micro-batch would otherwise materialize in executor heap).
-    if (!rows.hasNext) Iterator.empty
-    else {
-      val r = rows.maxBy(KeyedRecord.orderKey)
-      // Changelog is compacted per micro-batch: only the surviving write
-      // is replicated (samsa replicates every put — same end state,
-      // less I/O).
-      val entry =
-        if (r.value == null) { store.clear(); StateEntry(key, null) }
-        else { store.update(r.value); StateEntry(key, r.value) }
-      Iterator.single(entry)
-    }
-  }
-}
-
 object StatefulStore {
+
+  /** The latest-wins fold: the value under the state name "value". It
+    * never reads the stored value, only writes the batch's survivor. */
+  private[graft] def fold(ttl: TTLConfig) =
+    new KeyedFold[KeyedRecord, String, StateEntry](
+      "value", Encoders.STRING, ttl, outputMode = OutputMode.Update())(
+      (key, rows, _) =>
+        // Latest-wins means only the maximal row under the deterministic,
+        // null-safe order (KeyedRecord.orderKey) survives the batch — track
+        // it in O(1) memory over the iterator instead of buffering and
+        // sorting every per-key row (a hot key with millions of rows in one
+        // micro-batch would otherwise materialize in executor heap).
+        // Changelog is compacted per micro-batch: only the surviving write
+        // is replicated (samsa replicates every put — same end state, less
+        // I/O).
+        if (!rows.hasNext) (Iterator.empty, KeyedFold.Keep)
+        else {
+          val r = rows.maxBy(KeyedRecord.orderKey)
+          (Iterator.single(StateEntry(key, r.value)),
+            if (r.value == null) Clear else Put(r.value))
+        })
 
   /** Materialize a keyed record stream into durable latest-wins state,
     * emitting the per-batch changelog. */
   def upsert(ds: Dataset[KeyedRecord], ttl: TTLConfig = TTLConfig.NONE): Dataset[StateEntry] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.key)
-      .transformWithState(new UpsertStoreProcessor(ttl), TimeMode.None(), OutputMode.Update())
+    fold(ttl).run(ds.groupByKey(_.key))
   }
 
   /** Out-of-stream point/range query of live state (samsa's `query(key)`,

@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.streaming.KeyedFold.Put
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** A shard's current heavy-hitter snapshot row: emitted once per
   * (shard, tracked item) per micro-batch the shard received input in.
@@ -51,78 +51,57 @@ final case class TopKState(
   *
   * Policies (same discipline as the other six pairs): null-value
   * records are skipped; records are order-insensitive (counts commute)
-  * so no in-batch sort; the boundedBuffer cap still applies as the
-  * skewed-shard error contract; counter increments are addExact —
+  * so no in-batch sort; the KeyedFold.buffered cap still applies as
+  * the skewed-shard error contract; counter increments are addExact —
   * overflow fails loud, never wraps.
   */
-class TopKProcessor(
-    k: Int,
-    depth: Int,
-    width: Int,
-    maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
-    extends StatefulProcessor[String, KeyedRecord, TopKSnapshot] {
-
-  require(k >= 1 && depth >= 1 && width >= 1)
-
-  @transient private var state: ValueState[TopKState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    state = getHandle.getValueState[TopKState](
-      "topk", Encoders.product[TopKState], TTLConfig.NONE)
-
-  override def handleInputRows(
-      key: String,
-      rows: Iterator[KeyedRecord],
-      timerValues: TimerValues): Iterator[TopKSnapshot] = {
-    val buf = ChangeDetector.boundedBuffer(key, rows, maxBatchRowsPerKey)
-    val st = if (state.exists()) state.get()
-      else TopKState(new Array[Long](depth * width),
-        Array.empty[String], Array.empty[Long], 0L)
-    val cm = st.cm
-    var top = st.items.zip(st.ests).toMap
-    var n = st.nSeen
-    buf.foreach { r =>
-      if (r.value != null) {
-        n = Math.addExact(n, 1L)
-        var est = Long.MaxValue
-        var d = 0
-        while (d < depth) {
-          val h = scala.util.hashing.MurmurHash3.stringHash(r.value, 0x9747b28c + d)
-          val c = d * width + Math.floorMod(h, width)
-          cm(c) = Math.addExact(cm(c), 1L)
-          if (cm(c) < est) est = cm(c)
-          d += 1
-        }
-        if (top.contains(r.value) || top.size < k) top = top.updated(r.value, est)
-        else {
-          val (vItem, vEst) = top.minBy { case (i, e) => (e, i) }
-          if (est > vEst) top = (top - vItem).updated(r.value, est)
-        }
-      }
-    }
-    // deterministic state layout: candidates stored est-desc, item-asc
-    val ordered = top.toArray.sortBy { case (i, e) => (-e, i) }
-    state.update(TopKState(cm, ordered.map(_._1), ordered.map(_._2), n))
-    ordered.iterator.map { case (item, est) => TopKSnapshot(key, n, item, est) }
-  }
-}
-
 object TopKTracker {
 
+  private def fold(k: Int, depth: Int, width: Int, maxBatchRowsPerKey: Int) =
+    new KeyedFold[KeyedRecord, TopKState, TopKSnapshot](
+      "topk", Encoders.product[TopKState])((key, rows, prior) => {
+      val buf = KeyedFold.buffered(key, rows, maxBatchRowsPerKey)
+      val st = prior().getOrElse(TopKState(new Array[Long](depth * width),
+        Array.empty[String], Array.empty[Long], 0L))
+      val cm = st.cm
+      var top = st.items.zip(st.ests).toMap
+      var n = st.nSeen
+      buf.foreach { r =>
+        if (r.value != null) {
+          n = Math.addExact(n, 1L)
+          var est = Long.MaxValue
+          var d = 0
+          while (d < depth) {
+            val h = scala.util.hashing.MurmurHash3.stringHash(r.value, 0x9747b28c + d)
+            val c = d * width + Math.floorMod(h, width)
+            cm(c) = Math.addExact(cm(c), 1L)
+            if (cm(c) < est) est = cm(c)
+            d += 1
+          }
+          if (top.contains(r.value) || top.size < k) top = top.updated(r.value, est)
+          else {
+            val (vItem, vEst) = top.minBy { case (i, e) => (e, i) }
+            if (est > vEst) top = (top - vItem).updated(r.value, est)
+          }
+        }
+      }
+      // deterministic state layout: candidates stored est-desc, item-asc
+      val ordered = top.toArray.sortBy { case (i, e) => (-e, i) }
+      (ordered.iterator.map { case (item, est) => TopKSnapshot(key, n, item, est) },
+        Put(TopKState(cm, ordered.map(_._1), ordered.map(_._2), n)))
+    })
+
   /** Track the top `k` items per shard; `ds.key` must be the
-    * item-hash shard id (see processor scaladoc), `ds.value` the item. */
+    * item-hash shard id (see the object scaladoc), `ds.value` the item. */
   def apply(
       ds: Dataset[KeyedRecord],
       k: Int,
       depth: Int = 3,
       width: Int = 1024,
-      maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
+      maxBatchRowsPerKey: Int = KeyedFold.DefaultMaxBatchRowsPerKey)
       : Dataset[TopKSnapshot] = {
+    require(k >= 1 && depth >= 1 && width >= 1)
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new TopKProcessor(k, depth, width, maxBatchRowsPerKey),
-        TimeMode.None(),
-        OutputMode.Append())
+    fold(k, depth, width, maxBatchRowsPerKey).run(ds.groupByKey(_.key))
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.streaming.KeyedFold.{Keep, Put}
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
 
 /** Last event seen for a key: its type and event time (epoch millis). */
 final case class LastEvent(eventType: String, tsMillis: Long)
@@ -28,51 +28,31 @@ final case class TransitionStep(
   * definition (change detection, funnel, transitions) — the samsa
   * keyed-state shape (/root/reference/README.md:27-52) with a lag
   * transition function. State is one (string, long) per key; the
-  * micro-batch buffer restores event-time order with the same bounded
-  * discipline as ChangeDetector.processBatch.
+  * micro-batch buffer restores event-time order ([[KeyedFold.ordered]]).
   */
-class TransitionTrackerProcessor(
-    maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
-    extends StatefulProcessor[String, KeyedRecord, TransitionStep] {
-
-  @transient private var last: org.apache.spark.sql.streaming.ValueState[LastEvent] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    last = getHandle.getValueState[LastEvent](
-      "last", Encoders.product[LastEvent], TTLConfig.NONE)
-
-  override def handleInputRows(
-      key: String,
-      rows: Iterator[KeyedRecord],
-      timerValues: TimerValues): Iterator[TransitionStep] = {
-    val ordered = ChangeDetector
-      .boundedBuffer(key, rows, maxBatchRowsPerKey)
-      .sortBy(KeyedRecord.orderKey)
-    var prev = if (last.exists()) last.get() else null
-    val out = scala.collection.mutable.ArrayBuffer[TransitionStep]()
-    ordered.foreach { r =>
-      if (r.ts != null && r.value != null) {
-        val ts = r.ts.getTime
-        if (prev != null)
-          out += TransitionStep(key, prev.eventType, r.value, ts)
-        prev = LastEvent(r.value, ts)
-      }
-    }
-    if (prev != null) last.update(prev)
-    out.iterator
-  }
-}
-
 object TransitionTracker {
+
+  private def fold(maxBatchRowsPerKey: Int) =
+    new KeyedFold[KeyedRecord, LastEvent, TransitionStep](
+      "last", Encoders.product[LastEvent])((key, rows, prior) => {
+      var prev = prior().orNull
+      val out = scala.collection.mutable.ArrayBuffer[TransitionStep]()
+      KeyedFold.ordered(key, rows, maxBatchRowsPerKey).foreach { r =>
+        if (r.ts != null && r.value != null) {
+          val ts = r.ts.getTime
+          if (prev != null)
+            out += TransitionStep(key, prev.eventType, r.value, ts)
+          prev = LastEvent(r.value, ts)
+        }
+      }
+      (out.iterator, if (prev != null) Put(prev) else Keep)
+    })
+
   def apply(
       ds: Dataset[KeyedRecord],
-      maxBatchRowsPerKey: Int = ChangeDetector.DefaultMaxBatchRowsPerKey)
+      maxBatchRowsPerKey: Int = KeyedFold.DefaultMaxBatchRowsPerKey)
       : Dataset[TransitionStep] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new TransitionTrackerProcessor(maxBatchRowsPerKey),
-        TimeMode.None(),
-        OutputMode.Append())
+    fold(maxBatchRowsPerKey).run(ds.groupByKey(_.key))
   }
 }

@@ -126,13 +126,18 @@ class R21OptSpec extends SparkSpec {
     // the r21 map-only form
     val spanArr = spans.groupBy("doc_id")
       .agg(collect_list(struct(col("span_start"), col("span_end"))).as("sp"))
-    val got = docs.select(col("doc_id"), toks.as("arr"))
-      .join(spanArr, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        graft.functions.TextSpans.cutSpans(col("arr"), col("sp")).as("c"))
-      .select(col("doc_id"), col("c.clean_text"), col("c.n_tokens_kept"))
-      .collect().map(_.toString).sorted.toSeq
+    var got = Seq.empty[String]
+    val logged = graft.LogCapture("org.apache.spark.sql.catalyst.expressions.codegen") {
+      got = docs.select(col("doc_id"), toks.as("arr"))
+        .join(spanArr, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          graft.functions.TextSpans.cutSpans(col("arr"), col("sp")).as("c"))
+        .select(col("doc_id"), col("c.clean_text"), col("c.n_tokens_kept"))
+        .collect().map(_.toString).sorted.toSeq
+    }
     assert(got == ref, s"cutSpans must equal the listagg form:\n$got\nvs\n$ref")
+    val errors = logged.filter(_._1 == org.apache.logging.log4j.Level.ERROR)
+    assert(errors.isEmpty, s"whole-stage codegen failed to compile: ${errors.map(_._2).take(1)}")
   }
 
   test("ext_entity_components_reliable: twin row, identical rows, conf restored") {

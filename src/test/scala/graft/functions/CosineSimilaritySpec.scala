@@ -59,6 +59,15 @@ class CosineSimilaritySpec extends SparkSpec {
     assert(math.abs(r - 1.0) < 1e-12)
   }
 
+  test("ensureRegistered on a registered session logs no registry WARN") {
+    GraftFunctions.ensureRegistered(spark)
+    val logged = graft.LogCapture("org.apache.spark.sql.catalyst.analysis") {
+      GraftFunctions.ensureRegistered(spark)
+    }
+    val warns = logged.filter(_._1 == org.apache.logging.log4j.Level.WARN)
+    assert(warns.isEmpty, s"re-registration warned: ${warns.map(_._2)}")
+  }
+
   test("null inputs yield null, mismatched type fails analysis") {
     GraftFunctions.ensureRegistered(spark)
     val r = spark.sql("SELECT cosine_sim(CAST(NULL AS ARRAY<FLOAT>), array(cast(1.0 as float)))")
