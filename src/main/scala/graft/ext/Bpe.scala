@@ -130,7 +130,7 @@ object Bpe {
   private def stepCut(seq: DataFrame, step: Int, strideOn: Boolean,
       strideN: Int): DataFrame =
     if (!strideOn || step % strideN == 0) seq.cutLineageLazy()
-    else Caches.track(Checkpoints.persistRound(seq, eager = false))
+    else Caches.track(Checkpoints.persistRound(seq))
 
   def train(docs: DataFrame, nMerges: Int)
       : (Seq[(Int, String, String, Long)], DataFrame) = {

@@ -88,18 +88,28 @@ object Checkpoints {
     * kept: a lost block recomputes from the previous rounds back to the
     * last reliable cut.
     *
-    * `eager = false` leaves the final stage to the first action on the
-    * result (AQE still runs `df`'s shuffle stages here), so a consumer
+    * The round is lazy: AQE runs `df`'s shuffle stages here and leaves
+    * the final stage to the first action on the result, so a consumer
     * that scans every partition fills this round's blocks in its own
-    * job; `eager = true` fills them with one count. Callers own the
-    * result's storage: free it with [[Caches.hardUnpersist]] or track
-    * it for [[Caches.releaseAll]]. */
-  def persistRound(df: DataFrame, eager: Boolean): DataFrame = {
-    val rows = df.queryExecution.toRdd.map(_.copy())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    if (eager) rows.count()
-    org.apache.spark.sql.RddFrames.ofInternalRows(df, rows)
+    * job. Callers own the result's storage: free it with
+    * [[Caches.hardUnpersist]] or track it for [[Caches.releaseAll]]. */
+  def persistRound(df: DataFrame): DataFrame =
+    org.apache.spark.sql.RddFrames.ofInternalRows(df, persistedRows(df))
+
+  /** The eager, counted [[persistRound]]: one job fills every block of
+    * the round and, in the same pass, counts the rows whose boolean
+    * column `flag` is true (a null flag counts as false). An iterative
+    * loop's convergence test then costs no job of its own: CC counts
+    * its open nodes here instead of probing the persisted frame. */
+  def persistRoundCounted(df: DataFrame, flag: String): (DataFrame, Long) = {
+    val rows = persistedRows(df)
+    val i = df.schema.fieldIndex(flag)
+    val n = rows.filter(r => !r.isNullAt(i) && r.getBoolean(i)).count()
+    (org.apache.spark.sql.RddFrames.ofInternalRows(df, rows), n)
   }
+
+  private def persistedRows(df: DataFrame) =
+    df.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
 
   /** Cut `df`'s lineage: reliable `checkpoint` when
     * `graft.checkpoint.dir` is configured, `localCheckpoint` otherwise.

@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.ext.Checkpoints.CutOps
@@ -15,10 +16,11 @@ import graft.ext.Checkpoints.CutOps
   *    corpora swap in the banded-MinHash candidates
   *    (`doc_minhash_candidates`) for the same downstream.
   *  - Components by alternating large-star/small-star contraction
-  *    (Kiveris et al. 2014): each round is two groupBy-min + join
-  *    passes over a SHRINKING edge set, converging in O(log² n) rounds
-  *    worst-case and 2-3 on near-dup shapes (vs O(diameter) for label
-  *    propagation). Every round cuts lineage so plans stay O(1) deep.
+  *    (Kiveris et al. 2014): each round is two window-min passes over
+  *    a SHRINKING edge set, converging in O(log² n) rounds worst-case
+  *    and 2-3 on near-dup shapes (vs O(diameter) for label
+  *    propagation). Every round's frames are flat LogicalRDD leaves,
+  *    so plans stay O(1) deep.
   *  - Canonical = min doc_id per component: deterministic, oracle-
   *    expressible (DuckDB recursive CTE computes the same closure).
   */
@@ -258,10 +260,10 @@ object Dedup {
     * Algorithm (r11, VERDICT r10 item 1): alternating
     * large-star / small-star (Kiveris et al., "Connected Components in
     * MapReduce and Beyond", SoCC 2014) instead of min-label
-    * propagation. Both operations are the same groupBy/join primitives
-    * a label sweep costs, but each round contracts tall paths toward
-    * the local minimum, so convergence is O(log² n) rounds worst-case
-    * and 2-3 rounds on near-dup graph shapes — vs O(component
+    * propagation. Each operation takes a per-node minimum over a window
+    * (no aggregate joined back), and each round contracts tall paths
+    * toward the local minimum, so convergence is O(log² n) rounds
+    * worst-case and 2-3 rounds on near-dup graph shapes — vs O(component
     * diameter) for label propagation. The edge set also SHRINKS every
     * round (paths collapse into stars, duplicates dropped), where the
     * old sweep re-joined the full symmetric edge list against labels
@@ -275,11 +277,14 @@ object Dedup {
     * recompute from lineage back to the last durable cut (checkpoint
     * bytes paid rounds/stride times, not every round — see
     * Checkpoints.reliableModeOn). The previous round's frames are
-    * freed as each round lands; convergence is the star-forest test
-    * (one map-side-combinable aggregate), which is exact: E is a fixed
-    * point of both operations iff it is a star forest, and edges only
-    * ever point to smaller ids, so each star's center IS its
-    * component's minimum. */
+    * freed as each round lands. Convergence is the star-forest test
+    * (a node is open iff max(label) > min(label) over its candidate
+    * rows, one map-side-combinable aggregate), which is exact: E is a
+    * fixed point of both operations iff it is a star forest, and edges
+    * only ever point to smaller ids, so each star's center IS its
+    * component's minimum. A persist round counts its open nodes in the
+    * job that fills the candidate's blocks; a cut round probes its cut
+    * candidate. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame =
     connectedComponentsWithRounds(edges, maxIter)._1
 
@@ -300,16 +305,12 @@ object Dedup {
     val e0 =
       if (sel.storageLevel != StorageLevel.NONE) sel
       else Caches.track(sel.persist())
-    // nodes appearing ONLY in self-loops would vanish from the star
-    // operations (they emit no src≠dst edge); appended at the end so
-    // the "every node that appears in an edge" contract holds
-    val selfOnly = e0.filter(col("doc_a") === col("doc_b"))
-      .select(col("doc_a").as("node")).distinct()
     // no up-front orient/distinct/convergence pass: round 1's largeStar
-    // symmetrizes either orientation and its aggregates absorb
-    // duplicates map-side, and a round over an already-converged star
-    // forest is idempotent — the converged-input case just pays one
-    // cheap extra round
+    // symmetrizes either orientation, its window minimum ignores
+    // duplicates and its distinct drops them, and a round over an
+    // already-converged star forest is idempotent — the converged-input
+    // case just pays one cheap extra round. The =!= filter also drops
+    // null ids, so no label below is ever null
     var e = e0.filter(col("doc_a") =!= col("doc_b"))
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
     var prevCk: Option[DataFrame] = None
@@ -328,12 +329,10 @@ object Dedup {
     // (Checkpoints.stride). LOCAL mode cuts every round: its
     // localCheckpoint is nearly free. Either way each round's frames
     // are flat LogicalRDD leaves, so no round re-analyzes an earlier
-    // round's plan. The convergence probe reads a fully-materialized
-    // candidate either way: persist rounds fill it eagerly (its
-    // aggregate scans every partition of the lazy new edge frame, so
-    // the same jobs fill BOTH frames' blocks) because the isEmpty probe
-    // alone is a take(1) that can leave partitions unfilled and
-    // silently turn the next round into a recompute of this one.
+    // round's plan. A persist round's edge frame stays lazy: the
+    // candidate's aggregate scans every partition of it, so the one
+    // job that fills the candidate's blocks (and counts its open nodes)
+    // fills the edge frame's blocks too.
     // Frames are freed only AFTER the new round materializes — a
     // persist round still reads its parent's blocks while computing.
     val stride = Checkpoints.stride(edges)
@@ -348,25 +347,32 @@ object Dedup {
       // 10.1 s, 1 MB plan strings) for the one job it saves.
       val next0 = smallStar(largeStar(e))
       val next = if (cutRound) next0.cutLineage()
-                 else Checkpoints.persistRound(next0, eager = false)
+                 else Checkpoints.persistRound(next0)
       e = next
       // ONE aggregation doubles as the convergence test AND the result:
-      // emit (child → parent) plus (center → center) rows; a node with
-      // >1 distinct label is exactly a star-forest violation (a center
-      // that is also a child sees its self-row plus a real parent;
-      // a multi-parent child sees both parents), and once no node
-      // violates, min(label) IS the component id (edges only ever point
-      // to smaller ids, so each star's center is its component's min —
-      // and the min node itself can never be a child: its center would
-      // have to be smaller). The materialized candidate is reused as
-      // the returned labels, so the converged round pays no extra
-      // label-construction job.
+      // emit (child → parent) plus (center → center) rows; a node whose
+      // rows carry two different labels (max > min) is exactly a
+      // star-forest violation (a center that is also a child sees its
+      // self-row plus a real parent; a multi-parent child sees both
+      // parents), and once no node is open, min(label) IS the component
+      // id (edges only ever point to smaller ids, so each star's center
+      // is its component's min — and the min node itself can never be
+      // a child: its center would have to be smaller). The materialized
+      // candidate is reused as the returned labels, so the converged
+      // round pays no extra label-construction job.
       val cand0 = e.select(col("src").as("node"), col("dst").as("label"))
         .union(e.select(col("dst").as("node"), col("dst").as("label")))
         .groupBy("node")
-        .agg(min("label").as("label"), countDistinct("label").as("k"))
-      cand = if (cutRound) cand0.cutLineage()
-             else Checkpoints.persistRound(cand0, eager = true)
+        .agg(min("label").as("label"), (max("label") > min("label")).as("open"))
+      val (c, open) =
+        if (cutRound) {
+          val c = cand0.cutLineage()
+          (c, !c.filter(col("open")).isEmpty)
+        } else {
+          val (c, n) = Checkpoints.persistRoundCounted(cand0, "open")
+          (c, n > 0)
+        }
+      cand = c
       // hardUnpersist frees the RDD blocks BACKING a LogicalRDD frame
       // (plain Dataset.unpersist is a silent no-op on checkpoint and
       // persist-round storage — CacheHygieneSpec lesson)
@@ -374,7 +380,7 @@ object Dedup {
       prevCk = Some(next)
       prevCand.foreach(Caches.hardUnpersist)
       prevCand = Some(cand)
-      converged = cand.filter(col("k") > 1).isEmpty
+      converged = !open
       rounds += 1
     }
     // ADVICE r4 (medium): exiting at maxIter without convergence means
@@ -389,10 +395,15 @@ object Dedup {
           "partial/wrong; raise maxIter")
     Caches.track(cand) // backs the returned labels; freed by releaseAll
     val starLabels = cand.select(col("node"), col("label"))
-    // self-loop-only nodes are rare to nonexistent (every candidate
-    // generator emits doc_a < doc_b); probe the cached input once and
-    // skip the union+re-checkpoint entirely when there are none, so the
-    // common case returns the candidate checkpoint as-is
+    // nodes appearing ONLY in self-loops vanish from the star operations
+    // (they emit no src≠dst edge), so they are appended here to keep the
+    // "every node that appears in an edge" contract. They are rare to
+    // nonexistent (every candidate generator emits doc_a < doc_b), so
+    // the cached input is probed once and the common case returns the
+    // candidate as-is. No round's job reads the input's self-loops, so
+    // the probe cannot ride one without a second pass over the input.
+    val selfOnly = e0.filter(col("doc_a") === col("doc_b"))
+      .select(col("doc_a").as("node")).distinct()
     val labels =
       if (selfOnly.isEmpty) starLabels
       else Caches.track(starLabels
@@ -411,17 +422,19 @@ object Dedup {
 
   /** Large-star: for every node u, connect each STRICTLY LARGER
     * neighbor to min(Γ(u) ∪ {u}). Contracts tall paths by pointing
-    * grandchildren at grandparents; output oriented big→small. */
+    * grandchildren at grandparents; output oriented big→small and
+    * hash-partitioned by src, which is the partitioning smallStar's
+    * window needs. */
   private def largeStar(e: DataFrame): DataFrame = {
     val sym = e.select(explode(array(
         struct(col("src").as("u"), col("dst").as("v")),
         struct(col("dst").as("u"), col("src").as("v")))).as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"))
-    val mins = sym.groupBy("u").agg(min("v").as("mn"))
-      .select(col("u"), least(col("u"), col("mn")).as("m"))
-    sym.join(mins, "u")
+    sym.select(col("u"), col("v"),
+        least(col("u"), min("v").over(Window.partitionBy("u"))).as("m"))
       .filter(col("v") > col("u"))
       .select(col("v").as("src"), col("m").as("dst"))
+      .repartition(col("src"))
       .distinct()
   }
 
@@ -429,16 +442,14 @@ object Dedup {
     * neighbors, i.e. grouping oriented edges by their larger endpoint),
     * connect u and all those neighbors to the minimum among them —
     * collapses each node's down-neighborhood into a star. */
-  private def smallStar(e: DataFrame): DataFrame = {
-    val mins = e.groupBy("src").agg(min("dst").as("mn"))
-    e.join(mins, "src")
+  private def smallStar(e: DataFrame): DataFrame =
+    e.select(col("src"), col("dst"), min("dst").over(Window.partitionBy("src")).as("mn"))
       .select(explode(array(
         struct(col("dst").as("n"), col("mn")),
         struct(col("src").as("n"), col("mn")))).as("p"))
       .select(col("p.n").as("src"), col("p.mn").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-  }
 
   /** SPAN-LEVEL (substring) dedup — the whole-document family's missing
     * sibling (VERDICT r7 item 1): find substrings repeated ACROSS
@@ -478,7 +489,6 @@ object Dedup {
       dfCap: Int = 0): DataFrame = {
     require(k >= 2, s"k-gram width must be >= 2, got $k")
     require(minDf >= 2, s"minDf < 2 would mark every doc's own text as repeated")
-    import org.apache.spark.sql.expressions.Window
     val arr = split(col("text"), "\\s+")
     // k-grams with 0-based start offsets (posexplode index = offset);
     // docs shorter than k emit none. k=8 rides the compiled UDF —
@@ -874,7 +884,6 @@ object Dedup {
       scoreCol: String = "n_chars",
       threshold: Double = 0.5,
       dfCap: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val comp = connectedComponents(nearDupEdges(docs, threshold, dfCap))
     val labeled = docs.select(col("doc_id"), col(scoreCol).as("score"))
       .join(comp.select(col("node").as("doc_id"), col("component")), Seq("doc_id"), "left")

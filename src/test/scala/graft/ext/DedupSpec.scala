@@ -110,6 +110,73 @@ class DedupSpec extends SparkSpec {
     assert(rounds <= 8, s"expected logarithmic convergence, took $rounds rounds")
   }
 
+  test("connected components: generated graphs with a spilling hub equal union-find") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    // random components of random shapes over shuffled ids, plus the
+    // edge cases the star rounds must carry: self-loop-only nodes (one
+    // of them repeated), a self-loop on a node that also has real
+    // edges, duplicate edges in both orientations, a lone single edge,
+    // and a hub (the mega-bucket min-star shape) whose degree exceeds
+    // the lowered window buffer thresholds, so the per-node minimum
+    // windows spill
+    val rnd = new scala.util.Random(7)
+    val ids = rnd.shuffle((1L to 3000L).toVector)
+    // ids(0 until 1500) split into components of 2-41 nodes: a random
+    // tree each, plus a random chord (a cycle, or a self-loop)
+    val comps = Iterator.unfold(0) { lo =>
+      Option.when(lo < 1500) { val hi = (lo + 2 + rnd.nextInt(40)) min 1500; ((lo, hi), hi) }
+    }.toVector
+    def pick(lo: Int, hi: Int) = ids(lo + rnd.nextInt(hi - lo))
+    val random = comps.flatMap { case (lo, hi) =>
+      (lo + 1 until hi).map(i => (ids(i), pick(lo, i))) :+ (pick(lo, hi), pick(lo, hi))
+    }
+    val hub = ids(2000)
+    val spokes = (2001 until 2600).map(i => if (i % 2 == 0) (hub, ids(i)) else (ids(i), hub))
+    val (a, b) = (ids(2700), ids(2701))
+    val dupes = Seq((a, b), (b, a), (a, b), (ids(2702), a), (a, ids(2702)))
+    val single = Seq((ids(2800), ids(2801)))
+    val selfOnly = Seq((ids(2900), ids(2900)), (ids(2901), ids(2901)), (ids(2901), ids(2901)))
+    val selfAndReal = Seq((hub, hub), (ids(2702), ids(2702)))
+    val all = rnd.shuffle(random ++ spokes ++ dupes ++ single ++ selfOnly ++ selfAndReal)
+
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    all.foreach { case (x, y) =>
+      val (rx, ry) = (find(x), find(y)); if (rx != ry) parent(rx max ry) = rx min ry
+    }
+    val truth = parent.keys.toVector.groupBy(find).values
+      .flatMap(ns => ns.map(_ -> ns.min)).toMap
+
+    val spilled = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) spilled.addAndGet(e.taskMetrics.memoryBytesSpilled)
+    }
+    val sc = spark.sparkContext
+    spark.conf.set("spark.sql.windowExec.buffer.in.memory.threshold", "16")
+    spark.conf.set("spark.sql.windowExec.buffer.spill.threshold", "64")
+    sc.addSparkListener(listener)
+    val got = try {
+      val labels = Dedup.connectedComponents(all.toDF("doc_a", "doc_b"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      org.apache.spark.ListenerBusDrain(sc)
+      labels
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.conf.unset("spark.sql.windowExec.buffer.in.memory.threshold")
+      spark.conf.unset("spark.sql.windowExec.buffer.spill.threshold")
+      Caches.releaseAll(spark)
+    }
+    assert(spilled.get() > 0, "the hub's window buffers must spill")
+    assert(comps.size > 10 && truth.values.toSet.size > 10)
+    assert(got.size == truth.size, s"${got.size} labelled nodes, expected ${truth.size}")
+    assert(got == truth, s"CC mismatch: ${(got.toSet diff truth.toSet).take(5)}")
+  }
+
   test("bloomNewDocs: no false negatives; FP rate within budget") {
     import org.apache.spark.sql.functions._
     val docs = Tables.documents(spark, sf())

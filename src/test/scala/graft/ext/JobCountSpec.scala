@@ -1,0 +1,79 @@
+package graft.ext
+
+import java.nio.file.Files
+
+import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+
+/** Spark jobs per call of the iterative operators, pinned. These loops
+  * are bound by per-job scheduling and planning, not by data, so a
+  * change that adds a job per round or sweep is a regression even when
+  * the results stay right. Counted on fixed small graphs with the
+  * suite's session (local[4], 4 shuffle partitions); a pin that moves
+  * must be re-measured and its old and new values recorded. */
+class JobCountSpec extends SparkSpec {
+
+  /** 50 paths of 16 nodes and 20 stars of 8 leaves: four star rounds,
+    * so at the default stride 4 reliable mode runs three persist rounds
+    * and then a cut round. */
+  private def forest: DataFrame = {
+    import spark.implicits._
+    val paths = for (p <- 0L until 50L; i <- 0L until 15L)
+      yield (p * 16 + i, p * 16 + i + 1)
+    val stars = for (s <- 0L until 20L; l <- 1L to 8L)
+      yield (1000L + s * 9, 1000L + s * 9 + l)
+    (paths ++ stars).toDF("doc_a", "doc_b")
+  }
+
+  private def noopWrite(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private def ccJobs(): (Int, Int) = {
+    val (rounds, jobs) = countingJobs {
+      val (labels, rounds) = Dedup.connectedComponentsWithRounds(forest)
+      noopWrite(labels)
+      rounds
+    }
+    Caches.releaseAll(spark)
+    (rounds, jobs)
+  }
+
+  test("CC at the default stride: jobs per call in local mode") {
+    val (rounds, jobs) = ccJobs()
+    assert(rounds == 4, s"the forest took $rounds star rounds, expected 4")
+    assert(jobs == 31, s"connectedComponents ran $jobs jobs, pinned 31")
+  }
+
+  test("CC at the default stride: jobs per call in reliable mode") {
+    val dir = Files.createTempDirectory("graft-jobcount-ckpt").toFile
+    spark.conf.set("graft.checkpoint.dir", dir.toString)
+    val (rounds, jobs) = try ccJobs()
+                         finally spark.conf.unset("graft.checkpoint.dir")
+    assert(rounds == 4, s"the forest took $rounds star rounds, expected 4")
+    assert(jobs == 25, s"connectedComponents ran $jobs jobs, pinned 25")
+  }
+
+  private def ring: DataFrame = {
+    import spark.implicits._
+    (0L until 200L).flatMap(i => Seq((i, (i + 1) % 200), (i, (i * 7 + 3) % 200)))
+      .toDF("src", "dst")
+  }
+
+  // both loops pin their edge list in the caller's frame: unpersist it,
+  // so no later call reads a cache this one filled
+  test("one PageRank sweep: jobs per call") {
+    val edges = ring
+    val (_, jobs) = try countingJobs(noopWrite(Graph.pageRank(edges, iters = 1)))
+    finally edges.unpersist()
+    assert(jobs == 12, s"one PageRank sweep ran $jobs jobs, pinned 12")
+  }
+
+  test("one label-propagation sweep: jobs per call") {
+    val edges = ring.select(col("src").as("a"), col("dst").as("b"))
+    val nodes = spark.range(200).select(col("id").as("node"))
+    val (_, jobs) = try countingJobs(noopWrite(Graph.labelPropagation(nodes, edges, iters = 1)))
+    finally edges.unpersist()
+    assert(jobs == 8, s"one label-propagation sweep ran $jobs jobs, pinned 8")
+  }
+}
