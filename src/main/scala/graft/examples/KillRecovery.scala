@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   *
   * The r17/r18 rounds priced `graft.checkpoint.dir` and checked
   * bit-identity between modes — but always on undisturbed runs, where
-  * the toggle is pure cost. This main runs PageRank (the
-  * `graph_pagerank_scale` synthetic shape) under
+  * the toggle is pure cost. This main runs PageRank (a synthetic graph
+  * of 20000·factor nodes and 6 directed edges per node) under
   * `local-cluster[2,C,M]` — REAL multi-JVM standalone executors, not
   * local[*] threads — and `kill -9`s one executor JVM mid-sweep:
   *
@@ -41,12 +41,12 @@ import org.apache.spark.sql.functions._
   */
 object KillRecovery {
 
-  /** Same order-insensitive fingerprint as GraphCkptScale: per-row md5
-    * (null cells rendered explicitly; non-empty \u0001 field separator,
-    * a literal control char until r20, now escaped so it audits as
-    * what it is), folded by an exact DECIMAL sum of the first 60 bits
-    * plus a row count. */
-  private def distHash(df: DataFrame): String = {
+  /** Order-insensitive distributed fingerprint: per-row md5 over the
+    * cells (null cells rendered explicitly; non-empty \u0001 field
+    * separator), folded by an exact DECIMAL sum of the first 60 bits
+    * plus a row count — one pass, nothing collected. Shared with
+    * [[StreamKillRecovery]]. */
+  private[examples] def distHash(df: DataFrame): String = {
     val rowHash = md5(concat_ws("\u0001",
       df.columns.map(c =>
         coalesce(col(c).cast("string"), lit("\u0001NULL\u0001"))): _*))
@@ -74,7 +74,7 @@ object KillRecovery {
       }
   }
 
-  private def killOneExecutor(): Option[Long] = {
+  private[examples] def killOneExecutor(): Option[Long] = {
     val pids = executorPids()
     pids.sorted.headOption.map { pid =>
       ProcessHandle.of(pid).ifPresent(h => { h.destroyForcibly(); () })
@@ -185,7 +185,7 @@ object KillRecovery {
 
     // 1. undisturbed runs, both modes (identity base + kill-time base).
     //    Run local first: it also warms JIT so the reliable baseline
-    //    isn't the cold run (GraphCkptScale's warm-first lesson).
+    //    isn't the cold run.
     val localBase = runOnce("local", 0)
     val relBase = runOnce("reliable", 0)
     require(relBase.failed.isEmpty && localBase.failed.isEmpty,

@@ -2,7 +2,6 @@ package graft.examples
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -46,41 +45,7 @@ import org.apache.spark.sql.streaming.Trigger
   * fixture, the SCALE.md streaming decade). One [streamkill-json] line.
   */
 object StreamKillRecovery {
-
-  /** Same order-insensitive fingerprint as KillRecovery/GraphCkptScale:
-    * per-row md5 (explicit null sentinel, non-empty  field
-    * separator), folded by an exact DECIMAL sum of the first 60 bits
-    * plus a row count. */
-  private def distHash(df: DataFrame): String = {
-    val rowHash = md5(concat_ws("",
-      df.columns.map(c =>
-        coalesce(col(c).cast("string"), lit("NULL"))): _*))
-    val r = df.select(
-      sum(conv(substring(rowHash, 1, 15), 16, 10).cast("decimal(38,0)"))
-        .cast("string").as("h"),
-      count(lit(1)).as("n")).collect()(0)
-    s"${r.getString(0)}/${r.getLong(1)}"
-  }
-
-  private def executorPids(): Seq[Long] = {
-    val proc = new java.io.File("/proc")
-    Option(proc.listFiles()).getOrElse(Array.empty).toSeq
-      .filter(f => f.isDirectory && f.getName.forall(_.isDigit))
-      .flatMap { f =>
-        try {
-          val cmd = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(f.getPath, "cmdline")), "UTF-8")
-          if (cmd.contains("CoarseGrainedExecutorBackend")) Some(f.getName.toLong)
-          else None
-        } catch { case _: Throwable => None }
-      }
-  }
-
-  private def killOneExecutor(): Option[Long] =
-    executorPids().sorted.headOption.map { pid =>
-      ProcessHandle.of(pid).ifPresent(h => { h.destroyForcibly(); () })
-      pid
-    }
+  import KillRecovery.{distHash, killOneExecutor}
 
   def main(args: Array[String]): Unit = {
     val factor = if (args.nonEmpty) args(0).toInt else 100
@@ -116,8 +81,9 @@ object StreamKillRecovery {
 
     val tmp = Files.createTempDirectory(s"streamkill-$factor").toString
 
-    // same replicated-disjoint-keys event stream as StreamScale: state
-    // size tracks true key count, ~125k-row files, 4 files per batch
+    // events replicated x factor with disjoint key spaces per replica:
+    // state size tracks true key count, ~125k-row files, 4 files per
+    // batch
     val ev = graft.Tables.events(spark, sfDir)
       .crossJoin(spark.range(factor.toLong).toDF("rep"))
       .select(

@@ -51,20 +51,28 @@ object CorpusBuild {
       nExactCanonical: Long,
       nNearDupCanonical: Long)
 
+  /** The five stage descriptions. Every job a build starts runs with
+    * one of them as its `spark.job.description`, so Spark's own
+    * listeners and UI attribute each job to its stage. */
+  val StageDescriptions: IndexedSeq[String] = IndexedSeq(
+    "corpus-build 1 quality", "corpus-build 2 span policy",
+    "corpus-build 3 exact dedup", "corpus-build 4 near-dup dedup",
+    "corpus-build 5 packing")
+
+  private val JobDescription = "spark.job.description"
+
+  /** Runs `f` under stage `n`'s description and restores the previous
+    * description afterwards. The job group is left alone. */
+  private def inStage[A](docs: DataFrame, n: Int)(f: => A): A = {
+    val sc = docs.sparkSession.sparkContext
+    val prev = sc.getLocalProperty(JobDescription)
+    sc.setLocalProperty(JobDescription, StageDescriptions(n - 1))
+    try f finally sc.setLocalProperty(JobDescription, prev)
+  }
+
   /** Runs the full recipe over `docs` (doc_id, text, ... passthrough
     * columns ignored). Output columns: doc_id, clean_text, n_tokens,
     * seq_id, seq_offset, spans_boundary. */
-  // opt-in per-stage wall-clock to stderr (perf work only)
-  private def timed[A](label: String)(f: => A): A = {
-    if (!sys.env.contains("GRAFT_STAGE_TIMING")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[corpus-build] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
-
   def run(docs: DataFrame, cfg: Config = Config()): (DataFrame, Report) = {
     val (packed, report) = runStaged(docs, cfg)
     (packed(), report)
@@ -85,7 +93,7 @@ object CorpusBuild {
   private def runStaged(docs: DataFrame, cfg: Config)
       : (() => DataFrame, Report) = {
     val toks = split(col("text"), "\\s+")
-    val nRaw = timed("0 raw count")(docs.count())
+    val nRaw = inStage(docs, 1)(docs.count())
 
     // Stage boundaries are localCheckpoint'ed, not cache()'d: each stage
     // is eagerly materialized for the funnel report anyway, and cutting
@@ -103,13 +111,13 @@ object CorpusBuild {
     val quality = docs.select(col("doc_id"), col("text"))
       .filter(size(toks).between(cfg.minTokens, cfg.maxTokens)
         && size(array_distinct(toks)).cast("double") / size(toks) >= cfg.minTtr)
-    val qualityC = Caches.track(timed("1 quality ckpt")(quality.cutLineage()))
-    val nQuality = timed("1 quality")(qualityC.count())
+    val qualityC = Caches.track(inStage(docs, 1)(quality.cutLineage()))
+    val nQuality = inStage(docs, 1)(qualityC.count())
 
     // 2. span policy: coverage ≥ threshold -> drop doc; else cut spans.
     // spans feeds BOTH the coverage policy and the token anti-join —
     // cache it or the whole gram/df/merge pipeline runs twice.
-    val spans = Caches.track(timed("2 spans ckpt")(
+    val spans = Caches.track(inStage(docs, 2)(
       Dedup.repeatedSpans(qualityC, cfg.spanK, cfg.spanMinDf).cutLineage()))
     val cov = spans.groupBy("doc_id").agg(sum("span_len").as("covered"))
     val keptDocs = qualityC
@@ -135,13 +143,13 @@ object CorpusBuild {
         graft.functions.TextSpans.cutSpans(col("arr"), col("sp")).as("c"))
       .select(col("doc_id"), col("c.clean_text").as("text"),
         col("c.n_tokens_kept").as("n_tokens"))
-    val cutC = Caches.track(timed("2 span policy+cut ckpt")(cut.cutLineage()))
-    val nAfterSpan = timed("2 span policy+cut")(cutC.count())
+    val cutC = Caches.track(inStage(docs, 2)(cut.cutLineage()))
+    val nAfterSpan = inStage(docs, 2)(cutC.count())
 
     // 3. exact dedup on normalized cut text — min-id canonical survives
     val exactC = Caches.track(
-      timed("3 exact dedup ckpt")(exactDedupCanonical(cutC).cutLineage()))
-    val nExact = timed("3 exact dedup")(exactC.count())
+      inStage(docs, 3)(exactDedupCanonical(cutC).cutLineage()))
+    val nExact = inStage(docs, 3)(exactC.count())
 
     // 4. near-dup dedup (LSH candidates -> exact verify -> CC); only
     //    canonical docs survive. The DROP set (CC nodes labeled by
@@ -151,19 +159,19 @@ object CorpusBuild {
     // knownDocCount = nExact: the stage-3 boundary count just measured
     // this frame — threading it through skips lshVerifiedEdges' own
     // doc-count probe job (r21)
-    val drop = timed("4 lsh+cc (eager CC actions)")(
+    val drop = inStage(docs, 4)(
       Dedup.lshVerifiedNonCanonical(exactC, cfg.nearDupThreshold,
         knownDocCount = nExact))
-    val deduped = Caches.track(timed("4 near-dup ckpt")(
+    val deduped = Caches.track(inStage(docs, 4)(
       exactC.join(drop, Seq("doc_id"), "left_anti").cutLineage()))
-    val nNearDup = timed("4 near-dup dedup")(deduped.count())
+    val nNearDup = inStage(docs, 4)(deduped.count())
 
     // 5. sequence packing over the survivors — a THUNK: GlobalRank's
     // two-pass prefix sum runs driver-side collect jobs at CONSTRUCTION
     // time, so building the packed frame eagerly would charge report-
     // only callers (runReport) for a stage whose row count they already
     // know (packing never drops a doc)
-    val packed = () => graft.operators.GlobalRank
+    val packed = () => inStage(docs, 5)(graft.operators.GlobalRank
       .withGlobalCumSumBefore(
         deduped.select(col("doc_id"), col("text").as("clean_text"), col("n_tokens")),
         Seq(col("doc_id")), col("n_tokens"), "cum0")
@@ -171,7 +179,7 @@ object CorpusBuild {
         expr(s"cum0 div ${cfg.seqBudget}").cast("long").as("seq_id"),
         pmod(col("cum0"), lit(cfg.seqBudget)).cast("long").as("seq_offset"),
         (pmod(col("cum0"), lit(cfg.seqBudget)) + col("n_tokens") > cfg.seqBudget)
-          .as("spans_boundary"))
+          .as("spans_boundary")))
 
     (packed, Report(nRaw, nQuality, nAfterSpan, nExact, nNearDup))
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.ext.Checkpoints.CutOps
+import graft.functions.GraftFunctions.{cosineSim, topKByScore}
 
 /** End-to-end corpus deduplication (the LLM-pipeline north star): near-dup
   * edges -> connected components -> one canonical document per group.
@@ -289,8 +290,8 @@ object Dedup {
     connectedComponentsWithRounds(edges, maxIter)._1
 
   /** [[connectedComponents]] plus the number of large-star/small-star
-    * rounds actually run — instrumentation for scale measurement
-    * (examples/ScaleStress reports sweep counts at 10x/100x). */
+    * rounds actually run (DedupSpec and JobCountSpec pin round
+    * counts). */
   private[graft] def connectedComponentsWithRounds(
       edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
     // lazily CACHE (not checkpoint) the input: round 1's first action
@@ -763,11 +764,10 @@ object Dedup {
     // inherit the tiebreak, documented here (ADVICE r15).
     val edges = if (!guarded) verified
     else {
-      graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
       verified
         .groupBy(col("doc_b"))
-        .agg(expr(s"topk_by_score(cast(-doc_a as double), doc_a, " +
-          s"$MaxPartnersPerDoc)").as("top"))
+        .agg(topKByScore((-col("doc_a")).cast("double"), col("doc_a"),
+          MaxPartnersPerDoc).as("top"))
         .select(col("doc_b"), explode(col("top")).as("t"))
         .select(col("t.id").as("doc_a"), col("doc_b"))
     }
@@ -810,7 +810,6 @@ object Dedup {
       threshold: Double = 0.42,
       allowExactAllPairs: Boolean = false,
       maxExactRows: Long = 50000L): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     if (!allowExactAllPairs) {
       // limit(max+1).count(), not count(): the guard only needs "over the
       // ceiling or not", so it must not cost a full corpus scan on every
@@ -825,7 +824,7 @@ object Dedup {
     val a = emb.select(col("vec_id").as("doc_a"), col("embedding").as("ea"))
     val b = emb.select(col("vec_id").as("doc_b"), col("embedding").as("eb"))
     val edges = a.join(b, col("doc_a") < col("doc_b"))
-      .filter(expr("cosine_sim(ea, eb)") >= threshold)
+      .filter(cosineSim(col("ea"), col("eb")) >= threshold)
       .select("doc_a", "doc_b")
     labelAll(emb, connectedComponents(edges), "vec_id")
   }
@@ -852,7 +851,6 @@ object Dedup {
       numTables: Int = 12,
       hashesPerTable: Int = 0,
       corpusCount: Long = 0L): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     // AND-width ≤0 = auto ∝ log(corpus): bucket occupancy grows with
     // corpus density at fixed width — the measured fix (SCALE.md:
     // m 6→8 at 10x re-tightened growth to ~1.2x, zero recall loss on
@@ -867,7 +865,7 @@ object Dedup {
     val ea = emb.select(col("vec_id").as("doc_a"), col("embedding").as("ea"))
     val eb = emb.select(col("vec_id").as("doc_b"), col("embedding").as("eb"))
     val edges = cand.join(ea, "doc_a").join(eb, "doc_b")
-      .filter(expr("cosine_sim(ea, eb)") >= threshold)
+      .filter(cosineSim(col("ea"), col("eb")) >= threshold)
       .select("doc_a", "doc_b")
     labelAll(emb, connectedComponents(edges), "vec_id")
   }
@@ -933,7 +931,6 @@ object Dedup {
       hashesPerTable: Int = 0,
       corpusBuckets: Option[DataFrame] = None,
       corpusCount: Long = 0L): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(corpus.sparkSession)
     require(corpusBuckets.isEmpty || hashesPerTable > 0,
       "persisted-index calls must pin hashesPerTable to the width the " +
         "index was built with — auto-derivation can diverge as the corpus " +
@@ -962,7 +959,7 @@ object Dedup {
         val ec = corpus.select(col("vec_id").as("vec_corpus"), col("embedding").as("ea"))
         val eb = batch.select(col("vec_id").as("vec_new"), col("embedding").as("eb"))
         cand.join(ec, "vec_corpus").join(eb, "vec_new")
-          .withColumn("cos", expr("cosine_sim(ea, eb)"))
+          .withColumn("cos", cosineSim(col("ea"), col("eb")))
           .filter(col("cos") >= threshold)
           .select("vec_corpus", "vec_new", "cos")
       case _ => empty
@@ -988,7 +985,6 @@ object Dedup {
       threshold: Double = 0.9,
       nCells: Int = 0,
       corpusCount: Long = 0L): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     // ≤0 = auto: √n cells (Similarity.autoNCells, r10). For a
     // centroid-bucketed pair join the TOTAL cost is assignment
     // O(n·nCells·d) + pairs O((n²/nCells)·d); √n balances both at
@@ -1010,7 +1006,7 @@ object Dedup {
       col("cell"), col("vec_id").as("doc_b"), col("embedding").as("eb"))
     val edges = a.join(b, "cell")
       .filter(col("doc_a") < col("doc_b"))
-      .filter(expr("cosine_sim(ea, eb)") >= threshold)
+      .filter(cosineSim(col("ea"), col("eb")) >= threshold)
       .select("doc_a", "doc_b")
     labelAll(emb, connectedComponents(edges), "vec_id")
   }

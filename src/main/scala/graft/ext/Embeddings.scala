@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.ext.Checkpoints.CutOps
+import graft.functions.GraftFunctions.{squaredL2, topKByScore}
 
 /** Distributed linear-algebra primitives over an embedding corpus:
   * Lloyd's k-means and covariance/PCA. Part of the declared extension
@@ -61,8 +62,7 @@ object Embeddings {
     */
   def lloydAssign(e: DataFrame, cents: DataFrame,
       codegen: Boolean = true): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(e.sparkSession)
-    val d = if (codegen) expr("squared_l2(v, cv)") else sqDist(col("v"), col("cv"))
+    val d = if (codegen) squaredL2(col("v"), col("cv")) else sqDist(col("v"), col("cv"))
     e.crossJoin(broadcast(cents))
       .withColumn("d", d)
       .groupBy("vec_id")
@@ -149,7 +149,6 @@ object Embeddings {
     * every subspace. */
   def pqTrain(emb: DataFrame, m: Int = 8, ksub: Int = 16,
       iters: Int = 2): (DataFrame, Int) = {
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     pqTrainV(withV(emb), dim, m, ksub, iters)
   }
@@ -399,7 +398,6 @@ object Embeddings {
       m: Int = 8, ksub: Int = 16, nCells: Int = 0, nProbe: Int = 0,
       refine: Int = RefineAuto): DataFrame = {
     val spark = emb.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val (model, resid) = ivfPqFitWithResid(emb, m, ksub, nCells, nProbe)
     val refineDepth =
       if (refine == RefineAuto) autoRefine(model.n, model.nc, model.np, k)
@@ -503,7 +501,7 @@ object Embeddings {
       .filter(col("qid") =!= col("cid"))
       .withColumn("adist", adcU(col("codes"), col("lut")))
       .groupBy("qid")
-      .agg(expr(s"topk_by_score(-adist, cid, $rTake)").as("top"))
+      .agg(topKByScore(-col("adist"), col("cid"), rTake).as("top"))
       .select(col("qid"), explode(col("top")).as("t"))
       .select(col("qid"), col("t.id").as("cid"), (-col("t.score")).as("adist"))
     if (refineDepth <= 0) shortlist
@@ -514,9 +512,9 @@ object Embeddings {
       e.select(col("vec_id").as("cid"), col("v").as("cv2"))
         .join(broadcast(shortlist.select("qid", "cid")), "cid")
         .join(broadcast(qv), "qid")
-        .withColumn("adist", expr("squared_l2(qv, cv2)"))
+        .withColumn("adist", squaredL2(col("qv"), col("cv2")))
         .groupBy("qid")
-        .agg(expr(s"topk_by_score(-adist, cid, $k)").as("top"))
+        .agg(topKByScore(-col("adist"), col("cid"), k).as("top"))
         .select(col("qid"), explode(col("top")).as("t"))
         .select(col("qid"), col("t.id").as("cid"), (-col("t.score")).as("adist"))
     }
@@ -874,13 +872,8 @@ object Embeddings {
         a
       })
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dbg = sys.env.contains("GRAFT_PCA_DEBUG")
-    val tFit = System.nanoTime()
-    def mark(l: String): Unit = if (dbg)
-      System.err.println(f"[pca] $l at ${(System.nanoTime() - tFit) / 1e9}%.2f s")
     try {
       val d = vecs.first().length
-      mark("probe")
       require(k >= 1 && k <= d,
         s"top-k subspace needs 1 <= k <= d, got k=$k d=$d")
       // pass 1: n, per-dim sums and square sums (mu + total variance)
@@ -895,7 +888,6 @@ object Embeddings {
           acc
         },
         (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
-      mark("mu pass")
       val n = acc0(0).toLong
       require(n >= 2, s"PCA needs >= 2 vectors, got $n")
       val mu = Array.tabulate(d)(i => acc0(1 + i) / n)
@@ -953,7 +945,6 @@ object Embeddings {
       var it = 0
       var converged = false
       while (it < iters && !converged) {
-        val tPass = System.nanoTime()
         val y = covTimes(q)
         // column overlap with the previous basis BEFORE re-orthonormalizing
         val yn = y.map(_.clone())
@@ -971,9 +962,6 @@ object Embeddings {
         }
         q = yn
         converged = maxDelta < tol
-        if (sys.env.contains("GRAFT_PCA_DEBUG"))
-          System.err.println(f"[pca] it=$it maxDelta=$maxDelta%.2e " +
-            f"wall=${(System.nanoTime() - tPass) / 1e9}%.2f s")
         it += 1
       }
       // Rayleigh-Ritz over all kk columns: B = Qᵀ(Cov·Q), kk x kk —
@@ -1003,7 +991,6 @@ object Embeddings {
         if (trace <= 0.0) 0.0
         else math.min(theta.map(math.max(_, 0.0)).sum / trace, 1.0)
       bMu.destroy()
-      mark("fit done")
       (n, mu, theta, comps, explained)
     } finally vecs.unpersist()
   }

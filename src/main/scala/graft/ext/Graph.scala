@@ -296,8 +296,7 @@ object Graph {
     *    P(candidate) ≈ 0.97 at 3-gram Jaccard 0.6, 0.9 at 0.5), then
     *    the same verify. The oversized tail costs Σ bucket² within
     *    (block × band-signature) buckets instead of block² — measured
-    *    ~linear candidate growth at 10×/100× (ScaleStress er_candidates
-    *    row) — trading bounded recall on heavy-edit pairs (a 3-edit
+    *    ~linear candidate growth at 10×/100× (SCALE.md) — trading bounded recall on heavy-edit pairs (a 3-edit
     *    rewrite of a short name can shred most of its 3-grams; exact
     *    duplicates and 1-edit variants keep high Jaccard and are
     *    retained — GraphSpec plants both) for sub-quadratic growth.

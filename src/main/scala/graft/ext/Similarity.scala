@@ -5,6 +5,7 @@ import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.functions.GraftFunctions.{cosineSim, topKByScore}
 
 /** spark.ml-backed similarity / text-analysis operators (SURVEY §2.3
   * "Extension operators"). These are the scale paths; the exact
@@ -157,7 +158,6 @@ object Similarity {
       numTables: Int,
       maxDistance: Double): DataFrame = {
     val spark = emb.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val hashedOpt = hashedBuckets(emb, bucketLength, numTables)
     if (hashedOpt.isEmpty) return spark.emptyDataFrame
       .select(lit(0L).as("qid"), lit(0L).as("cid"), lit(0.0).as("cos")).limit(0)
@@ -176,10 +176,10 @@ object Similarity {
     val qe = emb.select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val ce = emb.select(col("vec_id").as("cid"), col("embedding").as("ce"))
     cand.join(qe, "qid").join(ce, "cid")
-      .withColumn("cos", expr("cosine_sim(qe, ce)"))
+      .withColumn("cos", cosineSim(col("qe"), col("ce")))
       .filter(col("cos") >= minCos)
       .groupBy("qid")
-      .agg(expr(s"topk_by_score(cos, cid, $k)").as("top"))
+      .agg(topKByScore(col("cos"), col("cid"), k).as("top"))
       .select(col("qid"), explode(col("top")).as("t"))
       .select(col("qid"), col("t.id").as("cid"), col("t.score").as("cos"))
   }
@@ -472,7 +472,6 @@ object Similarity {
     // cells, the tiny query side broadcasts into a join on cell (the
     // corpus never shuffles), and the bounded top-k heap keeps k rows
     // per query per partition. Empty query sets yield an empty frame.
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val probeCells = udf { (v: Vector) =>
       val (cs, ix) = bc2.value
       ix match {
@@ -501,7 +500,7 @@ object Similarity {
       .select(col("qid"), col("vec_id").as("cid"),
         dot(col("qf"), col("features")).as("cos"))
       .groupBy("qid")
-      .agg(expr(s"topk_by_score(cos, cid, $k)").as("top"))
+      .agg(topKByScore(col("cos"), col("cid"), k).as("top"))
       .select(col("qid"), explode(col("top")).as("t"))
       .select(col("qid"), col("t.id").as("cid"), col("t.score").as("cos"))
   }
@@ -974,8 +973,6 @@ object Similarity {
     * the query side drops into the LSH/IVF front ends like the
     * embedding paths. */
   def similarDocsTopK(docs: DataFrame, queries: DataFrame, k: Int = 10): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val tf = tfidf(docs)
     val norm = new org.apache.spark.ml.feature.Normalizer()
       .setInputCol("tfidf").setOutputCol("nv").setP(2.0)
@@ -1001,7 +998,7 @@ object Similarity {
       .select(col("qid"), col("doc_id").as("cid"),
         dot(col("qv"), col("nv")).as("cos"))
       .groupBy("qid")
-      .agg(expr(s"topk_by_score(cos, cid, $k)").as("top"))
+      .agg(topKByScore(col("cos"), col("cid"), k).as("top"))
       .select(col("qid"), explode(col("top")).as("t"))
       .select(col("qid"), col("t.id").as("cid"), col("t.score").as("cos"))
   }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, ExpressionColumns, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -95,10 +95,30 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def prettyName: String = "cosine_sim"
 }
 
-/** Registration: the idiomatic path is `spark.sql.extensions=
-  * graft.GraftExtensions`; `ensureRegistered` is the imperative twin for
-  * sessions the caller doesn't construct (e.g. the driver's). */
+/** The four native functions as Column builders, plus their SQL
+  * registration. Library code calls the builders, which wrap the
+  * Catalyst expressions directly and need no registry entry. SQL text
+  * needs the names registered: `spark.sql.extensions=
+  * graft.GraftExtensions` does that for every [[graft.Session]], and
+  * `ensureRegistered` is the imperative twin for sessions built outside
+  * the library. */
 object GraftFunctions {
+  import ExpressionColumns.{column, expression}
+
+  def cosineSim(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
+
+  def squaredL2(a: Column, b: Column): Column =
+    column(SquaredL2(expression(a), expression(b)))
+
+  /** Aggregate: the `k` highest-scoring `(id, score)` structs. */
+  def topKByScore(score: Column, id: Column, k: Int): Column =
+    column(TopKByScore(expression(score), expression(id), k)
+      .toAggregateExpression())
+
+  /** Aggregate: a theta sketch of the non-null `key`s. */
+  def thetaSketch(key: Column, lgK: Int): Column =
+    column(ThetaSketchAgg(expression(key), lgK).toAggregateExpression())
 
   val cosineSimBuilder: Seq[Expression] => Expression = {
     case Seq(a, b) => CosineSimilarity(a, b)

@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.ext.Checkpoints.CutOps
+import graft.functions.GraftFunctions.{cosineSim, topKByScore}
 
 /** Clustering / linear-algebra family over the embeddings table:
   * distributed Lloyd's k-means, the d x d covariance matrix, and PCA
@@ -528,7 +529,6 @@ object ClusterQ {
         |       CAST(SUM(CASE WHEN pred.plabel = q.ql THEN 1 ELSE 0 END) AS BIGINT) AS n_correct
         |FROM q JOIN pred ON pred.qid = q.qid
         |GROUP BY q.ql ORDER BY label""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.ensureRegistered(s)
       import org.apache.spark.sql.expressions.Window
       val e = Tables.embeddings(s, d)
       val q = e.filter(col("vec_id") < 500)
@@ -537,9 +537,9 @@ object ClusterQ {
       val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
         col("label").as("cl"))
       val top = broadcast(q.drop("ql")).join(c, col("qid") =!= col("cid"))
-        .withColumn("cos_sim", expr("cosine_sim(qe, ce)"))
+        .withColumn("cos_sim", cosineSim(col("qe"), col("ce")))
         .groupBy("qid")
-        .agg(expr("topk_by_score(cos_sim, cid, 10)").as("top"))
+        .agg(topKByScore(col("cos_sim"), col("cid"), 10).as("top"))
         .select(col("qid"), explode(col("top.id")).as("cid"))
         .join(c.select("cid", "cl"), "cid")
       val vote = top.groupBy("qid", "cl").agg(count(lit(1)).as("nv"))

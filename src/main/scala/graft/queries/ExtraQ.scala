@@ -4,6 +4,7 @@ import graft.{Det, QueryDef, Tables}
 import graft.ext.Multimodal
 import org.apache.spark.sql.functions._
 import graft.ext.Checkpoints.CutOps
+import graft.functions.GraftFunctions.{cosineSim, thetaSketch, topKByScore}
 
 /** Inventory stragglers: rolling-hash fingerprinting, embedding-cosine
   * near-dup pairs, and the multimodal decode/frame-sample plumbing.
@@ -497,11 +498,10 @@ object ExtraQ {
         |       CAST(COUNT(CASE WHEN hb = 1 THEN 1 END) AS BIGINT) AS exact_b,
         |       CAST(COUNT(CASE WHEN ha = 1 AND hb = 1 THEN 1 END) AS BIGINT) AS exact_common
         |FROM per""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val orders = Tables.orders(s, d)
       val sk = orders.agg(
-        expr("theta_sketch(CASE WHEN o_orderpriority = '1-URGENT' THEN o_custkey END, 12)").as("ska"),
-        expr("theta_sketch(CASE WHEN o_orderpriority = '2-HIGH' THEN o_custkey END, 12)").as("skb"))
+        thetaSketch(when(col("o_orderpriority") === "1-URGENT", col("o_custkey")), 12).as("ska"),
+        thetaSketch(when(col("o_orderpriority") === "2-HIGH", col("o_custkey")), 12).as("skb"))
         .head()
       val (ska, skb) = (sk.getAs[Array[Byte]]("ska"), sk.getAs[Array[Byte]]("skb"))
       val exact = orders.groupBy("o_custkey").agg(
@@ -715,7 +715,6 @@ object ExtraQ {
         |  SELECT qid, cid, cos_sim,
         |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, cid) AS rn
         |  FROM p) WHERE rn <= 10""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val e = Tables.embeddings(s, d)
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -723,7 +722,7 @@ object ExtraQ {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("qid").orderBy(col("cos_sim").desc, col("cid"))
       broadcast(q).join(c, col("qid") =!= col("cid"))
-        .withColumn("cos_sim", expr("cosine_sim(qe, ce)"))
+        .withColumn("cos_sim", cosineSim(col("qe"), col("ce")))
         .select(col("qid"), col("cid"), col("cos_sim"),
           row_number().over(w).cast("bigint").as("rn"))
         .filter(col("rn") <= 10)
@@ -748,15 +747,14 @@ object ExtraQ {
         |  SELECT qid, cid, cos_sim,
         |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_sim DESC, cid) AS rn
         |  FROM p) WHERE rn <= 10""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val e = Tables.embeddings(s, d)
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
       broadcast(q).join(c, col("qid") =!= col("cid"))
-        .withColumn("cos_sim", expr("cosine_sim(qe, ce)"))
+        .withColumn("cos_sim", cosineSim(col("qe"), col("ce")))
         .groupBy("qid")
-        .agg(expr("topk_by_score(cos_sim, cid, 10)").as("top"))
+        .agg(topKByScore(col("cos_sim"), col("cid"), 10).as("top"))
         .select(col("qid"), posexplode(col("top")).as(Seq("pos", "t")))
         .select(col("qid"), col("t.id").as("cid"), col("t.score").as("cos_sim"),
           (col("pos") + 1).cast("bigint").as("rn"))

@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.functions._
 import graft.ext.Checkpoints.CutOps
+import graft.functions.GraftFunctions.topKByScore
 
 /** Graph-shaped curation operators: link centrality (the web-corpus
   * quality prior) and blocked fuzzy entity linkage (the record-dedup
@@ -933,7 +934,6 @@ object GraphQ {
     import org.apache.spark.sql.{DataFrame, SparkSession}
 
     private def build(s: SparkSession, d: String): Seq[DataFrame] = {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       // Adaptive reduce width: the session's 32 shuffle partitions put
       // ~19M fact rows / ~56M pair rows in each task at the 1000x
       // fixture — the measured heap-OOM. Budget ~2M rows per reduce
@@ -969,7 +969,7 @@ object GraphQ {
         .agg(count(lit(1)).as("c"))
       val knn = co
         .groupBy("u")
-        .agg(expr("topk_by_score(cast(c as double), v, 3)").as("top"))
+        .agg(topKByScore(col("c").cast("double"), col("v"), 3).as("top"))
         .select(col("u"), explode(col("top")).as("t"))
         .select(col("u"), col("t.id").as("v"),
           col("t.score").cast("long").as("c"))

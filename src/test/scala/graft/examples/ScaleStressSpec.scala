@@ -1,12 +1,18 @@
 package graft.examples
 
 import graft.SparkSpec
+import graft.ext.{Graph, Similarity}
+import graft.queries.SetSimQ
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Invariants of the derived scale fixture (SCALE.md "Measured scale
   * curve"): replication must change the workload's SIZE without
   * changing its SHAPE — same token/vector distributions, and no
-  * artificial near-dup mass planted in any LSH bucket. */
+  * artificial near-dup mass planted in any LSH bucket. The last three
+  * tests run the approximate operators' own checks (BRP recall, no
+  * false positives from the set-similarity fallback, k-core peel
+  * convergence) on the same fixture. */
 class ScaleStressSpec extends SparkSpec {
 
   private lazy val out = {
@@ -88,5 +94,73 @@ class ScaleStressSpec extends SparkSpec {
     assert(high <= jac.size / 100,
       s"$high of ${jac.size} replicas are near-dups of their originals")
     assert(jac.sum / jac.size < 0.3, f"mean replica jaccard ${jac.sum / jac.size}%.2f")
+  }
+
+  test("auto-knob BRP keeps recall@10 >= 0.95 against brute force") {
+    // The auto-IVF (>= 0.95) and IVF-PQ (>= 0.9) recall gates hold from
+    // 10x sf0.1 up and stay in ScaleStress: on these 1000 vectors
+    // auto-IVF measures 0.70 and IVF-PQ 0.84.
+    val emb = spark.read.parquet(s"$out/embeddings.parquet")
+    val all = emb.select("vec_id", "embedding").collect()
+      .map { r =>
+        val v = r.getSeq[Float](1).map(_.toDouble).toArray
+        (r.getLong(0), v.map(_ / math.sqrt(v.map(x => x * x).sum)))
+      }
+    val truth = all.sortBy(_._1).take(50).flatMap { case (q, qv) =>
+      all.filter(_._1 != q)
+        .map { case (id, v) => (id, qv.indices.map(i => qv(i) * v(i)).sum) }
+        .sortBy(p => (-p._2, p._1)).take(10).map(p => (q, p._1))
+    }.toSet
+    val qids = emb.select("vec_id").orderBy("vec_id").limit(50)
+    val got = Similarity.annTopK(emb, queries = qids, k = 10,
+        bucketLength = Similarity.autoBucketLength(all.length.toLong),
+        numTables = 8, maxDistance = 2.0)
+      .select("qid", "cid").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    graft.ext.Caches.releaseAll(spark)
+    val recall = (got & truth).size.toDouble / truth.size
+    assert(recall >= 0.95, f"auto-BRP recall@10 $recall%.3f")
+  }
+
+  test("set-similarity LSH fallback emits no false positives") {
+    val sh = spark.read.parquet(s"$out/documents.parquet")
+      .select(col("doc_id"), explode(graft.functions.TextShingles.shingle3(
+        split(col("text"), "\\s+"))).as("shingle"))
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("doc_a", "doc_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val truth = pairs(SetSimQ.setSimJoinExact(sh, 4, 5,
+      maxCandidatePairs = Long.MaxValue))
+    val fb = pairs(SetSimQ.setSimJoin(sh, 4, 5, maxCandidatePairs = 0L))
+    spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
+    assert(truth.nonEmpty)
+    assert(fb.subsetOf(truth), s"false positives: ${fb.diff(truth)}")
+  }
+
+  test("k-core peel on the replicated co-order kNN graph converges by 8 rounds") {
+    ScaleStress.buildLineitemFixture(spark, sf("sf0.001"), out, 2)
+    val li = spark.read.parquet(s"$out/lineitem.parquet")
+      .select(col("l_orderkey"), col("l_suppkey")).distinct()
+    val co = li.as("x").join(li.as("y"),
+        col("x.l_orderkey") === col("y.l_orderkey")
+          && col("x.l_suppkey") =!= col("y.l_suppkey"))
+      .groupBy(col("x.l_suppkey").as("u"), col("y.l_suppkey").as("v"))
+      .agg(count(lit(1)).as("c"))
+    val und = co
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("u").orderBy(col("c").desc, col("v"))))
+      .filter(col("rn") <= 3)
+      .select(least(col("u"), col("v")).as("a"),
+        greatest(col("u"), col("v")).as("b"))
+      .distinct()
+    def coreness(rounds: Int): Map[Long, Int] =
+      Graph.corenessCapped(und, 4, rounds)
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val c16 = coreness(16)
+    graft.ext.Caches.releaseAll(spark)
+    val c8 = coreness(8)
+    graft.ext.Caches.releaseAll(spark)
+    assert(c16.values.exists(_ > 1), "the kNN graph has a non-trivial core")
+    assert(c8 == c16, "k-core peel not converged by 8 rounds")
   }
 }

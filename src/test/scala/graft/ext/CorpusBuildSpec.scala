@@ -96,4 +96,35 @@ class CorpusBuildSpec extends SparkSpec {
     assert(ra == rb)
     assert(a == b)
   }
+
+  test("every job a build starts carries one of the five stage descriptions") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null)
+          seen.add((e.properties.getProperty("spark.jobGroup.id"),
+            e.properties.getProperty("spark.job.description")))
+    }
+    val docs = Tables.documents(spark, sf())
+    sc.addSparkListener(listener)
+    try {
+      val ((group, after), n) = countingJobs {
+        val g = sc.getLocalProperty("spark.jobGroup.id")
+        CorpusBuild.run(docs)
+        (g, sc.getLocalProperty("spark.job.description"))
+      }
+      Caches.releaseAll(spark)
+      org.apache.spark.ListenerBusDrain(sc)
+      import scala.jdk.CollectionConverters._
+      val descs = seen.asScala.toSeq.filter(_._1 == group).map(_._2)
+      assert(n > 0 && descs.size == n, s"$n jobs counted, ${descs.size} seen")
+      val stray = descs.filterNot(CorpusBuild.StageDescriptions.contains)
+      assert(stray.isEmpty, s"jobs outside a stage: ${stray.distinct}")
+      assert(CorpusBuild.StageDescriptions.forall(descs.contains),
+        s"stages without a job: ${CorpusBuild.StageDescriptions.diff(descs)}")
+      assert(after == "counted", "the caller's job description is restored")
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -101,4 +101,28 @@ class MstSpec extends SparkSpec {
     assert(got === prim(edges))
     assert(got.size === 3, "3-node tree (2 edges) + 2-node tree (1 edge)")
   }
+
+  test("reliable checkpoint mode: same backbone, cuts written to the checkpoint dir") {
+    val r = new scala.util.Random(7)
+    val n = 80
+    val chords = (1 to 160).map { _ =>
+      val a = r.nextInt(n) + 1L; val b = r.nextInt(n) + 1L
+      (math.min(a, b), math.max(a, b))
+    }.filter(e => e._1 != e._2)
+    val edges = ((1L until n).map(i => (i, i + 1)) ++ chords).distinct
+      .zipWithIndex.map { case ((a, b), i) => (a, b, (i.toLong * 2654435761L) % 100003L) }
+    val local = backbone(edges)
+    Caches.releaseAll(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft-mst-ckpt").toFile
+    spark.conf.set("graft.checkpoint.dir", dir.toString)
+    val reliable = try backbone(edges)
+      finally spark.conf.unset("graft.checkpoint.dir")
+    Caches.releaseAll(spark)
+    def parts(f: java.io.File): Int =
+      if (f.isDirectory) f.listFiles().map(parts).sum
+      else if (f.getName.startsWith("part-")) 1 else 0
+    assert(reliable === local)
+    assert(local === prim(edges))
+    assert(parts(dir) > 0, "reliable mode writes its cuts under the configured dir")
+  }
 }

@@ -111,4 +111,30 @@ class CosineSimilaritySpec extends SparkSpec {
     info(f"native=$tn%.2fs hof=$th%.2fs speedup=${th / tn}%.1fx")
     assert(tn <= th * 1.2, f"native $tn%.2fs should not be slower than HOF $th%.2fs")
   }
+
+  test("library ops call their expressions directly: a session without the four functions returns the same rows") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val bare = spark.newSession()
+    val registry = bare.sessionState.functionRegistry
+    val names = Seq("cosine_sim", "topk_by_score", "theta_sketch", "squared_l2")
+      .map(FunctionIdentifier(_))
+    names.foreach(registry.dropFunction)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      bare.sql("SELECT cosine_sim(array(cast(1.0 as float)), array(cast(1.0 as float)))")
+        .collect()
+    }
+    def ann(s: SparkSession): Seq[String] =
+      graft.ext.Similarity.annTopK(graft.Tables.embeddings(s, sf()),
+          Seq(0L, 1L, 2L, 3L, 4L), k = 10)
+        .collect().map(_.toString).sorted.toSeq
+    def theta(s: SparkSession): Seq[String] =
+      graft.SparkEntry.queries("agg_theta_intersect_twin")(s, sf())
+        .collect().map(_.toString).toSeq
+    assert(ann(bare).nonEmpty)
+    assert(ann(bare) == ann(spark))
+    assert(theta(bare) == theta(spark))
+    assert(!names.exists(registry.functionExists), "library code registered a function")
+    graft.ext.Caches.releaseAll(spark); graft.ext.Caches.releaseAll(bare)
+  }
 }
