@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.InputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md /
   * FIXTURES.md). All queries take a scale-factor directory and read
@@ -11,8 +17,50 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The table as `spark.read.parquet` reads it, with the schema taken
+    * from the first data file's footer on the driver ([[footerSchema]]),
+    * so no schema-inference job runs. A path with no data file goes
+    * through Spark's inference and fails there. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    parquetFiles(spark, path).headOption match {
+      case Some(f) => spark.read.schema(footerSchema(spark, f)).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** The schema Spark infers for a parquet file from its footer (as
+    * `ParquetFileFormat.readSchema` does): the Spark schema the footer
+    * carries when Spark wrote the file, else the parquet schema
+    * converted with the session's settings (`nanosAsLong` among them). */
+  private def footerSchema(spark: SparkSession, file: InputFile): StructType = {
+    val meta = footer(file)(_.getFileMetaData)
+    Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case st: StructType => st }
+      .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        .convert(meta.getSchema))
+  }
+
+  /** A parquet table's non-empty data files, in path order: a
+    * single-file table (the test fixtures) or a directory of part files
+    * (ScaleStress replicas). */
+  private def parquetFiles(spark: SparkSession, path: String): Seq[InputFile] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def leafFiles(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.sortBy(_.getPath.getName)
+        .flatMap(leafFiles)
+      else if (st.getPath.getName.endsWith(".parquet") && st.getLen > 0) Seq(st)
+      else Nil
+    leafFiles(fs.getFileStatus(root)).map(HadoopInputFile.fromStatus(_, conf))
+  }
+
+  private def footer[T](file: InputFile)(read: ParquetFileReader => T): T = {
+    val r = ParquetFileReader.open(file)
+    try read(r) finally r.close()
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "nation")
@@ -52,20 +100,6 @@ object Tables {
     * metadata a table format's statistics would serve. Handles both a
     * single-file table (the test fixtures) and a directory of part
     * files (ScaleStress replicas). Not a cache: re-read per call. */
-  def parquetRowCount(spark: SparkSession, dir: String, name: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = root.getFileSystem(conf)
-    def leafFiles(st: org.apache.hadoop.fs.FileStatus)
-        : Seq[org.apache.hadoop.fs.FileStatus] =
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leafFiles)
-      else if (st.getPath.getName.endsWith(".parquet") && st.getLen > 0) Seq(st)
-      else Nil
-    leafFiles(fs.getFileStatus(root)).map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromStatus(f, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
+  def parquetRowCount(spark: SparkSession, dir: String, name: String): Long =
+    parquetFiles(spark, s"$dir/$name.parquet").map(footer(_)(_.getRecordCount)).sum
 }

@@ -3,6 +3,9 @@ package graft.api
 import graft.io.{ChangelogSink, Sources}
 import graft.streaming.{ChangeDetector, ChangeEvent, KeyedFold, KeyedRecord, StatefulStore, StateEntry}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.datasources.v2.state.DriverStateScan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, TTLConfig, Trigger}
 
@@ -132,7 +135,17 @@ final case class SamsaStream(
   /** Point lookup against the checkpointed store — R5's `query(key)`
     * (storage.py:208-219) from outside the stream. A transformWithState
     * store names its state variable; a flatMapGroupsWithState store has
-    * one unnamed state, holding the value under `groupState`. */
+    * one unnamed state, holding the value under `groupState`.
+    *
+    * One lookup opens one state store: partition
+    * [[SamsaStream.partitionOf]]`(key, n)`, where `n` is the number of
+    * partition directories the checkpoint holds. It is read on the
+    * driver, with no Spark job, up to the first row with `key`, and
+    * closed before this returns. The lookup falls back to scanning every
+    * partition in a Spark job, with one WARN naming the checkpoint, when
+    * the listed partitions are not exactly `0..n-1` or when the first row
+    * read does not hash to the partition it came from (a checkpoint
+    * written with another partitioning). A null key finds nothing. */
   def query(spark: SparkSession, checkpoint: String, key: String): Option[String] = {
     val (state, value) = store match {
       case StoreType.RocksDB => (StatefulStore.readState(spark, checkpoint), "value.value")
@@ -140,15 +153,57 @@ final case class SamsaStream(
         (spark.read.format("statestore").option("path", checkpoint).load(),
           "value.groupState.value")
     }
-    val rows = state
-      .select(col("key.value").as("k"), col(value).as("v"))
-      .filter(col("k") === key)
-      .collect()
-    rows.headOption.map(_.getString(1))
+    if (key == null) None
+    else SamsaStream.lookupOne(state, value, key) match {
+      case Right(found) => found
+      case Left(reason) =>
+        SamsaStream.log.warn(s"query on checkpoint $checkpoint scans every state " +
+          s"partition: $reason")
+        state.select(col("key.value").as("k"), col(value).as("v"))
+          .filter(col("k") === key)
+          .collect().headOption.map(_.getString(1))
+    }
   }
 }
 
 object SamsaStream {
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.api.SamsaStream")
+
+  /** The state partition of `key` in a store of `n` partitions: the
+    * `HashPartitioning` that `groupByKey(_.key)` puts in front of the
+    * stateful operator, `pmod(murmur3(key, seed 42), n)`. */
+  def partitionOf(key: String, n: Int): Int =
+    HashPartitioning(Seq(Literal(key)), n).partitionIdExpression.eval().asInstanceOf[Int]
+
+  /** Whether listed state partition ids are exactly `0..n-1`, n ≥ 1. */
+  def contiguous(ids: Seq[Int]): Boolean = ids.nonEmpty && ids.sorted == ids.indices
+
+  /** Whether a row with `key`, read from partition `p` of `n`, agrees
+    * that the store was partitioned by [[partitionOf]]. */
+  def confirms(key: String, p: Int, n: Int): Boolean = partitionOf(key, n) == p
+
+  /** `key`'s value read from its one partition of `state` (a
+    * `statestore` frame), or why that partition cannot be trusted. */
+  private def lookupOne(state: DataFrame, value: String, key: String)
+      : Either[String, Option[String]] = {
+    val scan = DriverStateScan(state)
+    val ids = scan.partitionIds
+    if (!contiguous(ids)) Left(s"its partitions ${ids.mkString(",")} are not 0..n-1")
+    else {
+      val n = ids.length
+      val p = partitionOf(key, n)
+      scan.read(p, "key.value", value) { rows =>
+        if (!rows.hasNext) Right(None)
+        else {
+          val first = rows.next()
+          if (!confirms(first.head, p, n))
+            Left(s"key ${first.head} read from partition $p does not hash to it at n=$n")
+          else Right((Iterator(first) ++ rows).collectFirst { case Seq(`key`, v) => v })
+        }
+      }
+    }
+  }
+
   /** RocksDB-comfortable state bytes per store instance. Measured band
     * ~100 MB–1 GB (SCALE.md r18 partition sweep: fixed per-store
     * open/commit costs dominate below it; single-store restore latency

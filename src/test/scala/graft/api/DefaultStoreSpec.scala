@@ -53,6 +53,17 @@ class DefaultStoreSpec extends SparkSpec {
     assert(rocks._2 == Map("n1" -> Some("down"), "n2" -> None, "n3" -> Some("up"), "n4" -> None))
   }
 
+  test("four lookups on a 4-partition Default store read one partition's files each") {
+    val (stream, ckpt) = StateStores.build(spark, StoreType.Default, 4, batches)
+    var got = Map.empty[String, Option[String]]
+    val logged = graft.LogCapture("org.apache.spark.sql.execution.streaming") {
+      got = Seq("n1", "n2", "n3", "n4").map(k => k -> stream.query(spark, ckpt, k)).toMap
+    }
+    assert(got == Map("n1" -> Some("down"), "n2" -> None, "n3" -> Some("up"), "n4" -> None))
+    val noChecksum = logged.count(_._2.contains("No checksum file found"))
+    assert(noChecksum <= 8, s"$noChecksum checksum WARNs, at most 8 (2 files of one partition, 4 lookups)")
+  }
+
   test("a ttl on the Default store is rejected when the query is built") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext

@@ -3,6 +3,7 @@ package graft.ext
 import java.nio.file.Files
 
 import graft.SparkSpec
+import graft.api.{StateStores, StoreType}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -76,4 +77,14 @@ class JobCountSpec extends SparkSpec {
     finally edges.unpersist()
     assert(jobs == 8, s"one label-propagation sweep ran $jobs jobs, pinned 8")
   }
+
+  for (k <- Seq(1, 3, 8))
+    test(s"a point lookup runs no Spark job: K=$k") {
+      val keys = (0 until 30).map(i => s"k$i")
+      val (stream, ckpt) = StateStores.build(spark, StoreType.RocksDB, k,
+        Seq(keys.map(key => StateStores.rec(key, s"v-$key", 1000))))
+      val (got, jobs) = countingJobs(stream.query(spark, ckpt, "k7"))
+      assert(got == Some("v-k7"))
+      assert(jobs == 0, s"one lookup ran $jobs jobs, pinned 0")
+    }
 }

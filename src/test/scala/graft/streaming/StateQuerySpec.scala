@@ -1,9 +1,12 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{LogCapture, SparkSpec}
+import graft.api.{SamsaStream, StateStores, StoreType}
+import graft.api.StateStores.rec
+import org.apache.spark.sql.execution.datasources.v2.state.DriverStateScan
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 
 /** R5 parity: samsa's `query(key)` point lookup
@@ -40,4 +43,79 @@ class StateQuerySpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(kv == Map("n1" -> "down", "n2" -> "up"), kv.toString)
   }
+
+  private val plain = (0 until 60).map(i => s"k$i")
+  private val odd = Seq("", " ", "\t \n", "ключ", "日本語キー", "emoji 🎉",
+    "e\u0301", "ａ")
+  private val tombstoned = plain.filter(_.endsWith("3")) ++ Seq("ключ", " ")
+  private val updated = plain.filter(_.endsWith("7")) :+ ""
+  private val absent = Seq("absent", "k60", " k1", "k1 ", "不在", "ключи", "  ")
+
+  /** One batch writing every key, then one that tombstones some and
+    * overwrites others. */
+  private val batches = Seq(
+    (plain ++ odd).zipWithIndex.map { case (k, i) => rec(k, s"v1-$k", 1000L + i) },
+    tombstoned.map(rec(_, null, 5000)) ++ updated.map(k => rec(k, s"v2-$k", 5001)))
+
+  private val stored = (plain ++ odd).filterNot(tombstoned.contains).toSet
+
+  for (store <- Seq(StoreType.RocksDB, StoreType.Default); k <- Seq(1, 3, 8))
+    test(s"point lookup equals the full-scan lookup: $store, K=$k") {
+      val (stream, ckpt) = StateStores.build(spark, store, k, batches)
+      val full = StateStores.fullScan(spark, store, ckpt)
+      assert(full.keySet == stored)
+      assert(updated.forall(u => full(u)._1 == s"v2-$u"))
+      full.foreach { case (key, (_, pid)) =>
+        assert(SamsaStream.partitionOf(key, k) == pid, s"key '$key'")
+      }
+      val keys = plain.filter(_.endsWith("1")) ++ odd ++ tombstoned ++ updated ++ absent
+      val warns = LogCapture("graft.api.SamsaStream") {
+        keys.foreach { key =>
+          assert(stream.query(spark, ckpt, key) == full.get(key).map(_._1), s"key '$key'")
+        }
+      }
+      assert(warns.isEmpty, warns.toString)
+    }
+
+  test("the partition guards reject a wrong partition count or a gap") {
+    val (_, ckpt) = StateStores.build(spark, StoreType.RocksDB, 3, batches)
+    val full = StateStores.fullScan(spark, StoreType.RocksDB, ckpt)
+    assert(full.forall { case (key, (_, p)) => SamsaStream.confirms(key, p, 3) })
+    for (wrong <- Seq(1, 2, 4, 6, 8))
+      assert(!full.forall { case (key, (_, p)) => SamsaStream.confirms(key, p, wrong) }, s"n=$wrong")
+    val firstKeys = (0 until 3).map { p =>
+      DriverStateScan(StatefulStore.readState(spark, ckpt)).read(p, "key.value")(_.next().head)
+    }
+    assert(firstKeys.zipWithIndex.forall { case (key, p) => SamsaStream.confirms(key, p, 3) })
+
+    assert(SamsaStream.contiguous(Seq(0)))
+    assert(SamsaStream.contiguous(Seq(2, 0, 1)))
+    assert(!SamsaStream.contiguous(Nil))
+    assert(!SamsaStream.contiguous(Seq(1, 2)))
+    assert(!SamsaStream.contiguous(Seq(0, 2)))
+    assert(!SamsaStream.contiguous(Seq(0, 1, 1)))
+  }
+
+  private def swap(a: Path, b: Path): Unit = {
+    val tmp = a.resolveSibling("swap")
+    Files.move(a, tmp)
+    Files.move(b, a)
+    Files.move(tmp, b)
+  }
+
+  for (store <- Seq(StoreType.RocksDB, StoreType.Default))
+    test(s"a checkpoint partitioned another way falls back to the full scan, loudly: $store") {
+      val (stream, ckpt) = StateStores.build(spark, store, 3, batches)
+      val full = StateStores.fullScan(spark, store, ckpt)
+      // partition 0's directory also holds the Default store's schema
+      val parts = Paths.get(ckpt, "state", "0")
+      swap(parts.resolve("1"), parts.resolve("2"))
+      val key = full.keys.toSeq.sorted.find(SamsaStream.partitionOf(_, 3) == 1).get
+      var got: Option[String] = None
+      val warns = LogCapture("graft.api.SamsaStream") {
+        got = stream.query(spark, ckpt, key)
+      }
+      assert(got == Some(full(key)._1))
+      assert(warns.size == 1 && warns.head._2.contains(ckpt), warns.toString)
+    }
 }
