@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.io.{ChangelogSink, Sources}
+import graft.io.{ChangelogSink, CheckpointFiles, Sources}
 import graft.streaming.{ChangeDetector, ChangeEvent, KeyedFold, KeyedRecord, StatefulStore, StateEntry}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
@@ -61,13 +61,24 @@ final case class SamsaStream(
     configure(spark)
   }
 
-  /** Session configured for this stream's state engine. Call before
-    * building the query (provider class is read at query start). */
+  /** Session configured for this stream's state engine: the settings of
+    * [[SamsaStream.stateEngine]]. Call before starting the query; they
+    * are read at query start.
+    *
+    * - The store's provider class.
+    * - RocksDB only: changelog checkpointing, so a commit uploads the
+    *   batch's changes, not a snapshot (samsa's changelog write,
+    *   storage.py:190-206).
+    * - [[graft.io.CheckpointFiles]] as the checkpoint file manager: the
+    *   state-store commits and the offsets, commits and metadata logs on
+    *   a `file:` checkpoint go through Hadoop's `FileSystem` API. Spark's
+    *   default `FileContext` manager starts a `readlink` process per path
+    *   it renames when `libhadoop` is absent: 64 per micro-batch of a
+    *   3-partition change detector (16 per state-store commit, 8 each for
+    *   the offsets and commits entries), most of the batch's commit time.
+    *   With this manager there are none. Other schemes keep the default. */
   def configure(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", store.providerClass)
-    if (store == StoreType.RocksDB)
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+    SamsaStream.stateEngine(store).foreach { case (k, v) => spark.conf.set(k, v) }
     spark
   }
 
@@ -168,6 +179,16 @@ final case class SamsaStream(
 
 object SamsaStream {
   private val log = org.slf4j.LoggerFactory.getLogger("graft.api.SamsaStream")
+
+  /** The session settings of `store`'s state engine, as
+    * [[SamsaStream.configure]] sets them. */
+  def stateEngine(store: StoreType): Map[String, String] =
+    Map(
+      "spark.sql.streaming.stateStore.providerClass" -> store.providerClass,
+      "spark.sql.streaming.checkpointFileManagerClass" -> classOf[CheckpointFiles].getName) ++
+      (if (store == StoreType.RocksDB)
+        Map("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+      else Map.empty)
 
   /** The state partition of `key` in a store of `n` partitions: the
     * `HashPartitioning` that `groupByKey(_.key)` puts in front of the

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites: [[graft.Session]]'s settings (the
   * configuration Bench times and ExplainOne prints), plus a private
-  * warehouse dir and the RocksDB state store (required by
+  * warehouse dir and the RocksDB state engine exactly as
+  * `SamsaStream.configure` sets it (the store is required by
   * transformWithState; also the samsa-parity engine choice).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -47,12 +48,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = Session.builder()
+    val s = graft.api.SamsaStream.stateEngine(graft.api.StoreType.RocksDB)
+      .foldLeft(Session.builder()) { case (b, (k, v)) => b.config(k, v) }
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

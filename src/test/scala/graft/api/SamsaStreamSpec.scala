@@ -85,5 +85,7 @@ class SamsaStreamSpec extends SparkSpec {
     s.configure(spark)
     assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
       .contains("RocksDB"))
+    assert(spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+      == classOf[graft.io.CheckpointFiles].getName)
   }
 }

@@ -3,11 +3,14 @@ package graft.streaming
 import graft.{LogCapture, SparkSpec}
 import graft.api.{SamsaStream, StateStores, StoreType}
 import graft.api.StateStores.rec
+import org.apache.spark.BroadcastBlocks
 import org.apache.spark.sql.execution.datasources.v2.state.DriverStateScan
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 /** R5 parity: samsa's `query(key)` point lookup
   * (/root/reference/samsa/kafka/storage.py:208-219) from OUTSIDE the
@@ -118,4 +121,16 @@ class StateQuerySpec extends SparkSpec {
       assert(got == Some(full(key)._1))
       assert(warns.size == 1 && warns.head._2.contains(ckpt), warns.toString)
     }
+
+  test("twenty lookups leave no broadcast block on the driver") {
+    val (stream, ckpt) = StateStores.build(spark, StoreType.RocksDB, 3, batches)
+    val sc = spark.sparkContext
+    val before = BroadcastBlocks(sc)
+    (0 until 20).foreach(i => assert(stream.query(spark, ckpt, s"k$i").isDefined == stored(s"k$i")))
+    // Broadcast.destroy removes the blocks asynchronously
+    eventually(timeout(30.seconds), interval(100.millis)) {
+      val left = BroadcastBlocks(sc) -- before
+      assert(left.isEmpty, left)
+    }
+  }
 }
