@@ -2,6 +2,7 @@ package graft.ext
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped registry of the intermediates that `ext/` entry
@@ -15,9 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * call `Caches.releaseAll(spark)` — it unpersists only the
   * intermediates this library registered, not your caches. Re-using a
   * returned frame AFTER release recomputes it (normal lazy semantics) —
-  * except connected-components results, whose `localCheckpoint`
-  * lineage cut makes them single-lifecycle: consume, release, rebuild
-  * if needed again.
+  * except connected-components results, which read their last round's
+  * persisted or locally checkpointed blocks and are single-lifecycle:
+  * consume, release, rebuild if needed again.
   *
   * References are STRONG on purpose: the cached data lives in the
   * executors' block managers regardless of driver-side Dataset
@@ -36,22 +37,34 @@ object Caches {
     * to an unbounded registry). */
   private val warnThreshold = 64
 
+  /** Per session, one release action per tracked intermediate. */
   private val reg =
-    new ConcurrentHashMap[SparkSession, ConcurrentLinkedQueue[DataFrame]]()
+    new ConcurrentHashMap[SparkSession, ConcurrentLinkedQueue[() => Unit]]()
   private val warned =
     new ConcurrentHashMap[SparkSession, java.lang.Boolean]()
 
   /** Register a frame the library just persisted. Returns it. */
   private[graft] def track(df: DataFrame): DataFrame = {
-    val q = reg.computeIfAbsent(df.sparkSession,
-      _ => new ConcurrentLinkedQueue[DataFrame]())
-    q.add(df)
+    register(df.sparkSession, () => hardUnpersist(df))
+    df
+  }
+
+  /** Register an RDD the library just persisted on `spark`'s context
+    * (connected components' last round). Returns it. */
+  private[graft] def track[T](spark: SparkSession, rdd: RDD[T]): RDD[T] = {
+    register(spark, () => rdd.unpersist(blocking = false))
+    rdd
+  }
+
+  private def register(spark: SparkSession, release: () => Unit): Unit = {
+    val q = reg.computeIfAbsent(spark,
+      _ => new ConcurrentLinkedQueue[() => Unit]())
+    q.add(release)
     if (q.size() > warnThreshold &&
-        warned.putIfAbsent(df.sparkSession, java.lang.Boolean.TRUE) == null)
+        warned.putIfAbsent(spark, java.lang.Boolean.TRUE) == null)
       log.warn(s"graft.ext.Caches is tracking > $warnThreshold persisted " +
         "intermediates on one SparkSession — call Caches.releaseAll(spark) " +
         "between pipeline invocations or executor storage will accumulate")
-    df
   }
 
   /** Unpersist a frame through BOTH storage paths: the CacheManager
@@ -90,10 +103,10 @@ object Caches {
     warned.remove(spark)
     val q = reg.remove(spark)
     if (q != null) {
-      var df = q.poll()
-      while (df != null) {
-        hardUnpersist(df)
-        df = q.poll()
+      var release = q.poll()
+      while (release != null) {
+        release()
+        release = q.poll()
       }
     }
   }

@@ -1,7 +1,8 @@
 package graft.ext
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Lineage cuts for the iterative operators (connected components,
@@ -47,35 +48,35 @@ object Checkpoints {
   private val applied =
     new java.util.concurrent.ConcurrentHashMap[(SparkContext, String), String]()
 
-  private def configuredDir(df: DataFrame): Option[String] = {
-    val conf = df.sparkSession.conf
+  private def configuredDir(spark: SparkSession): Option[String] = {
+    val conf = spark.conf
     conf.getOption("graft.checkpoint.dir")
       .orElse(conf.getOption("spark.graft.checkpoint.dir"))
       .filter(_.nonEmpty)
   }
 
+  /** The configured `graft.checkpoint.dir`, set as the SparkContext's
+    * checkpoint dir on first use; None in local mode. */
+  private def reliableDir(spark: SparkSession): Option[String] =
+    configuredDir(spark).map { dir =>
+      val sc = spark.sparkContext
+      applied.computeIfAbsent((sc, dir), _ => { sc.setCheckpointDir(dir); dir })
+    }
+
   /** True when `graft.checkpoint.dir` is configured — i.e. [[cut]]
-    * would write a RELIABLE checkpoint. Iterative loops use this to
-    * pick their in-loop cadence. LOCAL mode cuts every round: a
-    * `localCheckpoint` is nearly free, but its blocks cannot be
-    * recomputed, so the cut IS the round's only copy. RELIABLE mode
-    * cuts every [[stride]] rounds and runs [[persistRound]] between:
-    * each of those rounds is a flat `LogicalRDD` leaf too, so no
-    * round's plan nests an earlier one, but its lost blocks recompute
-    * from lineage back to the last durable cut. That trades at most
-    * `stride` rounds of recovery recompute for proportionally fewer
-    * checkpoint write-throughs (measured r20 on the 5M-node reliable
-    * A/B: per-round cuts were most of CC's +21.6% reliable tax).
+    * would write a RELIABLE checkpoint. The BPE merge loop picks its
+    * cadence with this: LOCAL mode cuts every step (a `localCheckpoint`
+    * is nearly free, but its blocks cannot be recomputed, so the cut IS
+    * the step's only copy); RELIABLE mode cuts every [[stride]] steps
+    * and runs [[persistRound]] between, trading at most `stride` steps
+    * of recovery recompute for proportionally fewer checkpoint
+    * write-throughs (measured r20 on the 5M-node reliable CC A/B:
+    * per-round cuts were most of CC's +21.6% reliable tax).
     *
-    * The fork stays although persist rounds are flat. A one-cadence
-    * prototype (local mode also persisting between stride cuts) was
-    * measured on perfbench `cc_local`: op_ms_p50 went 5 106 → 4 385,
-    * 3 821 → 4 337, 4 146 → 4 859 and 4 431 → 4 738 ms on seeds 1-4
-    * (slower on 3 of 4), and traced seeds 1-3 saved 3 of 48 jobs but
-    * raised job-busy time on all three (1 323 → 2 301, 2 059 → 2 255,
-    * 1 840 → 2 345 ms). Persisting and reading back a round costs more
-    * than a local cut. */
-  def reliableModeOn(df: DataFrame): Boolean = configuredDir(df).isDefined
+    * Connected components no longer forks on the mode: its RDD rounds
+    * persist every round and cut every [[stride]] rounds in both modes
+    * (see [[cutRdd]] and `Dedup.connectedComponents`). */
+  def reliableModeOn(df: DataFrame): Boolean = configuredDir(df.sparkSession).isDefined
 
   /** A round of a reliable-mode loop between two [[cut]]s: `df`'s rows
     * persisted as an RDD (MEMORY_AND_DISK), returned as a DataFrame
@@ -83,10 +84,9 @@ object Checkpoints {
     *
     * Unlike `Dataset.persist`, the returned plan does not nest `df`'s
     * plan inside an `InMemoryRelation`, which Catalyst re-analyzes and
-    * AQE re-renders on every later round — driver time that used to
-    * dominate reliable-mode CC. Unlike `localCheckpoint`, lineage is
-    * kept: a lost block recomputes from the previous rounds back to the
-    * last reliable cut.
+    * AQE re-renders on every later round. Unlike `localCheckpoint`,
+    * lineage is kept: a lost block recomputes from the previous rounds
+    * back to the last reliable cut.
     *
     * The round is lazy: AQE runs `df`'s shuffle stages here and leaves
     * the final stage to the first action on the result, so a consumer
@@ -95,18 +95,6 @@ object Checkpoints {
     * [[Caches.hardUnpersist]] or track it for [[Caches.releaseAll]]. */
   def persistRound(df: DataFrame): DataFrame =
     org.apache.spark.sql.RddFrames.ofInternalRows(df, persistedRows(df))
-
-  /** The eager, counted [[persistRound]]: one job fills every block of
-    * the round and, in the same pass, counts the rows whose boolean
-    * column `flag` is true (a null flag counts as false). An iterative
-    * loop's convergence test then costs no job of its own: CC counts
-    * its open nodes here instead of probing the persisted frame. */
-  def persistRoundCounted(df: DataFrame, flag: String): (DataFrame, Long) = {
-    val rows = persistedRows(df)
-    val i = df.schema.fieldIndex(flag)
-    val n = rows.filter(r => !r.isNullAt(i) && r.getBoolean(i)).count()
-    (org.apache.spark.sql.RddFrames.ofInternalRows(df, rows), n)
-  }
 
   private def persistedRows(df: DataFrame) =
     df.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
@@ -134,15 +122,18 @@ object Checkpoints {
     * executor loss is bounded by stride sweeps, while the per-cut bytes
     * are paid iters/stride times; see [[Graph.pageRank]]). */
   def cut(df: DataFrame, eager: Boolean = true): DataFrame =
-    configuredDir(df) match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        applied.computeIfAbsent((sc, dir), _ => {
-          sc.setCheckpointDir(dir); dir
-        })
-        df.checkpoint(eager)
-      case None => df.localCheckpoint(eager)
-    }
+    if (reliableDir(df.sparkSession).isDefined) df.checkpoint(eager)
+    else df.localCheckpoint(eager)
+
+  /** [[cut]] for an RDD that the next job will compute: marks `rdd` for
+    * a reliable `checkpoint` when `graft.checkpoint.dir` is configured
+    * (written by a second job right after that one; persist `rdd` first
+    * so the write reads its blocks), for a `localCheckpoint` otherwise
+    * (taken in that job, no job of its own). Returns whether the cut is
+    * reliable. */
+  private[graft] def cutRdd(spark: SparkSession, rdd: RDD[_]): Boolean =
+    if (reliableDir(spark).isDefined) { rdd.checkpoint(); true }
+    else { rdd.localCheckpoint(); false }
 
   /** [[cut]] (eager) whose result forgets `df`'s statistics. A
     * checkpoint's `LogicalRDD` carries its origin's size estimate, so

@@ -1,8 +1,10 @@
 package graft.ext
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.ext.Checkpoints.CutOps
 import graft.functions.GraftFunctions.{cosineSim, topKByScore}
@@ -17,11 +19,11 @@ import graft.functions.GraftFunctions.{cosineSim, topKByScore}
   *    corpora swap in the banded-MinHash candidates
   *    (`doc_minhash_candidates`) for the same downstream.
   *  - Components by alternating large-star/small-star contraction
-  *    (Kiveris et al. 2014): each round is two window-min passes over
-  *    a SHRINKING edge set, converging in O(log² n) rounds worst-case
-  *    and 2-3 on near-dup shapes (vs O(diameter) for label
-  *    propagation). Every round's frames are flat LogicalRDD leaves,
-  *    so plans stay O(1) deep.
+  *    (Kiveris et al. 2014): each round is one Spark job of sorted
+  *    shuffles over a SHRINKING edge set, converging in O(log² n)
+  *    rounds worst-case and 2-4 on near-dup shapes (vs O(diameter) for
+  *    label propagation). The rounds are RDD operations, so no round
+  *    is planned by Catalyst.
   *  - Canonical = min doc_id per component: deterministic, oracle-
   *    expressible (DuckDB recursive CTE computes the same closure).
   */
@@ -254,38 +256,41 @@ object Dedup {
       .select("doc_a", "doc_b")
   }
 
-  /** Connected components over undirected edges (doc_a, doc_b).
-    * Returns (node, component) for every node that appears in an edge;
-    * component = min doc_id reachable.
+  /** Connected components over undirected edges (doc_a, doc_b) with
+    * long or int ids. Returns (node, component) in the ids' type for
+    * every node that appears in an edge, self-loops included;
+    * component = min id reachable.
     *
-    * Algorithm (r11, VERDICT r10 item 1): alternating
-    * large-star / small-star (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC 2014) instead of min-label
-    * propagation. Each operation takes a per-node minimum over a window
-    * (no aggregate joined back), and each round contracts tall paths
-    * toward the local minimum, so convergence is O(log² n) rounds
-    * worst-case and 2-3 rounds on near-dup graph shapes — vs O(component
-    * diameter) for label propagation. The edge set also SHRINKS every
-    * round (paths collapse into stars, duplicates dropped), where the
-    * old sweep re-joined the full symmetric edge list against labels
-    * every iteration — the shape that holds at 100 TB.
+    * Algorithm: alternating large-star / small-star (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC 2014). Each
+    * round contracts tall paths toward the local minimum, so
+    * convergence takes O(log² n) rounds worst-case and 2-4 on near-dup
+    * graph shapes, and the edge set shrinks as paths collapse into
+    * stars.
     *
-    * Rounds materialize the new edge set each time, and every round's
-    * frames are flat `LogicalRDD` leaves in both modes. LOCAL mode
-    * cuts lineage every round (localCheckpoint — nearly free, but not
-    * recoverable); RELIABLE mode cuts every `graft.checkpoint.stride`
-    * rounds and runs Checkpoints.persistRound between, whose blocks
-    * recompute from lineage back to the last durable cut (checkpoint
-    * bytes paid rounds/stride times, not every round — see
-    * Checkpoints.reliableModeOn). The previous round's frames are
-    * freed as each round lands. Convergence is the star-forest test
-    * (a node is open iff max(label) > min(label) over its candidate
-    * rows, one map-side-combinable aggregate), which is exact: E is a
-    * fixed point of both operations iff it is a star forest, and edges
-    * only ever point to smaller ids, so each star's center IS its
-    * component's minimum. A persist round counts its open nodes in the
-    * job that fills the candidate's blocks; a cut round probes its cut
-    * candidate. */
+    * The rounds run below Catalyst, as RDD operations on sorted (u, v)
+    * long pairs under one partitioner on u ([[StarRounds]]): nothing is
+    * planned per round, and each round is one Spark job whose action
+    * also counts the new state's open nodes, the convergence test. A
+    * node is open iff it has a smaller neighbour and any other one (a
+    * star centre with a parent, or a child of two parents). That is
+    * exact: E is a fixed point of both operations iff it is a star
+    * forest, and edges only ever point to smaller ids, so once no node
+    * is open each node's min(self, neighbours) IS its component's
+    * minimum. A node seen only in self-loops enters round 1 as its own
+    * pair (u, u) and is labelled itself.
+    *
+    * Each round's state is persisted (MEMORY_AND_DISK) and the previous
+    * one freed once it lands. Every `graft.checkpoint.stride`-th round
+    * is also cut ([[Checkpoints.cutRdd]]): a reliable `checkpoint` when
+    * `graft.checkpoint.dir` is set (the round's second job writes it),
+    * a `localCheckpoint` otherwise, so a lost block recomputes at most
+    * `stride` rounds. The labels are one flat `LogicalRDD` over the
+    * last state, freed by [[Caches.releaseAll]]. Every job the call
+    * starts is described `connectedComponents round r/maxIter`, with
+    * ` reliable cut` on a round that writes a checkpoint, after the
+    * caller's own description when there is one, which is restored on
+    * return. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame =
     connectedComponentsWithRounds(edges, maxIter)._1
 
@@ -294,163 +299,68 @@ object Dedup {
     * counts). */
   private[graft] def connectedComponentsWithRounds(
       edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
-    // lazily CACHE (not checkpoint) the input: round 1's first action
-    // materializes the (possibly expensive — shingle-join, LSH-verify)
-    // upstream as a side effect of its own scan, so the cache costs no
-    // job of its own; the self-loop probe below then reads it for free.
-    // A projection the CacheManager already resolves to a cache entry
-    // (a caller's cached (doc_a, doc_b) frame) is used as-is: persisting
-    // it would only re-register the CALLER's entry, and releaseAll
-    // would then unpersist the caller's cache
-    val sel = edges.select(col("doc_a"), col("doc_b"))
-    val e0 =
-      if (sel.storageLevel != StorageLevel.NONE) sel
-      else Caches.track(sel.persist())
-    // no up-front orient/distinct/convergence pass: round 1's largeStar
-    // symmetrizes either orientation, its window minimum ignores
-    // duplicates and its distinct drops them, and a round over an
-    // already-converged star forest is idempotent — the converged-input
-    // case just pays one cheap extra round. The =!= filter also drops
-    // null ids, so no label below is ever null
-    var e = e0.filter(col("doc_a") =!= col("doc_b"))
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    var prevCk: Option[DataFrame] = None
-    var prevCand: Option[DataFrame] = None
-    var cand: DataFrame = null
-    var converged = false
-    var rounds = 0
-    // Cut cadence (r20, VERDICT r19 item 3): in RELIABLE mode every cut
-    // writes the full edge + label frames through the checkpoint FS,
-    // and CC's per-ROUND cuts were most of its +21.6% reliable tax at
-    // 5M nodes — so reliable mode cuts only every
-    // `graft.checkpoint.stride`-th round and runs persist rounds
-    // (Checkpoints.persistRound) between. Executor-loss recovery then
-    // recomputes at most `stride` rounds of star-contraction from the
-    // last reliable cut — the same k-choice law as the rank loops
-    // (Checkpoints.stride). LOCAL mode cuts every round: its
-    // localCheckpoint is nearly free. Either way each round's frames
-    // are flat LogicalRDD leaves, so no round re-analyzes an earlier
-    // round's plan. A persist round's edge frame stays lazy: the
-    // candidate's aggregate scans every partition of it, so the one
-    // job that fills the candidate's blocks (and counts its open nodes)
-    // fills the edge frame's blocks too.
-    // Frames are freed only AFTER the new round materializes — a
-    // persist round still reads its parent's blocks while computing.
+    val spark = edges.sparkSession
+    val sc = spark.sparkContext
+    val ids = edges.select(col("doc_a"), col("doc_b"))
+    val types = ids.schema.map(_.dataType)
+    require(types.forall(Seq(LongType, IntegerType).contains),
+      s"connectedComponents needs long or int doc_a/doc_b ids, got ${types.mkString(", ")}")
+    val idType = types.maxBy(_.defaultSize)
+    val part = new StarRounds.ByFirst(spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val stride = Checkpoints.stride(edges)
-    val strideOn = Checkpoints.reliableModeOn(edges)
-    while (!converged && rounds < maxIter) {
-      val cutRound = !strideOn || (rounds + 1) % stride == 0
-      // The round cut stays EAGER (re-measured r21): a lazy cut defers
-      // the lineage truncation past the candidate aggregate that is
-      // supposed to materialize it, so the candidate plan (and AQE's
-      // rendering of it) embeds the whole un-truncated round plan —
-      // measured 3x regressions across the CC consumers (doc_lsh 3.4 →
-      // 10.1 s, 1 MB plan strings) for the one job it saves.
-      val next0 = smallStar(largeStar(e))
-      val next = if (cutRound) next0.cutLineage()
-                 else Checkpoints.persistRound(next0)
-      e = next
-      // ONE aggregation doubles as the convergence test AND the result:
-      // emit (child → parent) plus (center → center) rows; a node whose
-      // rows carry two different labels (max > min) is exactly a
-      // star-forest violation (a center that is also a child sees its
-      // self-row plus a real parent; a multi-parent child sees both
-      // parents), and once no node is open, min(label) IS the component
-      // id (edges only ever point to smaller ids, so each star's center
-      // is its component's min — and the min node itself can never be
-      // a child: its center would have to be smaller). The materialized
-      // candidate is reused as the returned labels, so the converged
-      // round pays no extra label-construction job.
-      val cand0 = e.select(col("src").as("node"), col("dst").as("label"))
-        .union(e.select(col("dst").as("node"), col("dst").as("label")))
-        .groupBy("node")
-        .agg(min("label").as("label"), (max("label") > min("label")).as("open"))
-      val (c, open) =
-        if (cutRound) {
-          val c = cand0.cutLineage()
-          (c, !c.filter(col("open")).isEmpty)
-        } else {
-          val (c, n) = Checkpoints.persistRoundCounted(cand0, "open")
-          (c, n > 0)
-        }
-      cand = c
-      // hardUnpersist frees the RDD blocks BACKING a LogicalRDD frame
-      // (plain Dataset.unpersist is a silent no-op on checkpoint and
-      // persist-round storage — CacheHygieneSpec lesson)
-      prevCk.foreach(Caches.hardUnpersist)
-      prevCk = Some(next)
-      prevCand.foreach(Caches.hardUnpersist)
-      prevCand = Some(cand)
-      converged = !open
-      rounds += 1
+    val caller = Option(sc.getLocalProperty(JobDescription)).filter(_.nonEmpty)
+    var state: RDD[(Long, Long)] = null
+    var rounds = 0
+    var open = 1L
+    var nodes = 0L
+    def describe(job: String): Unit =
+      sc.setLocalProperty(JobDescription, caller.fold(job)(c => s"$c: $job"))
+    try {
+      while (open > 0 && rounds < maxIter) {
+        rounds += 1
+        val job = s"connectedComponents round $rounds/$maxIter"
+        describe(job)
+        // round 1 reads the input once (under AQE, toRdd runs the
+        // input's own exchanges here): each edge in both orientations, a
+        // self-loop as its own pair, an edge with a null id dropped
+        if (state == null) state = StarRounds.sorted(
+          ids.select(col("doc_a").cast(LongType), col("doc_b").cast(LongType))
+            .queryExecution.toRdd.mapPartitions(StarRounds.inputPairs), part)
+        // one cadence in both modes. Cutting every round in local mode
+        // instead (the DataFrame rounds' fork) was no faster on perfbench
+        // cc_local, 4 pairs on a 4-vCPU VM: op_ms_p50 312, 247, 254 and
+        // 298 ms against 307, 291, 273 and 274 ms for this cadence; it
+        // held 0.5 MB less live heap
+        val next = StarRounds.round(state, part).persist(StorageLevel.MEMORY_AND_DISK)
+        if (rounds % stride == 0 && Checkpoints.cutRdd(spark, next))
+          describe(s"$job reliable cut")
+        val census = sc.runJob(next, StarRounds.census _)
+        state.unpersist(blocking = false)
+        state = next
+        open = census.map(_._1).sum
+        nodes = census.map(_._2).sum
+      }
+    } finally {
+      sc.setLocalProperty(JobDescription, caller.orNull)
+      // exiting at maxIter without convergence means PARTIAL labels:
+      // free the last round and fail loudly below rather than ship wrong
+      // canonical ids
+      if (open > 0 && state != null) state.unpersist(blocking = false)
     }
-    // ADVICE r4 (medium): exiting at maxIter without convergence means
-    // PARTIAL labels — fail loudly rather than ship wrong canonical
-    // ids. With the O(log² n) round bound, hitting 50 rounds means a
-    // pathological input (≥ 2^50-ish contraction depth), not a graph
-    // this loop can be trusted on.
-    if (!converged)
+    if (open > 0)
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxIter " +
           "large-star/small-star rounds — component labels would be " +
           "partial/wrong; raise maxIter")
-    Caches.track(cand) // backs the returned labels; freed by releaseAll
-    val starLabels = cand.select(col("node"), col("label"))
-    // nodes appearing ONLY in self-loops vanish from the star operations
-    // (they emit no src≠dst edge), so they are appended here to keep the
-    // "every node that appears in an edge" contract. They are rare to
-    // nonexistent (every candidate generator emits doc_a < doc_b), so
-    // the cached input is probed once and the common case returns the
-    // candidate as-is. No round's job reads the input's self-loops, so
-    // the probe cannot ride one without a second pass over the input.
-    val selfOnly = e0.filter(col("doc_a") === col("doc_b"))
-      .select(col("doc_a").as("node")).distinct()
-    val labels =
-      if (selfOnly.isEmpty) starLabels
-      else Caches.track(starLabels
-        .unionByName(selfOnly.join(starLabels, Seq("node"), "left_anti")
-          .select(col("node"), col("node").as("label")))
-        .cutLineage())
-    // the result's checkpoint/persist IS its storage (on a cut round
-    // lineage was severed and cannot be recomputed; on a persist round
-    // lineage reaches back at most stride rounds to the last cut).
-    // Caches.releaseAll frees it — and the round/input intermediates —
-    // once the caller is done ([[Caches]] scaladoc: CC results are
-    // single-lifecycle).
-    prevCk.foreach(Caches.track)
-    (labels.select(col("node"), col("label").as("component")), rounds)
+    Caches.track(spark, state)
+    val schema = StructType(Seq(
+      StructField("node", idType, ids.schema.exists(_.nullable)),
+      StructField("component", idType)))
+    val labels = StarRounds.labels(state, idType)
+    (org.apache.spark.sql.RddFrames.ofRows(spark, schema, labels, nodes), rounds)
   }
 
-  /** Large-star: for every node u, connect each STRICTLY LARGER
-    * neighbor to min(Γ(u) ∪ {u}). Contracts tall paths by pointing
-    * grandchildren at grandparents; output oriented big→small and
-    * hash-partitioned by src, which is the partitioning smallStar's
-    * window needs. */
-  private def largeStar(e: DataFrame): DataFrame = {
-    val sym = e.select(explode(array(
-        struct(col("src").as("u"), col("dst").as("v")),
-        struct(col("dst").as("u"), col("src").as("v")))).as("p"))
-      .select(col("p.u").as("u"), col("p.v").as("v"))
-    sym.select(col("u"), col("v"),
-        least(col("u"), min("v").over(Window.partitionBy("u"))).as("m"))
-      .filter(col("v") > col("u"))
-      .select(col("v").as("src"), col("m").as("dst"))
-      .repartition(col("src"))
-      .distinct()
-  }
-
-  /** Small-star: for every node u (viewing only its SMALLER-or-equal
-    * neighbors, i.e. grouping oriented edges by their larger endpoint),
-    * connect u and all those neighbors to the minimum among them —
-    * collapses each node's down-neighborhood into a star. */
-  private def smallStar(e: DataFrame): DataFrame =
-    e.select(col("src"), col("dst"), min("dst").over(Window.partitionBy("src")).as("mn"))
-      .select(explode(array(
-        struct(col("dst").as("n"), col("mn")),
-        struct(col("src").as("n"), col("mn")))).as("p"))
-      .select(col("p.n").as("src"), col("p.mn").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
+  private val JobDescription = "spark.job.description"
 
   /** SPAN-LEVEL (substring) dedup — the whole-document family's missing
     * sibling (VERDICT r7 item 1): find substrings repeated ACROSS

@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, FSDataInputStream, LocalFileSystem, Path, PathFilter}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FileSystem, FSDataInputStream, LocalFileSystem, Path, PathFilter}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
@@ -55,7 +55,12 @@ object CheckpointFiles {
     * rename refuses an existing target, so an overwriting `createAtomic`
     * (the state stores' changelog, delta and snapshot files) would keep
     * the old file and report success. The instance is this manager's own:
-    * the file system cache is keyed by scheme, not by class. */
+    * the file system cache is keyed by scheme, not by class.
+    *
+    * A rename refused because the target exists (a non-overwriting
+    * `createAtomic`: the offsets and commits logs' guard against a
+    * second writer) deletes the temp file and its `.crc` before the
+    * refusal propagates; Spark's output stream leaves both behind. */
   private[io] final class Local(path: Path, conf: Configuration)
       extends FileSystemBasedCheckpointFileManager(path, conf) {
     override protected val fs: FileSystem = {
@@ -63,5 +68,13 @@ object CheckpointFiles {
       local.initialize(java.net.URI.create("file:///"), conf)
       local
     }
+
+    override def renameTempFile(src: Path, dst: Path, overwriteIfPossible: Boolean): Unit =
+      try super.renameTempFile(src, dst, overwriteIfPossible)
+      catch {
+        case e: FileAlreadyExistsException =>
+          fs.delete(src, false)
+          throw e
+      }
   }
 }

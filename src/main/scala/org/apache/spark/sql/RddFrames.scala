@@ -2,7 +2,11 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.StructType
 
 /** Builds a DataFrame straight from a LogicalPlan leaf over internal
   * rows. `classic.Dataset.ofRows` is package-private to Spark SQL, so
@@ -18,6 +22,18 @@ object RddFrames {
     val ds = origin.asInstanceOf[classic.Dataset[Row]]
     classic.Dataset.ofRows(ds.sparkSession,
       LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
+  }
+
+  /** A DataFrame whose logical plan is one flat `LogicalRDD` leaf over
+    * `rdd`, whose rows must match `schema` (generic rows will do: the
+    * scan converts them). The leaf reports `rows` rows, so joins on the
+    * result plan from its real size rather than the default estimate. */
+  def ofRows(spark: SparkSession, schema: StructType, rdd: RDD[InternalRow],
+      rows: Long): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val output = DataTypeUtils.toAttributes(schema)
+    val stats = Statistics(EstimationUtils.getSizePerRow(output) * rows, Some(BigInt(rows)))
+    classic.Dataset.ofRows(s, LogicalRDD(output, rdd)(s, Some(stats)))
   }
 
   /** `df`, whose plan must be one `LogicalRDD` leaf (a checkpoint), over

@@ -124,9 +124,10 @@ class CheckpointModeSpec extends SparkSpec {
     assert(plan.collectLeaves().forall(_.isInstanceOf[LogicalRDD]),
       s"persist-round labels must read one flat LogicalRDD leaf:\n$plan")
     // measured on this forest with the suite's local[4] session and 4
-    // shuffle partitions; the nested-plan persist rounds ran 53, and the
-    // aggregate + join rounds with a separate convergence probe ran 37
-    assert(jobs == 17, s"connectedComponents ran $jobs jobs, pinned 17")
+    // shuffle partitions: one job per round. The nested-plan persist
+    // rounds ran 53, the aggregate + join rounds with a separate
+    // convergence probe 37, and the DataFrame window rounds 17
+    assert(jobs == 3, s"connectedComponents ran $jobs jobs, pinned 3")
   }
 
   test("CC persist rounds are recoverable and fully released") {
@@ -155,6 +156,26 @@ class CheckpointModeSpec extends SparkSpec {
       "releaseAll must unpersist every RDD the call persisted")
     assert(sc.getRDDStorageInfo.filterNot(r => before(r.id)).isEmpty,
       "no RDD blocks of the call may remain after releaseAll")
+  }
+
+  test("CC labels recompute after every block the call persisted drops") {
+    // the labels read the last round's persisted state, not an RDD of
+    // their own: dropping the blocks of every RDD the call persisted
+    // makes the labels recompute through the rounds' lineage
+    val edges = chainForest
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    spark.conf.set("graft.checkpoint.stride", "50")
+    val ((labels, first), _) = try withReliable {
+      val labels = Dedup.connectedComponents(edges)
+      (labels, sorted(labels))
+    } finally spark.conf.unset("graft.checkpoint.stride")
+    val persisted = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }.values
+    assert(persisted.nonEmpty, "the call must persist its last round")
+    persisted.foreach(_.unpersist(blocking = true))
+    try assert(sorted(labels) == first,
+      "labels must recompute through lineage after their blocks drop")
+    finally Caches.releaseAll(spark)
   }
 
   test("cutWithoutStats: default size estimate, and hardUnpersist frees the cut") {

@@ -117,9 +117,9 @@ class DedupSpec extends SparkSpec {
     // edge cases the star rounds must carry: self-loop-only nodes (one
     // of them repeated), a self-loop on a node that also has real
     // edges, duplicate edges in both orientations, a lone single edge,
-    // and a hub (the mega-bucket min-star shape) whose degree exceeds
-    // the lowered window buffer thresholds, so the per-node minimum
-    // windows spill
+    // and a hub (the mega-bucket min-star shape) whose run of ~600
+    // neighbours is split across spill files, since the rounds' external
+    // sorters are forced to spill every 64 records
     val rnd = new scala.util.Random(7)
     val ids = rnd.shuffle((1L to 3000L).toVector)
     // ids(0 until 1500) split into components of 2-41 nodes: a random
@@ -157,8 +157,10 @@ class DedupSpec extends SparkSpec {
         if (e.taskMetrics != null) spilled.addAndGet(e.taskMetrics.memoryBytesSpilled)
     }
     val sc = spark.sparkContext
-    spark.conf.set("spark.sql.windowExec.buffer.in.memory.threshold", "16")
-    spark.conf.set("spark.sql.windowExec.buffer.spill.threshold", "64")
+    // a core setting, read by each sorter as it is built (Spillable)
+    val forceSpill = "spark.shuffle.spill.numElementsForceSpillThreshold"
+    val env = org.apache.spark.SparkEnv.get.conf
+    env.set(forceSpill, "64")
     sc.addSparkListener(listener)
     val got = try {
       val labels = Dedup.connectedComponents(all.toDF("doc_a", "doc_b"))
@@ -167,11 +169,10 @@ class DedupSpec extends SparkSpec {
       labels
     } finally {
       sc.removeSparkListener(listener)
-      spark.conf.unset("spark.sql.windowExec.buffer.in.memory.threshold")
-      spark.conf.unset("spark.sql.windowExec.buffer.spill.threshold")
+      env.remove(forceSpill)
       Caches.releaseAll(spark)
     }
-    assert(spilled.get() > 0, "the hub's window buffers must spill")
+    assert(spilled.get() > 0, "the rounds' sorts must spill")
     assert(comps.size > 10 && truth.values.toSet.size > 10)
     assert(got.size == truth.size, s"${got.size} labelled nodes, expected ${truth.size}")
     assert(got == truth, s"CC mismatch: ${(got.toSet diff truth.toSet).take(5)}")

@@ -16,8 +16,7 @@ import org.apache.spark.sql.functions.col
 class JobCountSpec extends SparkSpec {
 
   /** 50 paths of 16 nodes and 20 stars of 8 leaves: four star rounds,
-    * so at the default stride 4 reliable mode runs three persist rounds
-    * and then a cut round. */
+    * so at the default stride 4 the fourth round is a cut round. */
   private def forest: DataFrame = {
     import spark.implicits._
     val paths = for (p <- 0L until 50L; i <- 0L until 15L)
@@ -40,10 +39,12 @@ class JobCountSpec extends SparkSpec {
     (rounds, jobs)
   }
 
+  // one job per round, plus the labels' write; a reliable cut adds its
+  // checkpoint write. The DataFrame rounds with AQE ran 31 and 25
   test("CC at the default stride: jobs per call in local mode") {
     val (rounds, jobs) = ccJobs()
     assert(rounds == 4, s"the forest took $rounds star rounds, expected 4")
-    assert(jobs == 31, s"connectedComponents ran $jobs jobs, pinned 31")
+    assert(jobs == 5, s"connectedComponents ran $jobs jobs, pinned 5")
   }
 
   test("CC at the default stride: jobs per call in reliable mode") {
@@ -52,7 +53,44 @@ class JobCountSpec extends SparkSpec {
     val (rounds, jobs) = try ccJobs()
                          finally spark.conf.unset("graft.checkpoint.dir")
     assert(rounds == 4, s"the forest took $rounds star rounds, expected 4")
-    assert(jobs == 25, s"connectedComponents ran $jobs jobs, pinned 25")
+    assert(jobs == 6, s"connectedComponents ran $jobs jobs, pinned 6")
+  }
+
+  test("every job a CC call starts names its round, and the caller's description returns") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null)
+          seen.add((e.properties.getProperty("spark.jobGroup.id"),
+            e.properties.getProperty("spark.job.description")))
+    }
+    val dir = Files.createTempDirectory("graft-jobcount-ckpt").toFile
+    sc.addSparkListener(listener)
+    try for (reliable <- Seq(false, true)) {
+      seen.clear()
+      if (reliable) spark.conf.set("graft.checkpoint.dir", dir.toString)
+      val ((group, rounds, after), jobs) = try countingJobs {
+        val (_, rounds) = Dedup.connectedComponentsWithRounds(forest)
+        (sc.getLocalProperty("spark.jobGroup.id"), rounds,
+          sc.getLocalProperty("spark.job.description"))
+      } finally spark.conf.unset("graft.checkpoint.dir")
+      Caches.releaseAll(spark)
+      org.apache.spark.ListenerBusDrain(sc)
+      import scala.jdk.CollectionConverters._
+      val descs = seen.asScala.toSeq.filter(_._1 == group).map(_._2)
+      assert(jobs > 0 && descs.size == jobs, s"$jobs jobs counted, ${descs.size} seen")
+      // countingJobs describes its group "counted": CC nests under it
+      val round = """counted: connectedComponents round (\d+)/50( reliable cut)?""".r
+      val named = descs.collect { case round(r, cut) => (r.toInt, cut != null) }
+      assert(named.size == descs.size, s"jobs without a round: ${descs.filterNot(round.matches)}")
+      assert(named.map(_._1).distinct.sorted == (1 to rounds),
+        s"rounds ${named.map(_._1).distinct.sorted}, expected 1 to $rounds")
+      assert(named.exists(_._2) == reliable,
+        s"reliable = $reliable, but jobs ${descs.mkString("; ")}")
+      assert(after == "counted", "the caller's job description is restored")
+    } finally sc.removeSparkListener(listener)
   }
 
   private def ring: DataFrame = {

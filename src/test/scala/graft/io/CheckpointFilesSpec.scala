@@ -57,6 +57,8 @@ class CheckpointFilesSpec extends SparkSpec {
     // the offsets and commits logs' guard against a second writer
     intercept[FileAlreadyExistsException](write(m, p, "second", overwrite = false))
     assert(read(m, p) == "first")
+    // the refused write's temp file and its .crc are gone
+    assert(Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSet == Set("0", ".0.crc"))
   }
 
   test("createAtomic with overwrite replaces an existing file and its .crc") {
