@@ -76,7 +76,24 @@ final case class SamsaStream(
     *   it renames when `libhadoop` is absent: 64 per micro-batch of a
     *   3-partition change detector (16 per state-store commit, 8 each for
     *   the offsets and commits entries), most of the batch's commit time.
-    *   With this manager there are none. Other schemes keep the default. */
+    *   With this manager there are none. Other schemes keep the default.
+    * - `fs.file.impl` = [[graft.io.CheckpointFiles.LocalFs]], with
+    *   `fs.file.impl.disable.cache` = `true`: every `file:` path the
+    *   session resolves through its Hadoop configuration gets Hadoop's
+    *   checksummed local file system with a `setPermission` that starts no
+    *   process. Without `libhadoop`, Hadoop forks a `chmod` (about 4 ms)
+    *   for each file and directory it creates: RocksDB's copies of SST
+    *   files between checkpoint and local store, and Spark's checkpoint
+    *   and state directories, 856 of the 926 processes a 6-second
+    *   `store_restore` perfbench run started (seed 1). The file system cache is
+    *   keyed by scheme, not class, so a `file:` instance cached before
+    *   this setting would otherwise still be returned; with the cache off,
+    *   each lookup of a `file:` file system builds a new instance (Spark's
+    *   context-level configuration, and what it caches, are untouched).
+    *   In a configured session this also applies to every other `file:`
+    *   read and write through the session's Hadoop configuration (Parquet,
+    *   JSON, text sources and sinks): the same Hadoop local file system,
+    *   uncached, and without forks. */
   def configure(spark: SparkSession): SparkSession = {
     SamsaStream.stateEngine(store).foreach { case (k, v) => spark.conf.set(k, v) }
     spark
@@ -148,15 +165,16 @@ final case class SamsaStream(
     * store names its state variable; a flatMapGroupsWithState store has
     * one unnamed state, holding the value under `groupState`.
     *
-    * One lookup opens one state store: partition
+    * One lookup loads one state store once, read-only: partition
     * [[SamsaStream.partitionOf]]`(key, n)`, where `n` is the number of
     * partition directories the checkpoint holds. It is read on the
-    * driver, with no Spark job, up to the first row with `key`, and
-    * closed before this returns. The lookup falls back to scanning every
-    * partition in a Spark job, with one WARN naming the checkpoint, when
-    * the listed partitions are not exactly `0..n-1` or when the first row
-    * read does not hash to the partition it came from (a checkpoint
-    * written with another partitioning). A null key finds nothing. */
+    * driver, with no Spark job and no write into the checkpoint, by a
+    * point `get` of `key`, and closed before this returns. The lookup
+    * falls back to scanning every partition in a Spark job, with one
+    * WARN naming the checkpoint, when the listed partitions are not
+    * exactly `0..n-1` or when the partition's first row does not hash to
+    * it (a checkpoint written with another partitioning). A null key
+    * finds nothing. */
   def query(spark: SparkSession, checkpoint: String, key: String): Option[String] = {
     val (state, value) = store match {
       case StoreType.RocksDB => (StatefulStore.readState(spark, checkpoint), "value.value")
@@ -181,11 +199,13 @@ object SamsaStream {
   private val log = org.slf4j.LoggerFactory.getLogger("graft.api.SamsaStream")
 
   /** The session settings of `store`'s state engine, as
-    * [[SamsaStream.configure]] sets them. */
+    * [[SamsaStream.configure]] sets them, each with its reason there. */
   def stateEngine(store: StoreType): Map[String, String] =
     Map(
       "spark.sql.streaming.stateStore.providerClass" -> store.providerClass,
-      "spark.sql.streaming.checkpointFileManagerClass" -> classOf[CheckpointFiles].getName) ++
+      "spark.sql.streaming.checkpointFileManagerClass" -> classOf[CheckpointFiles].getName,
+      "fs.file.impl" -> classOf[CheckpointFiles.LocalFs].getName,
+      "fs.file.impl.disable.cache" -> "true") ++
       (if (store == StoreType.RocksDB)
         Map("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
       else Map.empty)
@@ -213,14 +233,10 @@ object SamsaStream {
     else {
       val n = ids.length
       val p = partitionOf(key, n)
-      scan.read(p, "key.value", value) { rows =>
-        if (!rows.hasNext) Right(None)
-        else {
-          val first = rows.next()
-          if (!confirms(first.head, p, n))
-            Left(s"key ${first.head} read from partition $p does not hash to it at n=$n")
-          else Right((Iterator(first) ++ rows).collectFirst { case Seq(`key`, v) => v })
-        }
+      scan.lookup(p, key, "key.value", value) match {
+        case (Some(Seq(first, _)), _) if !confirms(first, p, n) =>
+          Left(s"key $first read from partition $p does not hash to it at n=$n")
+        case (_, found) => Right(found.map(_(1)))
       }
     }
   }

@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -37,7 +37,8 @@ import graft.ext.Checkpoints.CutOps
   *     results) under a private `batches/<id>-<uuid>/` directory;
   *   - a single versioned manifest (`_commits/v<NNNNNNNN>`) lists the
   *     committed (batchId, directory) pairs; it is published by
-  *     write-temp-then-rename, which is atomic on HDFS and local FS;
+  *     writing a temp file and then moving it to a version that must not
+  *     exist yet: a rename on HDFS, a hard link on local FS;
   *   - readers resolve the HIGHEST manifest version and union only the
   *     directories it lists. An attempt that crashed before its
   *     manifest rename is invisible forever (orphaned files, no
@@ -117,15 +118,17 @@ object IngestDedup {
     (top.drop(1).toLong, entries)
   }
 
-  /** Publish a new manifest: write to a temp name, then atomically
-    * rename to the next version. Fails loud on a rename collision
-    * (two writers racing the same store is outside the foreachBatch
-    * contract and must not be silently resolved). */
   private def publish(
       spark: SparkSession, storeDir: String, version: Long,
-      entries: Seq[(Long, String)]): Unit = {
-    val f = fs(spark, storeDir)
-    val root = new Path(commitsRoot(storeDir))
+      entries: Seq[(Long, String)]): Unit =
+    publish(fs(spark, storeDir), new Path(commitsRoot(storeDir)), version, entries)
+
+  /** Publish a new manifest under `root`: write to a temp name, then
+    * move it to the next version unless that version exists. Fails loud
+    * when it does (two writers racing the same store is outside the
+    * foreachBatch contract and must not be silently resolved). */
+  private[graft] def publish(
+      f: FileSystem, root: Path, version: Long, entries: Seq[(Long, String)]): Unit = {
     f.mkdirs(root)
     val tmp = new Path(root, s".tmp-${UUID.randomUUID()}")
     val out = f.create(tmp, false)
@@ -133,9 +136,33 @@ object IngestDedup {
       .mkString("\n").getBytes(StandardCharsets.UTF_8))
     finally out.close()
     val target = new Path(root, f"v$version%08d")
-    require(f.rename(tmp, target),
+    require(claim(f, tmp, target),
       s"manifest publish lost a race for $target — concurrent writers " +
         "on one ingest store are not supported")
+  }
+
+  /** Moves `tmp` to `target` if `target` does not exist, atomically;
+    * false, with `tmp` deleted, if it does. HDFS's rename refuses an
+    * existing target, but Hadoop's `LocalFileSystem` replaces it
+    * (`File.renameTo`), and `Files.move` without `REPLACE_EXISTING`
+    * checks and then renames. So on `file:` the claim is a hard link,
+    * which link(2) refuses onto an existing name, after which the temp
+    * name is deleted and its `.crc` sidecar renamed to the target's. */
+  private def claim(f: FileSystem, tmp: Path, target: Path): Boolean = {
+    def local(p: Path) = java.nio.file.Paths.get(f.makeQualified(p).toUri)
+    val won =
+      if (f.getUri.getScheme != "file") f.rename(tmp, target)
+      else try {
+        java.nio.file.Files.createLink(local(target), local(tmp))
+        f match {
+          case c: ChecksumFileSystem =>
+            c.getRawFileSystem.rename(c.getChecksumFile(tmp), c.getChecksumFile(target))
+          case _ =>
+        }
+        true
+      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    f.delete(tmp, false)
+    won
   }
 
   /** Union-read one store component (`corpus`/`sig`/`hash`) across all

@@ -247,4 +247,42 @@ class StreamingIngestDedupSpec extends SparkSpec {
         s"batch $id state (sig=$sig, hash=$hash) vs accepted $cumAccepted")
     }
   }
+
+  test("two publishers of one manifest version on Hadoop's LocalFileSystem: the loser fails loudly") {
+    import graft.streaming.IngestDedup
+    import org.apache.hadoop.fs.{LocalFileSystem, Path}
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("ingest-publish")
+    val root = new Path(dir.toUri)
+    // Hadoop's own local file system, whose rename replaces an existing target
+    val local = new LocalFileSystem()
+    local.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+    def manifest(v: Int) = new String(Files.readAllBytes(dir.resolve(f"v$v%08d")), "UTF-8")
+
+    IngestDedup.publish(local, root, 1, Seq(1L -> "winner"))
+    val e = intercept[IllegalArgumentException](IngestDedup.publish(local, root, 1, Seq(2L -> "loser")))
+    assert(e.getMessage.contains("lost a race"), e.getMessage)
+    assert(manifest(1) == "1\twinner")
+    // the checksum sidecar moved with the winner; the loser left no temp file
+    assert(Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSet ==
+      Set("v00000001", ".v00000001.crc"))
+    assert(new String(local.open(new Path(root, "v00000001")).readAllBytes(), "UTF-8") == "1\twinner")
+
+    // racing threads: exactly one publisher of each version wins
+    for (v <- 2 to 9) {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val results = (0 until 2).map { w =>
+        scala.concurrent.Future {
+          start.await()
+          scala.util.Try(IngestDedup.publish(local, root, v, Seq(v.toLong -> s"w$w")))
+        }(scala.concurrent.ExecutionContext.global)
+      }
+      start.countDown()
+      val outcomes = results.map(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration(30, "s")))
+      assert(outcomes.count(_.isSuccess) == 1, outcomes)
+      val winner = outcomes.indexWhere(_.isSuccess)
+      assert(manifest(v) == s"$v\tw$winner")
+    }
+    assert(!Files.list(dir).iterator().asScala.exists(_.getFileName.toString.contains("tmp")))
+  }
 }

@@ -6,10 +6,12 @@ import graft.streaming.KeyedRecord
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQueryException
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
@@ -17,7 +19,8 @@ import scala.jdk.CollectionConverters._
 
 /** [[CheckpointFiles]] keeps the checkpoint file manager contract on a
   * local path, sends only `file:` paths to the `FileSystem` manager, and
-  * a change detector's micro-batches on it start no `readlink` process. */
+  * sets permissions without a process: a change detector's micro-batches,
+  * and a restart and a lookup, start no `readlink` or `chmod` process. */
 class CheckpointFilesSpec extends SparkSpec {
 
   private val key = "spark.sql.streaming.checkpointFileManagerClass"
@@ -99,14 +102,17 @@ class CheckpointFilesSpec extends SparkSpec {
 
   private def rec(k: String, v: String, t: Long) = KeyedRecord(k, v, "t", 0, new Timestamp(t))
 
-  /** Runs `batches` through a 3-partition RocksDB change detector on
-    * `ckpt`, after `replay`, the batches an earlier run of it committed;
-    * `during` wraps every batch after the first. */
+  private val stream = SamsaStream(Seq("t"), "g", "tbl", store = StoreType.RocksDB)
+
+  /** Runs `batches` through a 3-partition RocksDB change detector (or,
+    * with `materialize`, a latest-wins store) on `ckpt`, after `replay`,
+    * the batches an earlier run of it committed; `during` wraps every
+    * batch after the first. */
   private def detect(ckpt: String, batches: Seq[Seq[KeyedRecord]],
-      replay: Seq[Seq[KeyedRecord]] = Nil, during: (=> Unit) => Unit = b => b): Unit = {
+      replay: Seq[Seq[KeyedRecord]] = Nil, during: (=> Unit) => Unit = b => b,
+      materialize: Boolean = false): Unit = {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val stream = SamsaStream(Seq("t"), "g", "tbl", store = StoreType.RocksDB)
     val parts = spark.conf.get("spark.sql.shuffle.partitions")
     val input = MemoryStream[KeyedRecord]
     replay.foreach(input.addData(_))
@@ -117,8 +123,10 @@ class CheckpointFilesSpec extends SparkSpec {
     try {
       spark.conf.set("spark.sql.shuffle.partitions", "3")
       stream.configure(spark)
-      val q = stream.detectChanges(stream.recordsFrom(input.toDF())).toDF()
-        .writeStream.format("noop").option("checkpointLocation", ckpt).start()
+      val records = stream.recordsFrom(input.toDF())
+      val out = if (materialize) stream.materialize(records).toDF() else stream.detectChanges(records).toDF()
+      val q = out.writeStream.format("noop").outputMode(if (materialize) "update" else "append")
+        .option("checkpointLocation", ckpt).start()
       try {
         run(batches.head, q)
         during(batches.tail.foreach(run(_, q)))
@@ -126,27 +134,94 @@ class CheckpointFilesSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.shuffle.partitions", parts)
   }
 
-  test("three micro-batches of a RocksDB change detector start no readlink process") {
-    val ckpt = Files.createTempDirectory("ckpt-forks").toString
-    val batches = (0 until 4).map(b => (0 until 200).map(i => rec(s"k${i % 50}", s"v${(i + b) % 3}", b * 1000L + i)))
+  /** The program of every process this JVM starts while `body` runs. A
+    * process started at the end proves the recording sees one. */
+  private def processes(body: => Unit): Seq[String] = {
     val events = Files.createTempFile("forks", ".jfr")
     val recording = new Recording()
     recording.enable("jdk.ProcessStart")
-    detect(ckpt, batches, during = { body =>
-      recording.start()
-      try {
-        body
-        // proves the recording sees a process start when one happens
-        new ProcessBuilder("true").start().waitFor()
-      } finally recording.stop()
-    })
+    recording.start()
+    try {
+      body
+      new ProcessBuilder("true").start().waitFor()
+    } finally recording.stop()
     recording.dump(events)
     recording.close()
-    val commands = RecordingFile.readAllEvents(events).asScala.map(_.getString("command")).toSeq
-    val program = commands.map(_.trim.split("\\s+").head)
-    assert(program.contains("true"), commands)
-    assert(!program.exists(_.endsWith("readlink")), commands.filter(_.contains("readlink")))
-    info(s"chmod processes over 3 micro-batches: ${program.count(_.endsWith("chmod"))}")
+    val program = RecordingFile.readAllEvents(events).asScala
+      .map(_.getString("command").trim.split("\\s+").head).toSeq
+    Files.delete(events)
+    assert(program.contains("true"), program)
+    program.diff(Seq("true"))
+  }
+
+  private def forks(program: Seq[String], name: String): Seq[String] = program.filter(_.endsWith(name))
+
+  test("three micro-batches of a RocksDB change detector start no readlink process") {
+    val ckpt = Files.createTempDirectory("ckpt-forks").toString
+    val batches = (0 until 4).map(b => (0 until 200).map(i => rec(s"k${i % 50}", s"v${(i + b) % 3}", b * 1000L + i)))
+    var program = Seq.empty[String]
+    detect(ckpt, batches, during = body => program = processes(body))
+    assert(forks(program, "readlink").isEmpty, program)
+    assert(forks(program, "chmod").isEmpty, program)
+    info(s"rm processes over 3 micro-batches: ${forks(program, "rm").size}")
+  }
+
+  test("a restart and one lookup start no chmod or readlink process") {
+    val ckpt = Files.createTempDirectory("ckpt-forks").toString
+    val batches = Seq(
+      (0 until 50).map(i => rec(s"k$i", "a", i)),
+      (0 until 50).map(i => rec(s"k$i", "b", 1000L + i)))
+    detect(ckpt, batches, materialize = true)
+    val program = processes {
+      detect(ckpt, Seq((0 until 50).map(i => rec(s"k$i", "c", 2000L + i))), replay = batches, materialize = true)
+      assert(stream.query(spark, ckpt, "k7") == Some("c"))
+    }
+    assert(forks(program, "readlink").isEmpty, program)
+    assert(forks(program, "chmod").isEmpty, program)
+    info(s"rm processes over one restart and one lookup: ${forks(program, "rm").size}")
+  }
+
+  private def raw(fs: RawLocalFileSystem): RawLocalFileSystem = {
+    fs.initialize(java.net.URI.create("file:///"), new Configuration())
+    fs
+  }
+
+  private def mode(p: java.nio.file.Path): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+
+  private def perm(octal: String): FsPermission = new FsPermission(Integer.parseInt(octal, 8).toShort)
+
+  test("the NIO setPermission sets the mode Hadoop's chmod sets, on files and directories") {
+    val (hadoop, nio) = (raw(new RawLocalFileSystem), raw(new CheckpointFiles.RawLocalFs))
+    val dir = Files.createTempDirectory("perm")
+    for (octal <- Seq("644", "600", "755", "1777", "1750"); isDir <- Seq(false, true)) {
+      val Seq(a, b) = Seq("hadoop", "nio").map { n =>
+        val p = dir.resolve(s"$n-$octal-$isDir")
+        if (isDir) Files.createDirectory(p) else Files.createFile(p)
+      }
+      hadoop.setPermission(new Path(a.toUri), perm(octal))
+      nio.setPermission(new Path(b.toUri), perm(octal))
+      assert(mode(b) == mode(a), s"$octal, directory: $isDir")
+      assert(mode(b) == Integer.parseInt(octal, 8), s"$octal, directory: $isDir")
+    }
+  }
+
+  test("the NIO setPermission on a missing path throws FileNotFoundException") {
+    val nio = raw(new CheckpointFiles.RawLocalFs)
+    val missing = new Path(Files.createTempDirectory("perm").resolve("missing").toUri)
+    intercept[FileNotFoundException](nio.setPermission(missing, perm("644")))
+  }
+
+  test("the state engine's settings resolve file: paths to the process-free file system, uncached") {
+    val conf = new Configuration()
+    SamsaStream.stateEngine(StoreType.RocksDB).foreach { case (k, v) => conf.set(k, v) }
+    val dir = new Path(Files.createTempDirectory("ckpt-files").toUri)
+    val fs = dir.getFileSystem(conf)
+    assert(fs.isInstanceOf[CheckpointFiles.LocalFs], fs.getClass)
+    assert(fs ne dir.getFileSystem(conf))
+    // created files and directories get the requested mode
+    val sub = new Path(dir, "a/b")
+    assert(fs.mkdirs(sub, perm("750")))
+    assert(mode(java.nio.file.Paths.get(sub.toUri)) == Integer.parseInt("750", 8))
   }
 
   test("a flipped byte in a committed changelog fails the restart loudly") {

@@ -11,6 +11,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
+import scala.jdk.CollectionConverters._
 
 /** R5 parity: samsa's `query(key)` point lookup
   * (/root/reference/samsa/kafka/storage.py:208-219) from OUTSIDE the
@@ -87,7 +88,7 @@ class StateQuerySpec extends SparkSpec {
     for (wrong <- Seq(1, 2, 4, 6, 8))
       assert(!full.forall { case (key, (_, p)) => SamsaStream.confirms(key, p, wrong) }, s"n=$wrong")
     val firstKeys = (0 until 3).map { p =>
-      DriverStateScan(StatefulStore.readState(spark, ckpt)).read(p, "key.value")(_.next().head)
+      DriverStateScan(StatefulStore.readState(spark, ckpt)).lookup(p, "", "key.value")._1.get.head
     }
     assert(firstKeys.zipWithIndex.forall { case (key, p) => SamsaStream.confirms(key, p, 3) })
 
@@ -120,6 +121,28 @@ class StateQuerySpec extends SparkSpec {
       }
       assert(got == Some(full(key)._1))
       assert(warns.size == 1 && warns.head._2.contains(ckpt), warns.toString)
+    }
+
+  /** Every file and directory under `dir`: its relative name, size and
+    * mtime. A file written and deleted again still moves its directory's
+    * mtime. */
+  private def listing(dir: String): Map[String, (Long, java.nio.file.attribute.FileTime)] = {
+    val root = Paths.get(dir)
+    val files = Files.walk(root)
+    try files.iterator().asScala
+      .map(f => root.relativize(f).toString -> (Files.size(f), Files.getLastModifiedTime(f))).toMap
+    finally files.close()
+  }
+
+  for (store <- Seq(StoreType.RocksDB, StoreType.Default))
+    test(s"twenty lookups leave the checkpoint unchanged: $store") {
+      val (stream, ckpt) = StateStores.build(spark, store, 3, batches)
+      val before = listing(ckpt)
+      assert(before.keys.exists(_.startsWith("state")), before.keys)
+      (0 until 20).foreach(i => assert(stream.query(spark, ckpt, s"k$i").isDefined == stored(s"k$i")))
+      val after = listing(ckpt)
+      val changed = (after.toSet diff before.toSet) ++ (before.toSet diff after.toSet)
+      assert(changed.isEmpty, changed)
     }
 
   test("twenty lookups leave no broadcast block on the driver") {
