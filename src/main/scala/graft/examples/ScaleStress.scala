@@ -1,327 +1,45 @@
 package graft.examples
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.Tables
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scale-stress harness: measures the heavy dedup/ANN/curation queries
-  * on a DERIVED fixture `factor`× the size of the driver's largest one
-  * (sf0.1), to turn the "would this survive 100×?" argument from a
-  * plan-shape claim into a measured slope (VERDICT r4 "What's missing"
-  * item 2 — /root/testdata tops out at sf0.1).
+/** Derived fixtures for specs: a source fixture replicated `factor`
+  * times, with the SIZE of the workload changed and its SHAPE kept.
   *
   * The fixture is derived, never hand-synthesized semantics: each
-  * replica i of a document rotates its token sequence by i+1 positions
-  * (every 3-gram shingle changes, so replicas are NOT near-dups of the
-  * original — the explosion a naive copy would plant in every LSH
-  * bucket); each replica of an embedding rotates the vector by i+1
-  * coordinates (norm- and distribution-preserving, so random-pair
-  * cosine structure matches the base fixture). Ids shift by
-  * i * 10^9. The derived data lives under the repo target dir — the
-  * read-only driver fixtures are untouched, and correctness gates
-  * still run exclusively on driver data.
-  *
-  * Usage: runMain graft.examples.ScaleStress [factor] [outDir] [src]
-  * [query,query,...] (default: every row in `heavy`; a name must be a
-  * registry row or one of the two pseudo-names below). Prints one JSON
-  * line: per-query best-of-2 seconds at the scaled fixture, plus row
-  * counts.
-  *
-  * Registry rows are timed here; their results are checked by the
-  * oracle and golden hashes at fixture scale. Two pseudo-names add the
-  * auto-knob IVF recall gates, which hold only at scale: `ivf_recall`
-  * (also run with `ext_ivf_topk_batch`) and `emb_ivfpq_scale`. The
-  * checks that hold at any size run on the derived fixture in
-  * ScaleStressSpec.
+  * replica of a document shuffles its tokens (seeded), so every 3-gram
+  * shingle changes and replicas are NOT near-dups of the original (the
+  * explosion a naive copy would plant in every LSH bucket); each
+  * replica of an embedding is an orthogonal transform of it (norm- and
+  * distribution-preserving, so random-pair cosine structure matches
+  * the base fixture). Ids shift by a per-replica stride. The derived
+  * data lives in the caller's output dir; the source fixtures are
+  * untouched. `ScaleStressSpec` pins these invariants and runs the
+  * approximate operators' recall and convergence checks on the
+  * result, including the auto-IVF and IVF-PQ recall gates at 10×
+  * sf0.1.
   */
 object ScaleStress {
-
-  /** The scale-sensitive registry entries: every family whose cost is
-    * NOT trivially linear-per-row (candidate joins, iterative CC,
-    * full-corpus ANN, window-over-tokens). */
-  val heavy: Seq[String] = Seq(
-    "doc_minhash_candidates",
-    "doc_simhash",
-    "doc_ngram_jaccard",
-    "doc_dedup_pipeline",
-    "doc_dedup_keep_best",
-    "doc_decontaminate",
-    "doc_lsh_verified_dedup",
-    "doc_incremental_neardups",
-    "doc_repetition",
-    "doc_top_ngrams",
-    "ext_ann_topk_batch",
-    "ext_ivf_topk_batch",
-    "emb_semdedup",
-    "emb_dedup_lsh",
-    "emb_incremental_neardups",
-    // r7 GlobalRank-backed global-order ops: the two-pass form must
-    // stay sort-dominated (no single-partition funnel) as rows grow
-    "doc_pack_sequences",
-    "doc_quality_threshold",
-    // r8: span-level substring dedup (df-aggregate shape — expected to
-    // track the linear-per-row family, not the pair-forming one).
-    // win_range_frame_cont is NOT here: the derived fixture replicates
-    // only documents/embeddings, and its scale behavior is bounded by
-    // the measured replication factor anyway (SCALE.md windows note).
-    "doc_span_dedup",
-    // r9 (VERDICT r8 item 5): the span policy/cut siblings and the
-    // end-to-end corpus-build composite — the funnel was the one new
-    // code path with no scale datapoint
-    "doc_span_coverage",
-    "doc_span_cut",
-    "pipeline_corpus_build",
-    // r9: BM25 retrieval — expected flat-ish (term-pruned tf branch)
-    "ext_bm25_topk",
-    // r9: DSIR importance weights (expected linear — one bucket-count
-    // pass + broadcast log-ratio join) and cluster-density pruning
-    // (k-means assign + per-cell windows; auto nCells keeps cell
-    // occupancy constant, so the windows must stay flat as n grows)
-    "doc_dsir_weight",
-    "emb_cluster_prune",
-    // r9: CCNet perplexity tertiles — same LM-broadcast shape as DSIR
-    // plus the GlobalRank two-pass for the corpus-wide split (expected
-    // ~linear; the rank adds one range exchange over doc-level rows)
-    "doc_lm_perplexity",
-    // r9: semantic decontamination — the eval side is fixed-size, so
-    // cost must track the corpus side's bucket-join volume (~linear)
-    "emb_decontaminate",
-    // r9: BPE pair counts — expected flat-ish (the pair explosion is
-    // vocabulary-sized; replicas shuffle tokens, not characters, so the
-    // distinct-word set is constant as the corpus replicates)
-    "doc_bpe_pairs",
-    // r9: event-analytics family — events.parquet replicates with
-    // user_id shifts, so group counts grow with the factor; funnels are
-    // user_id-keyed joins (expected ~linear), MAD is two aggregate
-    // passes + a 5-row broadcast, the profiler is one scan
-    "evt_funnel",
-    "evt_funnel_windowed",
-    "evt_retention_cohort",
-    "evt_anomaly_mad",
-    "profile_columns",
-    "doc_source_quota",
-    // r11: trained quality classifier — featurize (md5-hash per token)
-    // + 8 treeAggregate gradient sweeps + one scoring aggregate;
-    // expected ~linear in tokens with a flat sweep count
-    "doc_quality_classifier",
-    // r9: grid-bucketed interval join (day-sliced). Replicas add fresh
-    // users to the SAME time window, so the co-activity pair OUTPUT
-    // grows ~factor² by construction (unsliced form measured 17 s at
-    // 1× -> 290 s at 10× — recorded in SCALE.md as the density
-    // caveat); the day-sliced registry row keeps slices cell-bounded
-    "join_interval_overlap",
-    // r12: exact prefix-filtered set-similarity join — the claim to
-    // measure is that candidate volume tracks the true near-dup count
-    // (prefixes are the rarest shingles), so cost must stay near the
-    // linear-scan family even as replicas multiply the corpus.
-    // (ext_triangle_count is NOT here: it reads lineitem, which the
-    // derived fixture does not replicate — its scale argument is
-    // structural: a top-3 kNN graph has <= 3n edges and <= 9n wedges
-    // by construction at any n.)
-    "doc_setsim_join",
-    // r12: seasonal decomposition — replicas densify the SAME time
-    // window, so the hourly series length is constant and cost must
-    // track the pre-aggregation scan, not the window stages
-    "ts_seasonal_decompose",
-    // r12: JL projection — expected linear (explode + broadcast-join +
-    // map-side-combinable aggregate; the 512-row sign matrix is
-    // corpus-size-independent)
-    "emb_jl_project",
-    // r14 (VERDICT r12 item 7): the kNN-graph family — replicated
-    // lineitem gives `factor` disjoint copies of the supplier co-order
-    // graph (same degree distribution, factor× nodes/edges), so these
-    // must track the linear family: the kNN construction bounds edges
-    // at 3n and the compact-forward join bounds wedges at O(9n).
-    "ext_triangle_count",
-    "ext_clustering_coeff",
-    "ext_kcore",
-    // r14: wedge enumeration + truncated BFS on the same kNN graph —
-    // the same replicated-fixture linearity expectation as the family
-    // above (disjoint copies, bounded degree)
-    "ext_link_prediction",
-    "ext_bfs_distance",
-    // r14: density-auto-eps DBSCAN — the replicated embedding fixture
-    // densifies the same coordinate space, which is exactly the regime
-    // the eps ∝ 1/sqrt(n) knob linearizes; expected near-linear wall
-    "emb_dbscan_grid",
-    // r14 part 2: eval-side containment audit — the bench slice grows
-    // with the corpus here (doc_id % 25 replicates too), so this
-    // measures the pair-forming shingle join under a growing eval set,
-    // the worst case for the bench-broadcast claim
-    "doc_eval_contamination",
-    // r14 part 2: SQ8 quantization + silhouette — both explode+
-    // broadcast+aggregate shapes (64-row scale table / k·64 centroid
-    // table), expected linear like jl_project
-    "emb_quantize_int8",
-    "emb_silhouette",
-    // r14 part 2: hash-argmin random walks on the replicated co-order
-    // graph — walks scale with nodes, each step is one equi-join +
-    // per-walk argmin; expected linear (disjoint replicas)
-    "ext_random_walk",
-    // r14 part 2: events-family additions — stickiness expands the
-    // deduped day×user frame 7×, ACF windows run over the (constant-
-    // length) hourly series; both expected ~linear in the scan
-    "evt_stickiness",
-    "ts_acf",
-    // r14 part 3b: winnowing (per-doc hash windows — linear), pairwise
-    // cross-correlation (constant series length — flat), whitening
-    // (one treeAggregate + map-only projection — linear), MIPS top-k
-    // (broadcast queries × corpus scan — linear)
-    "doc_winnowing",
-    "ts_cross_corr",
-    "emb_pca_whiten",
-    "emb_mips_topk",
-    // r14 part 3b: RFM (user-frame GlobalRank passes — linear) and
-    // basket pairs (per-order C(b,2) fan-out on disjoint replicas —
-    // linear)
-    "evt_rfm_segments",
-    "ext_copurchase_pairs",
-    // r15: audit family — snapshot diff is ONE full-outer SMJ on the
-    // replicated order key (expected linear), reconciliation is one
-    // fact-side partial agg + a key-colocated join (expected linear in
-    // lineitem rows); both ride the orders/lineitem-money fixtures
-    "etl_snapshot_diff",
-    "etl_reconcile_totals",
-    // r15: Pareto skyline — the bucket prefilter must keep the decision
-    // windows bucket-local as parts replicate (expected linear scan +
-    // tiny bucket table; the frontier itself is duplicated per replica)
-    "ext_skyline",
-    // r15: inverted-index build — distinct + capped-postings window +
-    // agg, all keyed on (term) (expected ~linear in token volume;
-    // postings stay 20-capped however hot the stop-words get)
-    "doc_inverted_index",
-    // r15: event-time range join — per-user fan-out is views×purchases
-    // within the hour; replicas add FRESH users to the same window, so
-    // pair output and cost must scale ~linearly with the factor
-    "join_view_purchase_window",
-    // r15: Borůvka spanning backbone on the replicated co-order kNN
-    // graph — disjoint replicas keep per-round pick joins linear; the
-    // budget grows only as ceil(log2 n)+1, so total cost must track
-    // n log n (the rounds are keyed shuffles of the shrinking comp set)
-    "ext_mst_backbone",
-    // r15 part 2: Theil–Sen (pair mass is series-length-bounded —
-    // expected FLAT like acf/cross_corr), Gini + equi-depth deciles
-    // (GlobalRank two-passes over user-/order-sized frames — linear),
-    // assortativity (degree-join over 3n edges — linear)
-    "ts_theil_sen",
-    "evt_gini",
-    "profile_histogram_eqdepth",
-    "ext_assortativity",
-    // r16: PII redaction — pure regexp map over the corpus, expected
-    // strictly linear (the no-shuffle baseline the other curves are
-    // judged against)
-    "doc_pii_redact",
-    // r15 part 3: winsorized summary — two agg passes + a |types|-row
-    // broadcast (the MAD shape); expected linear in the scan
-    "profile_winsorize")
 
   /** Replicated (l_orderkey, l_suppkey) lineitem projection — replica
     * i shifts orderkey by i·10⁹ and suppkey by i·10⁷, so the supplier
     * co-order graph becomes `factor` DISJOINT copies of the base graph:
     * node/edge counts scale by the factor while the per-order supplier
     * fan-out (the co-order join's expansion suspect) stays exactly the
-    * base distribution. Only the two graph-feeding columns are written
-    * — the kNN rows never read the rest, and parquet projection means
-    * a full-width replica would only add write cost. Built on demand
-    * (graph names requested). */
+    * base distribution. Only the two graph-feeding columns are
+    * written. */
   private[examples] def buildLineitemFixture(spark: SparkSession, src: String, out: String,
       factor: Int): Unit = {
-    // v3 marker (r15 part 4): + l_quantity/l_shipdate/l_returnflag/
-    // l_linestatus (the TPC-H Q1/Q19 columns), and l_partkey now
-    // strides by the SAME 1e9 as buildPartFixture's p_partkey — the old
-    // 1e7 stride meant a lineitem-part join at factor >= 2 silently
-    // matched only replica 0. Older fixtures on disk rebuild rather
-    // than failing rows with a missing-column error.
-    val fs = new java.io.File(s"$out/_built_li_v3_x$factor")
+    val fs = new java.io.File(s"$out/_built_li_x$factor")
     if (fs.exists()) return
     val base = spark.read.parquet(s"$src/lineitem.parquet")
-      .select(col("l_orderkey"), col("l_suppkey"), col("l_partkey"),
-        col("l_extendedprice"), col("l_discount"), col("l_tax"),
-        col("l_quantity"), col("l_shipdate"),
-        col("l_returnflag"), col("l_linestatus"))
     val replicated = (0 until factor).map { i =>
       base.select(
         (col("l_orderkey") + lit(i.toLong * 1000000000L)).as("l_orderkey"),
-        (col("l_suppkey") + lit(i.toLong * 10000000L)).as("l_suppkey"),
-        // r14 part 3b: partkey rides along (same disjoint-shift law) so
-        // the basket-mining row can ride this fixture; the kNN rows
-        // project it away at the parquet scan
-        (col("l_partkey") + lit(i.toLong * 1000000000L)).as("l_partkey"),
-        // r15: money columns ride unchanged (the reconciliation row
-        // recomputes per-order totals from them; replicas keep the base
-        // per-order arithmetic exactly, keyed under the shifted order)
-        col("l_extendedprice"), col("l_discount"), col("l_tax"),
-        // r15 part 4: Q1/Q19 predicate + aggregate columns ride
-        // unchanged — replicas repeat the base date/flag distribution
-        col("l_quantity"), col("l_shipdate"),
-        col("l_returnflag"), col("l_linestatus"))
+        (col("l_suppkey") + lit(i.toLong * 10000000L)).as("l_suppkey"))
     }.reduce(_ unionByName _)
     replicated.write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-    fs.createNewFile(): Unit
-  }
-
-  /** Replicated orders with the SAME 1e9 orderkey stride as the
-    * lineitem fixture, so header/detail keys stay consistent across
-    * replicas (the reconciliation row joins them). Prices, statuses and
-    * dates ride unchanged — the snapshot-diff derivation rules (%97 /
-    * %13 / %89) hit shifted keys at the same rates. */
-  private def buildOrdersFixture(spark: SparkSession, src: String,
-      out: String, factor: Int): Unit = {
-    val fs = new java.io.File(s"$out/_built_orders_x$factor")
-    if (fs.exists()) return
-    new java.io.File(out).mkdirs()
-    val base = spark.read.parquet(s"$src/orders.parquet")
-    val replicated = (0 until factor).map { i =>
-      base.select(
-        (col("o_orderkey") + lit(i.toLong * 1000000000L)).as("o_orderkey"),
-        (col("o_custkey") + lit(i.toLong * 1000000000L)).as("o_custkey"),
-        col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
-        col("o_orderpriority"))
-    }.reduce(_ unionByName _)
-    replicated.write.mode("overwrite").parquet(s"$out/orders.parquet")
-    fs.createNewFile(): Unit
-  }
-
-  /** Replicated customer (r20, ADVICE r19): c_custkey shifts by the
-    * SAME 1e9-per-replica stride as the orders fixture's o_custkey, so
-    * the ext_pagerank_personalized seed join (customer ⋈ trade pairs on
-    * custkey) finds every replica's BUILDING-segment customers;
-    * c_mktsegment rides unchanged, so the seed RATIO is
-    * factor-invariant. */
-  private def buildCustomerFixture(spark: SparkSession, src: String,
-      out: String, factor: Int): Unit = {
-    val fs = new java.io.File(s"$out/_built_customer_x$factor")
-    if (fs.exists()) return
-    new java.io.File(out).mkdirs()
-    val base = spark.read.parquet(s"$src/customer.parquet")
-    val replicated = (0 until factor).map { i =>
-      base.withColumn("c_custkey",
-        col("c_custkey") + lit(i.toLong * 1000000000L))
-    }.reduce(_ unionByName _)
-    replicated.write.mode("overwrite").parquet(s"$out/customer.parquet")
-    fs.createNewFile(): Unit
-  }
-
-  /** Replicated part: keys shift, (price, size) ride unchanged — each
-    * replica re-plants the SAME Pareto frontier, so the skyline OUTPUT
-    * grows by the factor while the dominated mass (the pruning claim
-    * under test) grows identically. */
-  private def buildPartFixture(spark: SparkSession, src: String,
-      out: String, factor: Int): Unit = {
-    // v2 marker (r15 part 4): + p_brand (the Q19 clause key; replicas
-    // repeat the base brand distribution under shifted part keys)
-    val fs = new java.io.File(s"$out/_built_part_v2_x$factor")
-    if (fs.exists()) return
-    new java.io.File(out).mkdirs()
-    val base = spark.read.parquet(s"$src/part.parquet")
-      .select(col("p_partkey"), col("p_retailprice"), col("p_size"),
-        col("p_brand"))
-    val replicated = (0 until factor).map { i =>
-      base.select(
-        (col("p_partkey") + lit(i.toLong * 1000000000L)).as("p_partkey"),
-        col("p_retailprice"), col("p_size"), col("p_brand"))
-    }.reduce(_ unionByName _)
-    replicated.write.mode("overwrite").parquet(s"$out/part.parquet")
     fs.createNewFile(): Unit
   }
 
@@ -367,7 +85,7 @@ object ScaleStress {
       t.mkString(" ")
     }
     val docs = Tables.documents(spark, src)
-    // stride derived from the source (ADVICE r9, same as events/emb)
+    // stride derived from the source, as for the embeddings below
     val docStride = math.max(1000000000L,
       docs.agg(max("doc_id")).head.getLong(0) + 1L)
     val replicated = (0 until factor).map { i =>
@@ -402,199 +120,5 @@ object ScaleStress {
     }.reduce(_ unionByName _)
     replicatedEmb.write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     fs.createNewFile(): Unit
-  }
-
-  /** Replicate events.parquet: each replica shifts user_id (fresh users,
-    * so funnel/retention/MAD group counts scale with the factor) and
-    * event_id; timestamps and the event-type mix stay as-is — the same
-    * 30-day window with factor× the users is exactly how a telemetry
-    * stream grows. Separate marker: derived docs/emb fixtures predate
-    * this and stay valid. */
-  private def buildEventsFixture(spark: SparkSession, src: String, out: String,
-      factor: Int): Unit = {
-    val fs = new java.io.File(s"$out/_built_events_x$factor")
-    if (fs.exists()) return
-    new java.io.File(out).mkdirs()
-    val ev = Tables.events(spark, src)
-    // stride derived from the source (ADVICE r9): fixed 1e9 would alias
-    // replica ranges — and collapse "fresh users" — once source ids
-    // reach 1e9 on larger or chained fixtures
-    val mx = ev.agg(max("event_id"), max("user_id")).head
-    val stride = math.max(1000000000L,
-      math.max(mx.getLong(0), mx.getLong(1)) + 1L)
-    val replicated = (0 until factor).map { i =>
-      if (i == 0) ev
-      else ev.select(
-        (col("event_id") + lit(i.toLong * stride)).as("event_id"),
-        col("ts"),
-        (col("user_id") + lit(i.toLong * stride)).as("user_id"),
-        col("event_type"), col("value"), col("props"))
-    }.reduce(_ unionByName _)
-    replicated.write.mode("overwrite").parquet(s"$out/events.parquet")
-    fs.createNewFile(): Unit
-  }
-
-  def main(args: Array[String]): Unit = {
-    val factor = if (args.length > 0) args(0).toInt else 10
-    val out = if (args.length > 1) args(1) else s"/root/repo/target/sfx$factor"
-    val src = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    // optional 4th arg: comma-separated subset of `heavy` (chunked runs)
-    val names = if (args.length > 3) args(3).split(',').toSeq else heavy
-    // factor>=100 needs partitions ∝ data at the fixed core count
-    // (SPARK_GRAFT_SHUFFLE_PARTITIONS; AQE coalesces the small stages
-    // back down)
-    val spark = graft.Session.local()
-
-    // r19: the documents/embeddings/events replicas are the expensive
-    // builds at factor 1000; skip them when every requested row is
-    // relational-only (the ext_pagerank scale run reads just the
-    // lineitem+orders fixtures its own conditional block builds below)
-    val relationalOnly = Set("ext_pagerank", "ext_pagerank_personalized",
-      "ext_triangle_count", "ext_clustering_coeff", "ext_kcore",
-      "ext_link_prediction", "ext_bfs_distance",
-      "ext_random_walk", "ext_copurchase_pairs", "ext_mst_backbone",
-      "ext_assortativity", "etl_snapshot_diff", "etl_reconcile_totals",
-      "profile_histogram_eqdepth", "ext_skyline", "sql_tpch_q1",
-      "sql_tpch_q19")
-    val needsCorpus = !names.forall(relationalOnly)
-    if (needsCorpus) {
-      buildFixture(spark, src, out, factor)
-      buildEventsFixture(spark, src, out, factor)
-    }
-    val nDocs = if (needsCorpus)
-      spark.read.parquet(s"$out/documents.parquet").count() else 0L
-    val nVecs = if (needsCorpus)
-      spark.read.parquet(s"$out/embeddings.parquet").count() else 0L
-
-    val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    val byName = SparkEntry.defs.map(q => q.name -> q).toMap
-    // the kNN-graph registry rows read lineitem, which the base fixture
-    // does not replicate — build the 2-column projection on demand
-    val graphNames = Set("ext_triangle_count", "ext_clustering_coeff",
-      "ext_kcore", "ext_link_prediction", "ext_bfs_distance",
-      "ext_random_walk", "ext_copurchase_pairs", "ext_mst_backbone",
-      "ext_assortativity")
-    if (names.exists(graphNames)) buildLineitemFixture(spark, src, out, factor)
-    // r15 audit/skyline rows: header + detail-money + part fixtures
-    if (names.contains("etl_reconcile_totals") || names.contains("sql_tpch_q1")
-        || names.contains("sql_tpch_q19"))
-      buildLineitemFixture(spark, src, out, factor)
-    if (names.contains("etl_snapshot_diff") || names.contains("etl_reconcile_totals")
-        || names.contains("profile_histogram_eqdepth"))
-      buildOrdersFixture(spark, src, out, factor)
-    if (names.contains("ext_skyline") || names.contains("sql_tpch_q19"))
-      buildPartFixture(spark, src, out, factor)
-    // r19 (VERDICT r18 item 3): the REGISTRY ext_pagerank row at scale —
-    // its orders⋈lineitem trade-graph prologue needs both fixtures.
-    // r20 (ADVICE r19): the personalized row shares the prologue AND
-    // reads customer from the out dir for its seed set — gate covers
-    // it, plus the customer replica its seed join needs.
-    if (names.contains("ext_pagerank")
-        || names.contains("ext_pagerank_personalized")) {
-      buildLineitemFixture(spark, src, out, factor)
-      buildOrdersFixture(spark, src, out, factor)
-    }
-    if (names.contains("ext_pagerank_personalized"))
-      buildCustomerFixture(spark, src, out, factor)
-    // pseudo-names select the recall gates below without timing a
-    // registry row; anything else unrecognized is a typo — fail fast
-    // rather than silently drop the timing row
-    val pseudoNames = Set("ivf_recall", "emb_ivfpq_scale")
-    val unknown = names.filterNot(n => byName.contains(n) || pseudoNames(n))
-    require(unknown.isEmpty,
-      s"unknown query names (not in SparkEntry.defs or $pseudoNames): ${unknown.mkString(",")}")
-    names.filter(byName.contains).foreach { name =>
-      val q = byName(name)
-      var best = Double.MaxValue
-      var rep = 0
-      var failed = false
-      while (rep < 2 && !failed) {
-        val t0 = System.nanoTime()
-        try {
-          q.run(spark, out).write.format("noop").mode("overwrite").save()
-          best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        } catch {
-          case e: Throwable =>
-            errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-            failed = true
-        }
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        // drop the rep's shuffle dependencies so the ContextCleaner can
-        // reclaim its shuffle files before the next rep doubles them
-        System.gc()
-        rep += 1
-      }
-      if (!failed) {
-        timings(name) = best
-        System.err.println(f"[scale] $name: $best%.2f s")
-      } else System.err.println(s"[scale] $name FAILED: ${errors(name)}")
-    }
-
-    // Recall gates for the auto-knob IVF paths: 50-query sample against
-    // the exact brute-force top-10. The contracts (auto-IVF >= 0.95,
-    // IVF-PQ auto-refine >= 0.9; the fixed refine=16 it replaced measured
-    // 0.448 at the 2M gate) hold from the 10x fixture up; on
-    // ScaleStressSpec's 1000 vectors the two measure 0.70 and 0.84, so
-    // they are checked here rather than in a spec.
-    val ivfGate = names.contains("ext_ivf_topk_batch") || names.contains("ivf_recall")
-    if (ivfGate || names.contains("emb_ivfpq_scale")) {
-      import graft.functions.GraftFunctions.{cosineSim, squaredL2, topKByScore}
-      val embS = spark.read.parquet(s"$out/embeddings.parquet")
-      val qids = embS.select("vec_id").orderBy("vec_id").limit(50)
-      def pairs(df: DataFrame): Set[(Long, Long)] = {
-        val p = df.select("qid", "cid").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        spark.catalog.clearCache(); graft.ext.Caches.releaseAll(spark)
-        p
-      }
-      // top-10 per query by `score` over (qe, ce), higher is closer
-      def exactTop10(score: Column): Set[(Long, Long)] = {
-        val qside = embS.join(broadcast(qids), "vec_id")
-          .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-        val corpus = embS.select(col("vec_id").as("cid"), col("embedding").as("ce"))
-        pairs(broadcast(qside).join(corpus, col("qid") =!= col("cid"))
-          .groupBy("qid").agg(topKByScore(score, col("cid"), 10).as("top"))
-          .select(col("qid"), explode(col("top")).as("t"))
-          .select(col("qid"), col("t.id").as("cid")))
-      }
-      def timedPairs(df: => DataFrame): (Set[(Long, Long)], Double) = {
-        val t0 = System.nanoTime()
-        val p = pairs(df)
-        (p, (System.nanoTime() - t0) / 1e9)
-      }
-      def recall(got: Set[(Long, Long)], truth: Set[(Long, Long)]): Double =
-        (got & truth).size.toDouble / math.max(truth.size, 1)
-      if (ivfGate) {
-        val (ivf, ivfSec) = timedPairs(
-          graft.ext.Similarity.ivfTopK(embS, queries = qids, k = 10))
-        val r = recall(ivf, exactTop10(cosineSim(col("qe"), col("ce"))))
-        timings("ext_ivf_topk_batch_tuned_recall") = r
-        timings("ivf_recall_sampled") = ivfSec
-        System.err.println(
-          f"[scale] auto-IVF sampled (50 q): $ivfSec%.2f s, recall@10 vs exact: $r%.3f")
-        require(factor < 10 || r >= 0.95,
-          f"auto-IVF recall@10 $r%.3f < 0.95 at factor $factor%d")
-      }
-      if (names.contains("emb_ivfpq_scale")) {
-        val (pq, sec) = Seq.fill(2)(timedPairs(
-          graft.ext.Embeddings.ivfPqTopK(embS, qids, k = 10))).minBy(_._2)
-        val dbl = (c: String) => transform(col(c), x => x.cast("double"))
-        val r = recall(pq, exactTop10(-squaredL2(dbl("qe"), dbl("ce"))))
-        timings("emb_ivfpq_scale") = sec
-        timings("emb_ivfpq_scale_recall") = r
-        System.err.println(
-          f"[scale] emb_ivfpq_scale: $sec%.2f s, recall@10 vs exact: $r%.3f")
-        require(factor < 10 || r >= 0.9,
-          f"IVF-PQ auto-refine recall@10 $r%.3f < 0.9 at factor $factor%d")
-      }
-    }
-
-    val qs = timings.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) =>
-      s""""$k":"${v.replace("\\", "\\\\").replace("\"", "\\\"").take(200)}"""" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"scale_stress","factor":$factor,"n_docs":$nDocs,"n_vecs":$nVecs,"queries":$qs,"errors":$es}""")
-    spark.stop()
   }
 }

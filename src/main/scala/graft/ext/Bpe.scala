@@ -110,32 +110,28 @@ object Bpe {
       .select("word", "wc", "pos", "sym")
   }
 
+  /** Per-merge lineage handling, one cadence in both modes (as
+    * connected components): every step is a lazy
+    * `Checkpoints.persistRound` (tracked — freed by
+    * `Caches.releaseAll`), and every `graft.checkpoint.stride`-th step
+    * is a lazy cut instead. In reliable mode (`graft.checkpoint.dir`
+    * set) a cut writes the full vocab-sized sequence frame through the
+    * checkpoint FS, so striding trades at most `stride` merge steps of
+    * recovery recompute for proportionally fewer checkpoint writes. */
+  private def stepCut(seq: DataFrame, step: Int, strideN: Int): DataFrame =
+    if (step % strideN == 0) seq.cutLineageLazy()
+    else Caches.track(Checkpoints.persistRound(seq))
+
   /** Train `nMerges` merges; returns (merge table rows
     * (step, left, right, count), final segmented sequences). Fails
     * loud if the vocabulary exhausts before the budget — the unrolled
     * oracle runs EXACTLY nMerges steps, so a silent early stop would
-    * diverge from it. Checkpoints are LAZY (eager=false): the step's
+    * diverge from it. Step cuts and rounds are LAZY: the step's
     * bestPair argmax materializes them, so each step costs one Spark
     * job, not two. */
-  /** Per-merge lineage handling (r21, VERDICT r20 item 7 — the CC-loop
-    * cadence law applied to the BPE merge loop): LOCAL mode keeps the
-    * per-step lazy `localCheckpoint` (nearly free; every step's plan
-    * stays a flat leaf). RELIABLE mode (`graft.checkpoint.dir` set)
-    * writes the full vocab-sized sequence frame through the checkpoint
-    * FS on every cut, so it cuts only every `graft.checkpoint.stride`
-    * steps and runs lazy `Checkpoints.persistRound`s between (tracked —
-    * freed by `Caches.releaseAll`); recovery after an executor loss
-    * recomputes at most `stride` merge steps of window algebra from the
-    * last cut. */
-  private def stepCut(seq: DataFrame, step: Int, strideOn: Boolean,
-      strideN: Int): DataFrame =
-    if (!strideOn || step % strideN == 0) seq.cutLineageLazy()
-    else Caches.track(Checkpoints.persistRound(seq))
-
   def train(docs: DataFrame, nMerges: Int)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
     require(nMerges >= 1)
-    val strideOn = Checkpoints.reliableModeOn(docs)
     val strideN = Checkpoints.stride(docs)
     var seq = initSeq(wordCounts(docs)).cutLineageLazy()
     val merges = Seq.newBuilder[(Int, String, String, Long)]
@@ -145,7 +141,7 @@ object Bpe {
         s"Bpe.train: vocabulary exhausted at merge $s of $nMerges — " +
         "lower nMerges (the unrolled oracle runs a fixed step count)"))
       merges += ((s, a, b, c))
-      seq = stepCut(mergeStep(seq, a, b), s, strideOn, strideN)
+      seq = stepCut(mergeStep(seq, a, b), s, strideN)
       s += 1
     }
     (merges.result(), seq)
@@ -176,11 +172,10 @@ object Bpe {
     * learned order, no pair-count argmax per step. */
   def applyMerges(docs: DataFrame,
       merges: Seq[(Int, String, String, Long)]): DataFrame = {
-    val strideOn = Checkpoints.reliableModeOn(docs)
     val strideN = Checkpoints.stride(docs)
     merges.foldLeft(initSeq(wordCounts(docs)).cutLineageLazy()) {
       case (seq, (step, a, b, _)) =>
-        stepCut(mergeStep(seq, a, b), step, strideOn, strideN)
+        stepCut(mergeStep(seq, a, b), step, strideN)
     }
   }
 }

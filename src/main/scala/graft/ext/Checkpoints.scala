@@ -63,22 +63,7 @@ object Checkpoints {
       applied.computeIfAbsent((sc, dir), _ => { sc.setCheckpointDir(dir); dir })
     }
 
-  /** True when `graft.checkpoint.dir` is configured — i.e. [[cut]]
-    * would write a RELIABLE checkpoint. The BPE merge loop picks its
-    * cadence with this: LOCAL mode cuts every step (a `localCheckpoint`
-    * is nearly free, but its blocks cannot be recomputed, so the cut IS
-    * the step's only copy); RELIABLE mode cuts every [[stride]] steps
-    * and runs [[persistRound]] between, trading at most `stride` steps
-    * of recovery recompute for proportionally fewer checkpoint
-    * write-throughs (measured r20 on the 5M-node reliable CC A/B:
-    * per-round cuts were most of CC's +21.6% reliable tax).
-    *
-    * Connected components no longer forks on the mode: its RDD rounds
-    * persist every round and cut every [[stride]] rounds in both modes
-    * (see [[cutRdd]] and `Dedup.connectedComponents`). */
-  def reliableModeOn(df: DataFrame): Boolean = configuredDir(df.sparkSession).isDefined
-
-  /** A round of a reliable-mode loop between two [[cut]]s: `df`'s rows
+  /** A round of an iterative loop between two [[cut]]s: `df`'s rows
     * persisted as an RDD (MEMORY_AND_DISK), returned as a DataFrame
     * whose plan is one flat `LogicalRDD` leaf over that RDD.
     *
@@ -86,7 +71,7 @@ object Checkpoints {
     * plan inside an `InMemoryRelation`, which Catalyst re-analyzes and
     * AQE re-renders on every later round. Unlike `localCheckpoint`,
     * lineage is kept: a lost block recomputes from the previous rounds
-    * back to the last reliable cut.
+    * back to the last cut.
     *
     * The round is lazy: AQE runs `df`'s shuffle stages here and leaves
     * the final stage to the first action on the result, so a consumer
@@ -191,7 +176,5 @@ object Checkpoints {
   implicit final class CutOps(private val df: DataFrame) extends AnyVal {
     def cutLineage(): DataFrame = cut(df, eager = true)
     def cutLineageLazy(): DataFrame = cut(df, eager = false)
-    /** Loop-invariant materialization — see [[Checkpoints.pin]]. */
-    def pinInvariant(): DataFrame = pin(df)
   }
 }

@@ -397,7 +397,8 @@ object Embeddings {
     * Recall floor on small corpora: with the auto knobs, recall@10
     * against brute force measured 0.84 on 1 000 vectors (ScaleStress's
     * factor-2 sf0.001 embeddings, 50 queries); the ≥ 0.9 contract holds
-    * from 10× sf0.1 up. For small corpora, `Similarity.annTopKRouted`
+    * from 10× sf0.1 up (20 000 vectors), where `ScaleStressSpec` gates
+    * it. For small corpora, `Similarity.annTopKRouted`
     * (BRP below `Similarity.brpRouteMaxN` rows, 0.99 on that fixture) is
     * the better call.
     */

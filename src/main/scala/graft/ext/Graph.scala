@@ -188,13 +188,12 @@ object Graph {
     // seeds ∩ node set (the is_seed flags of this very frame), not all
     // distinct seeds — a seed that never appears as an edge src is
     // outside the rank domain, and counting it would silently leak its
-    // teleport/nS share out of the system every sweep. One checkpoint
+    // teleport/nS share out of the system every sweep. One pin
     // serves both the count and the per-sweep teleport term.
-    val base0 = nodes.join(
+    val base0 = Checkpoints.pin(nodes.join(
         seeds.select(col("id")).distinct().withColumn("is_seed", lit(true)),
         Seq("id"), "left")
-      .select(col("id"), coalesce(col("is_seed"), lit(false)).as("is_seed"))
-      .pinInvariant()
+      .select(col("id"), coalesce(col("is_seed"), lit(false)).as("is_seed")))
     val nS = base0.filter(col("is_seed")).count()
     require(nS > 0,
       "personalized PageRank needs ≥1 seed that appears as an edge source")

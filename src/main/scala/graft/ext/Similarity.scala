@@ -450,8 +450,9 @@ object Similarity {
     * factor-2 sf0.001 embeddings, 50 queries), against 0.99 for BRP on
     * the same fixture; the √n cell count is what collapses (see
     * [[brpRouteMaxN]]). The ≥ 0.95 recall contract holds from 10×
-    * sf0.1 up. Below [[brpRouteMaxN]] rows, call [[annTopKRouted]],
-    * which sends small corpora to BRP. */
+    * sf0.1 up (20 000 vectors), where `ScaleStressSpec` gates it. Below
+    * [[brpRouteMaxN]] rows, call [[annTopKRouted]], which sends small
+    * corpora to BRP. */
   def ivfTopK(
       emb: DataFrame,
       queries: DataFrame,

@@ -32,62 +32,31 @@ object GraphQ {
     * the unrolled oracle). */
   private val WalkSteps = 6
 
-  /** Lineitem rows above which the pagerank rows' trade-graph prologue
-    * hints its orders⋈lineitem join SHUFFLE_HASH. The hint is what lets
-    * the prologue survive factor 1000 — sort-merge-join must SORT
-    * ~600M lineitem rows per side there, and that sort spill (not the
-    * distinct) exceeded the box's disk.
-    *
-    * r20 measured the VERDICT r19 premise that the hint costs ~+40% at
-    * fixture scale, and it DOES NOT REPRODUCE under a controlled
-    * single-variable A/B: identical r20 code, only this gate flipped
-    * via the conf override, interleaved fresh JVMs, TimeOne best-of-4 —
-    * hint-ON 4.69/4.87 s vs hint-OFF (AQE picks broadcast, confirmed in
-    * the executed plan) 5.49/6.69 s on ext_pagerank, and the same
-    * ordering on ext_pagerank_personalized (5.07/5.94 vs 6.45/6.50).
-    * The r19 verdict's A/B compared the r18 JAR against r19 HEAD —
-    * bundling the hint with the pruned projections and the
-    * explode-edge-emission rewrite — so its attribution to the hint
-    * was confounded. Default therefore stays at the r19 behavior
-    * (hint at every scale: 0 = always); the data-driven gate machinery
-    * remains for clusters where broadcast does win the small regime —
-    * set `graft.graph.shuffleHashMinRows` (or the `spark.`-prefixed
-    * twin at submit time) to restore a broadcast window below that
-    * row count. */
-  private val ShuffleHashMinRows = 0L
-
   /** The pagerank rows' shared prologue: distinct customer-supplier
     * trade pairs from orders⋈lineitem, both sides projected to their
     * two key columns BEFORE the join (the shuffle then moves 16-byte
-    * rows, nothing else), with the orders build side hinted
-    * SHUFFLE_HASH above [[ShuffleHashMinRows]] — a shuffled hash join
-    * builds a per-partition map of the smaller orders side and streams
-    * lineitem unsorted; below the gate AQE keeps its broadcast choice.
+    * rows, nothing else). The orders build side is hinted
+    * SHUFFLE_HASH at every scale: a shuffled hash join builds a
+    * per-partition map of the smaller orders side and streams lineitem
+    * unsorted. At factor 1000 a sort-merge join must sort ~600M
+    * lineitem rows per side, and that spill exceeded the box's disk.
+    * At fixture scale the hint is faster too: an r20 A/B on identical
+    * code (interleaved fresh JVMs, TimeOne best-of-4) measured hint-on
+    * 4.69/4.87 s against hint-off (AQE's broadcast) 5.49/6.69 s on
+    * ext_pagerank, and 5.07/5.94 against 6.45/6.50 s on
+    * ext_pagerank_personalized.
+    *
     * Returns the pairs frame plus the lineitem count, which callers
     * reuse as the edge-row upper bound for
     * [[graft.ext.Graph.pageRank]]'s `edgeRowsHint` (edges = 2×distinct
     * pairs ≤ 2×lineitem — deciding the co-partition layout up front
-    * keeps the billion-row edge cache single-copy; ADVICE r19). */
-  private def pagerankPairs(s: org.apache.spark.sql.SparkSession,
+    * keeps the billion-row edge cache single-copy). The count is read
+    * from the parquet footers on the driver: exact, and no Spark job. */
+  private[graft] def pagerankPairs(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame, Long) = {
-    // r21 (VERDICT r20 item 3): the lineitem row count feeding the
-    // SHUFFLE_HASH gate and the edgeRowsHint is now read from the
-    // parquet FOOTERS on the driver — exact, milliseconds, and no
-    // Spark job at all. This retires the r20 `liCountMemo` (a
-    // ConcurrentHashMap that survived Bench's cache clearing and made
-    // rep 1 and rep 2 of the pagerank rows do different work); with no
-    // job there is nothing left to memoize and every rep is identical.
     val nLi: Long = Tables.parquetRowCount(s, d, "lineitem")
-    // gate override (`graft.graph.shuffleHashMinRows`, either key form)
-    // so the hint-on/hint-off arms are A/B-able on identical code
-    val gate = s.conf.getOption("graft.graph.shuffleHashMinRows")
-      .orElse(s.conf.getOption("spark.graft.shuffleHashMinRows"))
-      .flatMap(_.toLongOption).getOrElse(ShuffleHashMinRows)
-    val ordersSide =
-      Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-    val build = if (nLi >= gate) ordersSide.hint("shuffle_hash")
-                else ordersSide
-    val pairs = build
+    val pairs = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
+      .hint("shuffle_hash")
       .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
         col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
@@ -241,8 +210,7 @@ object GraphQ {
         |       GROUP BY e.dst)
         |SELECT id AS node_id, r AS pr FROM i3 ORDER BY node_id""".stripMargin) { (s, d) =>
       // Prologue restructured for factor-1000 survival (r19, VERDICT
-      // r18 item 3), with the SHUFFLE_HASH hint size-gated in r20 —
-      // see [[pagerankPairs]] for both halves of the story.
+      // r18 item 3) — see [[pagerankPairs]] for the SHUFFLE_HASH hint.
       val (pairs, nLi) = pagerankPairs(s, d)
       // both directions via ONE explode pass (r19): the union-of-two-
       // selects form referenced the un-materialized `pairs` twice, so
@@ -323,7 +291,7 @@ object GraphQ {
       // the checkpoint the orders⋈lineitem distinct ran twice (the
       // library checkpoints edges and seeds separately; this is the
       // caller-side share, ~1 s of the old 1.7×-over-plain-PR gap).
-      // Same prologue as ext_pagerank — pruned projections, size-gated
+      // Same prologue as ext_pagerank — pruned projections,
       // SHUFFLE_HASH (see [[pagerankPairs]]).
       val (pairs0, nLi) = pagerankPairs(s, d)
       val pairs = pairs0.cutLineage()

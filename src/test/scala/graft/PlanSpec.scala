@@ -654,6 +654,19 @@ class PlanSpec extends SparkSpec {
       s"the uncorrelated average should remain a one-shot scalar subquery:\n${p.take(1500)}")
   }
 
+  test("ext_pagerank prologue: orders⋈lineitem runs as a shuffled hash join") {
+    spark.catalog.clearCache()
+    val pairs = graft.queries.GraphQ.pagerankPairs(spark, sf())._1
+    pairs.collect()
+    // the final adaptive plan: at fixture scale AQE would broadcast
+    // orders, so this pins that the hint holds at every scale
+    val p = pairs.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(p.contains("isFinalPlan=true"), p.take(1500))
+    assert(p.contains("ShuffledHashJoin"), s"prologue join is not shuffle-hash:\n${p.take(1500)}")
+    assert(!p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"),
+      s"prologue join left the shuffle-hash path:\n${p.take(1500)}")
+  }
+
   test("salted skew join: exchange keyed on (uid, salt), shuffle-hash, no broadcast") {
     val p = plan("join_skew_salted")
     assert(p.contains("ShuffledHashJoin"),

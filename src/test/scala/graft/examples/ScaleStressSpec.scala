@@ -1,8 +1,10 @@
 package graft.examples
 
 import graft.SparkSpec
-import graft.ext.{Graph, Similarity}
+import graft.ext.{Caches, Embeddings, Graph, Similarity}
 import graft.queries.SetSimQ
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -98,8 +100,8 @@ class ScaleStressSpec extends SparkSpec {
 
   test("auto-knob BRP keeps recall@10 >= 0.95 against brute force") {
     // The auto-IVF (>= 0.95) and IVF-PQ (>= 0.9) recall gates hold from
-    // 10x sf0.1 up and stay in ScaleStress: on these 1000 vectors
-    // auto-IVF measures 0.70 and IVF-PQ 0.84.
+    // 10x sf0.1 up, so their test below builds that fixture: on these
+    // 1000 vectors auto-IVF measures 0.70 and IVF-PQ 0.84.
     val emb = spark.read.parquet(s"$out/embeddings.parquet")
     val all = emb.select("vec_id", "embedding").collect()
       .map { r =>
@@ -162,5 +164,41 @@ class ScaleStressSpec extends SparkSpec {
     graft.ext.Caches.releaseAll(spark)
     assert(c16.values.exists(_ > 1), "the kNN graph has a non-trivial core")
     assert(c8 == c16, "k-core peel not converged by 8 rounds")
+  }
+
+  test("auto-IVF keeps recall@10 >= 0.95 and IVF-PQ >= 0.9 on 10x sf0.1") {
+    val dir = java.nio.file.Files.createTempDirectory("sfx10-test").toFile
+    try {
+      ScaleStress.buildFixture(spark, sf("sf0.1"), dir.toString, 10)
+      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+      val all = emb.select("vec_id", "embedding").collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
+      // exact top-10 of the first 50 ids by `score`, higher is closer
+      def exactTop10(score: (Array[Double], Array[Double]) => Double) =
+        all.sortBy(_._1).take(50).flatMap { case (q, qv) =>
+          all.filter(_._1 != q).map { case (id, v) => (id, score(qv, v)) }
+            .sortBy(p => (-p._2, p._1)).take(10).map(p => (q, p._1))
+        }.toSet
+      def dot(a: Array[Double], b: Array[Double]) =
+        a.indices.map(i => a(i) * b(i)).sum
+      val cosine = (a: Array[Double], b: Array[Double]) =>
+        dot(a, b) / math.sqrt(dot(a, a) * dot(b, b))
+      val negL2 = (a: Array[Double], b: Array[Double]) =>
+        -a.indices.map(i => (a(i) - b(i)) * (a(i) - b(i))).sum
+      val qids = emb.select("vec_id").orderBy("vec_id").limit(50)
+      def recall(got: DataFrame, truth: Set[(Long, Long)]): Double = {
+        val p = got.select("qid", "cid").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+        spark.catalog.clearCache(); Caches.releaseAll(spark)
+        (p & truth).size.toDouble / truth.size
+      }
+      val ivf = recall(Similarity.ivfTopK(emb, queries = qids, k = 10),
+        exactTop10(cosine))
+      val pq = recall(Embeddings.ivfPqTopK(emb, qids, k = 10),
+        exactTop10(negL2))
+      info(f"${all.length} vectors: auto-IVF recall@10 $ivf%.3f, IVF-PQ $pq%.3f")
+      assert(ivf >= 0.95, f"auto-IVF recall@10 $ivf%.3f < 0.95")
+      assert(pq >= 0.9, f"IVF-PQ auto-refine recall@10 $pq%.3f < 0.9")
+    } finally JavaUtils.deleteRecursively(dir)
   }
 }
